@@ -37,7 +37,10 @@ object Pipeline {
 
   /** Core + RDF structural measures over an edge table, long format
     * (measure, value). `features` gates which measure groups are computed
-    * (lodcc's --features flag analog); unknown names are ignored.
+    * (lodcc's --features flag analog); unknown names are ignored. The
+    * measures are computed when this is called; the result is a local table
+    * (one row per scalar measure, plus one per distinct degree value for
+    * `plots`).
     *
     * Feature names follow lodcc: basic (aliases: fill, parallel_edges),
     * degree, plots (degree/in/out distribution tables as
@@ -62,80 +65,76 @@ object Pipeline {
     */
   def measures(edges: DataFrame, features: Set[String],
                cc: Option[DataFrame] = None): DataFrame = {
-    val degrees = Degrees.degrees(edges).cache()
-    val degHist = Degrees.histogram(degrees, "deg")
-    val inHist = Degrees.histogram(degrees, "in_deg")
-    val outHist = Degrees.histogram(degrees, "out_deg")
-
-    def longf(df: DataFrame): DataFrame = {
-      val cols = df.columns
-      df.select(explode(map(
-        cols.flatMap(c => Seq(lit(c), col(c).cast("double"))): _*)).as(Seq("measure", "value")))
-    }
-
     // lodcc flag aliases: fill + parallel_edges come from the basic pass
     val want = features.map {
       case "fill" | "parallel_edges" => "basic"
       case f => f
     }
+    // every degree-based measure is driver arithmetic on these two small
+    // results (one Spark job each): the three degree histograms and the
+    // edge-pair counts
+    lazy val hists = Degrees.histograms(Degrees.degrees(edges))
+    lazy val pairs = CoreMeasures.pairCounts(edges)
+    // a DataFrame-valued feature, collected as long rows
+    def rowsOf(df: DataFrame): Seq[(String, Option[Double])] =
+      df.select(explode(map(df.columns.toSeq.flatMap(c => Seq(lit(c), col(c).cast("double"))): _*)))
+        .collect().map(r => r.getString(0) -> Option.unless(r.isNullAt(1))(r.getDouble(1))).toSeq
 
-    val parts: Seq[(String, () => DataFrame)] = Seq(
-      "basic" -> (() => CoreMeasures.basic(edges)),
-      "degree" -> (() => CoreMeasures.degreeStats(degrees)),
-      "reciprocity" -> (() => CoreMeasures.reciprocity(edges)),
-      "centralization" -> (() => CoreMeasures.centralizationDegree(edges)),
-      "gini" -> (() =>
-        DistributionMeasures.gini(degHist).withColumnRenamed("gini", "gini_coefficient")
-          .crossJoin(DistributionMeasures.gini(inHist)
-            .withColumnRenamed("gini", "gini_coefficient_in_degree"))
-          .crossJoin(DistributionMeasures.gini(outHist)
-            .withColumnRenamed("gini", "gini_coefficient_out_degree"))),
-      "h_index" -> (() =>
-        DistributionMeasures.hIndex(degHist).withColumnRenamed("h_index", "h_index_u")
-          .crossJoin(DistributionMeasures.hIndex(inHist)
-            .withColumnRenamed("h_index", "h_index_d"))),
-      "powerlaw" -> (() =>
-        DistributionMeasures.powerlawFit(degHist)
-          .select(col("alpha").as("powerlaw_exponent_degree"),
-            col("xmin").as("powerlaw_exponent_degree_dmin"))
-          .crossJoin(DistributionMeasures.powerlawFit(inHist)
-            .select(col("alpha").as("powerlaw_exponent_in_degree"),
-              col("xmin").as("powerlaw_exponent_in_degree_dmin")))),
+    val parts: Seq[(String, () => Seq[(String, Option[Double])])] = Seq(
+      "basic" -> (() => CoreMeasures.basic(hists("deg").map(_._2).sum, pairs).longRows),
+      "degree" -> (() => CoreMeasures.degreeStats(hists).longRows),
+      "reciprocity" -> (() => Seq("reciprocity" -> CoreMeasures.reciprocity(pairs))),
+      "centralization" -> (() => rowsOf(CoreMeasures.centralizationDegree(edges))),
+      "gini" -> (() => Seq(
+        "gini_coefficient" -> DistributionMeasures.gini(hists("deg")),
+        "gini_coefficient_in_degree" -> DistributionMeasures.gini(hists("in_deg")),
+        "gini_coefficient_out_degree" -> DistributionMeasures.gini(hists("out_deg")))),
+      "h_index" -> (() => Seq(
+        "h_index_u" -> Some(DistributionMeasures.hIndex(hists("deg")).toDouble),
+        "h_index_d" -> Some(DistributionMeasures.hIndex(hists("in_deg")).toDouble))),
+      // each fit's rows are present only when that fit has a candidate
+      "powerlaw" -> (() => Seq("degree" -> "deg", "in_degree" -> "in_deg").flatMap {
+        case (kind, k) =>
+          DistributionMeasures.powerlawFit(hists(k), DistributionMeasures.MaxCandidates).toSeq
+            .flatMap { case (alpha, xmin) =>
+              Seq(s"powerlaw_exponent_$kind" -> Some(alpha), s"powerlaw_exponent_${kind}_dmin" -> Some(xmin))
+            }
+      }),
       "diameter" -> (() =>
-        CoreMeasures.pseudoDiameter(edges, cc).select(col("pseudo_diameter"))),
+        rowsOf(CoreMeasures.pseudoDiameter(edges, cc).select(col("pseudo_diameter")))),
       "pagerank" -> (() =>
-        graft.algo.PageRank.run(edges).agg(max(col("rank")).as("max_pagerank"))),
+        rowsOf(graft.algo.PageRank.run(edges).agg(max(col("rank")).as("max_pagerank")))),
       "eigenvector" -> (() =>
-        graft.algo.Eigenvector.run(edges).agg(max(col("ev")).as("max_eigenvector"))),
-      "clustering" -> (() => graft.algo.Triangles.clustering(edges)),
-      "kcore" -> (() =>
+        rowsOf(graft.algo.Eigenvector.run(edges).agg(max(col("ev")).as("max_eigenvector")))),
+      "clustering" -> (() => rowsOf(graft.algo.Triangles.clustering(edges))),
+      "kcore" -> (() => rowsOf(
         graft.algo.KCore.summary(edges, k = 10)
           .select(col("core_vertices").as("kcore10_vertices"),
             col("core_edges").as("kcore10_edges"),
-            col("max_core_deg").as("kcore10_max_degree"))),
-      "ktruss" -> (() =>
+            col("max_core_deg").as("kcore10_max_degree")))),
+      "ktruss" -> (() => rowsOf(
         graft.algo.KTruss.summary(edges, k = 4)
           .select(col("truss_edges").as("ktruss4_edges"),
             col("truss_vertices").as("ktruss4_vertices"),
-            col("max_support").as("ktruss4_max_support"))),
-      "lpa" -> (() =>
+            col("max_support").as("ktruss4_max_support")))),
+      "lpa" -> (() => rowsOf(
         graft.algo.LabelPropagation.runFixed(edges, iters = 5)
-          .agg(count_distinct(col("community")).as("lpa_communities"))),
-      "hits" -> (() =>
+          .agg(count_distinct(col("community")).as("lpa_communities")))),
+      "hits" -> (() => rowsOf(
         graft.algo.Hits.runFixed(edges, iters = 8)
           .agg(max(col("auth")).as("max_hits_authority"),
-            max(col("hub")).as("max_hits_hub"))),
+            max(col("hub")).as("max_hits_hub")))),
       "ppr" -> (() => {
         // deterministic seed: the max-out-degree vertex (ties to the
         // greatest vertex), the same convention as pseudo-diameter's source
         val seed = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
           .agg(max_by(col("src"), struct(col("od"), col("src"))))
           .head().getString(0)
-        graft.algo.PageRank.runPersonalizedFixed(edges, Seq(seed), iters = 10)
-          .agg(max(col("rank")).as("max_personalized_pagerank"))
+        rowsOf(graft.algo.PageRank.runPersonalizedFixed(edges, Seq(seed), iters = 10)
+          .agg(max(col("rank")).as("max_personalized_pagerank")))
       }),
-      "assortativity" -> (() => CoreMeasures.assortativity(edges)),
-      "rdf" -> (() => Seq(
+      "assortativity" -> (() => rowsOf(CoreMeasures.assortativity(edges))),
+      "rdf" -> (() => rowsOf(Seq(
         RdfMeasures.outDegree(edges), RdfMeasures.partialOutDegree(edges),
         RdfMeasures.labelledOutDegree(edges), RdfMeasures.directOutDegree(edges),
         RdfMeasures.inDegree(edges), RdfMeasures.partialInDegree(edges),
@@ -144,29 +143,20 @@ object Pipeline {
         RdfMeasures.predicateOutDegree(edges), RdfMeasures.subjectObjectRatio(edges),
         RdfMeasures.predicateLists(edges),
         RdfMeasures.typedMeasures(edges, graft.functions.XxHash64Hex.hexOf("rdf:type")))
-        .reduce(_ crossJoin _)))
-
-    val scalarRows =
-      parts.collect { case (name, f) if want.contains(name) => longf(f()) }
-    // lodcc's `plots` feature: the degree distribution tables, one long row
-    // per distinct degree value (at most |distinct degrees| rows — cheap)
-    val plotRows =
-      if (want.contains("plots"))
-        Seq(("degree", degHist), ("in_degree", inHist), ("out_degree", outHist))
-          .map { case (kind, h) =>
-            h.select(
-              concat(lit(s"${kind}_distribution_"),
-                col("x").cast("long").cast("string")).as("measure"),
-              col("cnt").cast("double").as("value"))
-          }
-      else Seq.empty
+        .reduce(_ crossJoin _))),
+      // lodcc's `plots` feature: the degree distribution tables, one long row
+      // per distinct degree value
+      "plots" -> (() =>
+        Seq("degree" -> "deg", "in_degree" -> "in_deg", "out_degree" -> "out_deg").flatMap {
+          case (kind, k) =>
+            hists(k).map { case (x, cnt) => s"${kind}_distribution_${x.toLong}" -> Some(cnt.toDouble) }
+        }))
 
     val spark = edges.sparkSession
     import spark.implicits._
-    (scalarRows ++ plotRows)
-      .reduceOption(_ union _)
-      .getOrElse(Seq.empty[(String, Double)].toDF("measure", "value"))
-      .dropDuplicates("measure")
+    parts.collect { case (name, f) if want.contains(name) => f() }.flatten
+      .distinctBy(_._1)
+      .toDF("measure", "value")
   }
 
   /** Default feature set (lodcc default-features analog). */
@@ -174,14 +164,13 @@ object Pipeline {
 
   /** Many datasets at once — the reference's headline operating mode
     * (`README.md:6` "many datasets at once"; dataset-level process pool at
-    * `core_measures.py:126` Semaphore(min(threads, 20))). Spark-native
-    * analog: every dataset's RELATIONAL measure plan goes into one union
-    * job, so the scheduler interleaves their stages across the cluster
-    * instead of pinning one dataset per process, and a straggler dataset
-    * no longer holds a pool slot. (The iterative measures — diameter,
-    * pagerank, eigenvector — still drive their own per-dataset jobs, like
-    * the reference's per-dataset processes.) Output: (dataset, measure,
-    * value).
+    * `core_measures.py:126` Semaphore(min(threads, 20))). The datasets run
+    * one after another, each as its own short series of Spark jobs
+    * ([[measures]]: two aggregates for every degree-based measure, plus the
+    * iterative kernels — diameter, pagerank, eigenvector — of the features
+    * asked for); every job still spreads its tasks over the whole cluster.
+    * The result is the union of the per-dataset local tables. Output:
+    * (dataset, measure, value).
     */
   def measuresMany(datasets: Seq[(String, DataFrame)],
                    features: Set[String] = DefaultFeatures): DataFrame =

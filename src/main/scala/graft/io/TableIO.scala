@@ -1,8 +1,9 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Snapshot-committed table storage with per-partition lineage — Iceberg-
   * shaped semantics (snapshot ids, atomic manifest swap, resume from last
@@ -67,39 +68,39 @@ class TableIO(spark: SparkSession, root: String) {
     spark.read.parquet(s"$root/$table/snap-${snap.id}/lineage")
   }
 
-  /** Write df as the next snapshot of `table` with per-partition lineage
-    * rows (stage, partition id, input snapshot, row count, wall ms), then
-    * atomically swap the manifest. Returns the committed snapshot.
+  /** Write df as the next snapshot of `table` with per-file lineage rows
+    * (stage, partition id, input snapshot, row count, wall ms), then
+    * atomically swap the manifest. Returns the committed snapshot. `df` is
+    * by name: the snapshot's wall time includes the work done while it is
+    * built (checkpoints, counts, collected measures), not just the write.
     */
-  def commit(table: String, df: DataFrame, stage: String,
+  def commit(table: String, df: => DataFrame, stage: String,
              inputSnapshot: String): Snapshot = {
     val t0 = System.nanoTime()
+    val data = df
     val id = latest(table).map(_.id + 1).getOrElse(0L)
     val dataDir = s"$root/$table/snap-$id/data"
-    df.write.mode("overwrite").parquet(dataDir)
-
-    // per-output-partition lineage from the written files. partition_id is
-    // decoded from the writer's own part number in the file name — a pure
-    // map (the earlier global row_number window funneled every file row
-    // through one task; harmless at thousands of files, an anti-pattern at
-    // millions). Gaps are legitimate: Spark skips writing empty partitions.
-    val written = spark.read.parquet(dataDir)
+    data.write.mode("overwrite").parquet(dataDir)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val lineage = written
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("row_count"))
-      .select(
-        lit(stage).as("stage"),
-        regexp_extract(col("file"), "part-(\\d+)", 1).cast("int").as("partition_id"),
-        lit(inputSnapshot).as("input_snapshot"),
-        col("row_count"),
-        lit(wallMs).as("wall_ms"))
-      .cache()
-    lineage.write.mode("overwrite").parquet(s"$root/$table/snap-$id/lineage")
-    // table row count from the (tiny, cached) lineage — avoids a second
-    // full scan of the data we just wrote
-    val rowCount = lineage.agg(coalesce(sum("row_count"), lit(0L))).head().getLong(0)
-    lineage.unpersist(false)
+
+    // one lineage row per written part file, its row count read from the
+    // file's Parquet footer on the driver (no Spark job, no rescan).
+    // partition_id is the writer's own part number from the file name; gaps
+    // are legitimate (Spark writes no file for an empty partition), and a
+    // zero-row file (the one an empty result still writes) gets no row.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = fs.listStatus(new Path(dataDir))
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    val perFile = files.toSeq.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val rows = try reader.getRecordCount finally reader.close()
+      ("part-(\\d+)".r.findFirstMatchIn(f.getPath.getName).map(_.group(1).toInt), rows)
+    }.filter(_._2 > 0)
+    import spark.implicits._
+    perFile.map { case (part, rows) => (stage, part, inputSnapshot, rows, wallMs) }
+      .toDF("stage", "partition_id", "input_snapshot", "row_count", "wall_ms")
+      .write.mode("overwrite").parquet(s"$root/$table/snap-$id/lineage")
+    val rowCount = perFile.map(_._2).sum
 
     val json =
       s"""{"table": "$table", "id": $id, "stage": "$stage", "input_snapshot": "$inputSnapshot",

@@ -3,63 +3,108 @@ package graft.measures
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** lodcc core topology measures (SURVEY.md §2.4 A1-A14) as lazy single-row
-  * DataFrames over the hashed edge table (src, dst, label). Heavy inputs
-  * (the degrees DF) are computed once and passed in, mirroring lodcc's
-  * "compute once" degree vector (`degree_based.py:26`).
+/** A row of named scalar measures: each field name is a measure name. */
+trait MeasureRow extends Product {
+  /** Long-format (measure, value) pairs in field order; None is SQL NULL. */
+  def longRows: Seq[(String, Option[Double])] =
+    productElementNames.zip(productIterator).map {
+      case (k, v: Long)         => k -> Some(v.toDouble)
+      case (k, v: Double)       => k -> Some(v)
+      case (k, Some(v: Long))   => k -> Some(v.toDouble)
+      case (k, Some(v: Double)) => k -> Some(v)
+      case (k, None)            => k -> None
+    }.toSeq
+}
+
+/** A1-A5 (`core/basic_measures.py:8-51`). */
+case class Basic(n: Long, m: Long, mean_degree: Option[Double], fill_overall: Option[Double],
+                 parallel_edges: Long, m_unique: Long, fill: Option[Double]) extends MeasureRow
+
+/** A6-A8 (`degree_based.py:30-88`). */
+case class DegreeStats(
+    max_degree: Option[Long], max_in_degree: Option[Long], max_out_degree: Option[Long],
+    mean_degree_centrality: Option[Double], mean_in_degree_centrality: Option[Double],
+    mean_out_degree_centrality: Option[Double], max_degree_centrality: Option[Double],
+    max_in_degree_centrality: Option[Double], max_out_degree_centrality: Option[Double],
+    stddev_in_degree: Option[Double], coefficient_variation_in_degree: Option[Double],
+    stddev_out_degree: Option[Double], coefficient_variation_out_degree: Option[Double],
+    var_in_degree: Option[Double], var_out_degree: Option[Double]) extends MeasureRow
+
+/** Edge-pair counts: edges `m`, distinct directed pairs `mUnique`, and
+  * `reciprocal` edges (s,t) for which some edge (t,s) exists — self-loops
+  * included, parallel edges each counted. */
+case class PairCounts(m: Long, mUnique: Long, reciprocal: Long)
+
+/** lodcc core topology measures (SURVEY.md §2.4 A1-A14) over the hashed
+  * edge table (src, dst, label), whose endpoints are non-null. The
+  * degree-based ones are computed on the driver from the degree histograms
+  * ([[Degrees.histograms]]) and [[pairCounts]], mirroring lodcc's "compute
+  * once" degree vector (`degree_based.py:26`); their DataFrame overloads are
+  * the query entry points and return one row.
   */
 object CoreMeasures {
 
+  /** Spark's try_divide: None on a zero divisor. */
+  private def div(a: Double, b: Double): Option[Double] = if (b == 0) None else Some(a / b)
+
+  /** m, m_unique and the reciprocal-edge count from one aggregate: group by
+    * the directed pair, then by the unordered pair. An unordered pair's
+    * edges are all reciprocal when both directions occur, or when it is a
+    * self-loop. */
+  def pairCounts(edges: DataFrame): PairCounts = {
+    val r = edges.groupBy("src", "dst").agg(count(lit(1)).as("c"))
+      .groupBy(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .agg(count(lit(1)).as("dirs"), sum("c").as("c"))
+      .agg(
+        coalesce(sum("c"), lit(0L)),
+        coalesce(sum("dirs"), lit(0L)),
+        coalesce(sum(when(col("dirs") === 2 || col("a") === col("b"), col("c"))), lit(0L)))
+      .head()
+    PairCounts(r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** A1-A5: n, m, mean_degree, fill_overall, parallel_edges, m_unique, fill
-    * (`core/basic_measures.py:8-51`). One pass over edges + one over the
-    * distinct vertex set.
-    */
+    * (`core/basic_measures.py:8-51`) from the vertex count `n`. */
+  def basic(n: Long, p: PairCounts): Basic =
+    Basic(n, p.m, div(2.0 * p.m, n.toDouble), div(p.m.toDouble, (n * n).toDouble),
+      p.m - p.mUnique, p.mUnique, div(p.mUnique.toDouble, (n * n).toDouble))
+
+  /** [[basic]] of an edge table as one row. */
   def basic(edges: DataFrame): DataFrame = {
-    val nDF = edges.select(col("src").as("v"))
-      .union(edges.select(col("dst").as("v")))
-      .agg(count_distinct(col("v")).as("n"))
-    val mDF = edges.agg(
-      count(lit(1)).as("m"),
-      count_distinct(col("src"), col("dst")).as("m_unique"))
-    nDF.crossJoin(mDF).select(
-      col("n"), col("m"),
-      try_divide(lit(2.0) * col("m"), col("n")).as("mean_degree"),
-      try_divide(col("m").cast("double"), col("n") * col("n")).as("fill_overall"),
-      (col("m") - col("m_unique")).as("parallel_edges"),
-      col("m_unique"),
-      try_divide(col("m_unique").cast("double"), col("n") * col("n")).as("fill"))
+    import edges.sparkSession.implicits._
+    Seq(basic(Degrees.degrees(edges).count(), pairCounts(edges))).toDF()
   }
 
   /** A6-A8: max degrees + degree centralities + stddev/var/CV
-    * (`degree_based.py:30-88`). NumPy `.std()`/`.var()` are population
-    * variants -> stddev_pop / var_pop. Centrality scale s = 1/(n-1).
+    * (`degree_based.py:30-88`) from [[Degrees.histograms]]. NumPy
+    * `.std()`/`.var()` are population variants. Centrality scale
+    * s = 1/(n-1).
     */
-  def degreeStats(degrees: DataFrame): DataFrame =
-    degrees.agg(
-      count(lit(1)).as("n"),
-      max("deg").as("max_degree"),
-      max("in_deg").as("max_in_degree"),
-      max("out_deg").as("max_out_degree"),
-      sum("deg").as("sum_degrees"),
-      sum("in_deg").as("sum_in_degrees"),
-      sum("out_deg").as("sum_out_degrees"),
-      stddev_pop(col("in_deg")).as("stddev_in_degree"),
-      stddev_pop(col("out_deg")).as("stddev_out_degree"),
-      var_pop(col("in_deg")).as("var_in_degree"),
-      var_pop(col("out_deg")).as("var_out_degree"))
-      .select(
-        col("max_degree"), col("max_in_degree"), col("max_out_degree"),
-        try_divide(try_divide(col("sum_degrees"), col("n") - 1), col("n")).as("mean_degree_centrality"),
-        try_divide(try_divide(col("sum_in_degrees"), col("n") - 1), col("n")).as("mean_in_degree_centrality"),
-        try_divide(try_divide(col("sum_out_degrees"), col("n") - 1), col("n")).as("mean_out_degree_centrality"),
-        try_divide(col("max_degree"), col("n") - lit(1.0)).as("max_degree_centrality"),
-        try_divide(col("max_in_degree"), col("n") - lit(1.0)).as("max_in_degree_centrality"),
-        try_divide(col("max_out_degree"), col("n") - lit(1.0)).as("max_out_degree_centrality"),
-        col("stddev_in_degree"),
-        (try_divide(col("stddev_in_degree"), try_divide(col("sum_in_degrees"), col("n"))) * 100).as("coefficient_variation_in_degree"),
-        col("stddev_out_degree"),
-        (try_divide(col("stddev_out_degree"), try_divide(col("sum_out_degrees"), col("n"))) * 100).as("coefficient_variation_out_degree"),
-        col("var_in_degree"), col("var_out_degree"))
+  def degreeStats(hists: Map[String, Seq[(Double, Long)]]): DegreeStats = {
+    val n = hists("deg").map(_._2).sum.toDouble
+    def top(k: String) = hists(k).lastOption.map(_._1.toLong)
+    def total(k: String) = hists(k).map { case (x, c) => x.toLong * c }.sum.toDouble
+    def meanCentrality(k: String) = div(total(k), n - 1).flatMap(div(_, n))
+    def maxCentrality(k: String) = top(k).flatMap(mx => div(mx.toDouble, n - 1.0))
+    def varPop(k: String) = div(total(k), n).map { mean =>
+      hists(k).map { case (x, c) => c.toDouble * (x - mean) * (x - mean) }.sum / n
+    }
+    def cv(k: String) =
+      for (v <- varPop(k); mean <- div(total(k), n); r <- div(math.sqrt(v), mean))
+        yield r * 100
+    DegreeStats(top("deg"), top("in_deg"), top("out_deg"),
+      meanCentrality("deg"), meanCentrality("in_deg"), meanCentrality("out_deg"),
+      maxCentrality("deg"), maxCentrality("in_deg"), maxCentrality("out_deg"),
+      varPop("in_deg").map(math.sqrt), cv("in_deg"),
+      varPop("out_deg").map(math.sqrt), cv("out_deg"),
+      varPop("in_deg"), varPop("out_deg"))
+  }
+
+  /** [[degreeStats]] of a degrees table ([[Degrees.degrees]]) as one row. */
+  def degreeStats(degrees: DataFrame): DataFrame = {
+    import degrees.sparkSession.implicits._
+    Seq(degreeStats(Degrees.histograms(degrees))).toDF()
+  }
 
   /** A6 argmax vertices. lodcc's tie-break is ">= in vertex-index order ->
     * last inserted vertex wins" (`degree_based.py:41-59`); vertex index order
@@ -104,14 +149,13 @@ object CoreMeasures {
   }
 
   /** A14 reciprocity (`edge_based.py:8-13`): fraction of edges (s,t) such
-    * that at least one edge (t,s) exists. Semi-join against the distinct
-    * reversed pair set; parallel edges each count.
-    */
+    * that at least one edge (t,s) exists; parallel edges each count. */
+  def reciprocity(p: PairCounts): Option[Double] = div(p.reciprocal.toDouble, p.m.toDouble)
+
+  /** [[reciprocity]] of an edge table as one row. */
   def reciprocity(edges: DataFrame): DataFrame = {
-    val rev = edges.select(col("dst").as("src"), col("src").as("dst")).distinct()
-    val recip = edges.join(rev, Seq("src", "dst"), "left_semi").agg(count(lit(1)).as("r"))
-    val m = edges.agg(count(lit(1)).as("m"))
-    recip.crossJoin(m).select(try_divide(col("r").cast("double"), col("m")).as("reciprocity"))
+    import edges.sparkSession.implicits._
+    Seq(Tuple1(reciprocity(pairCounts(edges)))).toDF("reciprocity")
   }
 
   /** A15 pseudo_diameter (`edge_based.py:15-32`): BFS double sweep on the

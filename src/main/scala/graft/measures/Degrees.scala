@@ -26,9 +26,24 @@ object Degrees {
 
   /** Histogram of one degree column: (x, cnt). All distribution measures
     * (gini / h-index / powerlaw / plots) run on this — it has at most
-    * |distinct degree values| rows, so downstream windows are cheap at any
+    * |distinct degree values| rows, so it is collected to the driver at any
     * scale (no global sort of the full vertex set, ever).
     */
   def histogram(degrees: DataFrame, column: String): DataFrame =
     degrees.groupBy(col(column).cast("double").as("x")).agg(count(lit(1)).as("cnt"))
+
+  /** The total, in- and out-degree histograms collected in one Spark job,
+    * keyed by degree column ("deg", "in_deg", "out_deg"), each (x, cnt)
+    * ascending by x; empty when the graph is. Bounded like [[histogram]].
+    */
+  def histograms(degrees: DataFrame): Map[String, Seq[(Double, Long)]] = {
+    val kinds = Seq("deg", "in_deg", "out_deg")
+    val rows = degrees
+      .select(explode(array(kinds.map(k =>
+        struct(lit(k).as("kind"), col(k).cast("double").as("x"))): _*)).as("h"))
+      .groupBy(col("h.kind"), col("h.x")).agg(count(lit(1)).as("cnt"))
+      .collect()
+    kinds.map(k => k -> rows.collect { case r if r.getString(0) == k => (r.getDouble(1), r.getLong(2)) }
+      .sortBy(_._1).toSeq).toMap
+  }
 }

@@ -174,31 +174,7 @@ class MatcherSpec extends AnyFunSuite {
   test("powerlaw fit: DataFrame algorithm == in-memory reference implementation") {
     val histData: Seq[(Double, Long)] =
       (1 to 40).map(x => (x.toDouble, math.max(1L, math.round(2e5 * math.pow(x, -2.4)))))
-    // independent in-memory implementation of the same CSN spec
-    def refFit(h: Seq[(Double, Long)]): (Double, Double) = {
-      val pos = h.filter(_._1 > 0).sortBy(_._1)
-      val cands = pos.map(_._1)
-      val scored = cands.flatMap { xmin =>
-        val tail = pos.filter(_._1 >= xmin)
-        val nt = tail.map(_._2).sum
-        val sumlog = tail.map { case (x, c) => c * math.log(x / xmin) }.sum
-        if (sumlog <= 0 || tail.size < 2) None
-        else {
-          val alpha = 1.0 + nt / sumlog
-          var cum = 0L
-          val ks = tail.map { case (x, c) =>
-            cum += c
-            math.abs(cum.toDouble / nt - (1.0 - math.pow(x / xmin, 1.0 - alpha)))
-          }.max
-          Some((xmin, alpha, ks))
-        }
-      }
-      val best = scored.minBy { case (xmin, _, ks) =>
-        (math.round(ks * 1e9), xmin)
-      }
-      (best._2, best._1)
-    }
-    val (refAlpha, refXmin) = refFit(histData)
+    val (refAlpha, refXmin) = MatcherSpec.refFit(histData).get
     val r = DistributionMeasures.powerlawFit(histData.toDF("x", "cnt")).head()
     assert(r.getDouble(1) == refXmin, s"xmin ${r.getDouble(1)} != $refXmin")
     assert(math.abs(r.getDouble(0) - refAlpha) < 1e-9)
@@ -229,5 +205,34 @@ class MatcherSpec extends AnyFunSuite {
     val bestAlpha = 1.0 + 100.0 / (20.0 * math.log(2.0)) // xmin=1 candidate
     assert(r.getDouble(1) == 1.0)
     assert(math.abs(r.getDouble(0) - bestAlpha) < 1e-9)
+  }
+}
+
+object MatcherSpec {
+
+  /** Independent in-memory implementation of the CSN power-law fit spec
+    * over a histogram (x, cnt): (alpha, xmin), or None when no xmin
+    * candidate has a tail of two distinct values. */
+  def refFit(h: Seq[(Double, Long)]): Option[(Double, Double)] = {
+    val pos = h.filter(_._1 > 0).sortBy(_._1)
+    val cands = pos.map(_._1)
+    val scored = cands.flatMap { xmin =>
+      val tail = pos.filter(_._1 >= xmin)
+      val nt = tail.map(_._2).sum
+      val sumlog = tail.map { case (x, c) => c * math.log(x / xmin) }.sum
+      if (sumlog <= 0 || tail.size < 2) None
+      else {
+        val alpha = 1.0 + nt / sumlog
+        var cum = 0L
+        val ks = tail.map { case (x, c) =>
+          cum += c
+          math.abs(cum.toDouble / nt - (1.0 - math.pow(x / xmin, 1.0 - alpha)))
+        }.max
+        Some((xmin, alpha, ks))
+      }
+    }
+    scored.minByOption { case (xmin, _, ks) =>
+      (math.round(ks * 1e9), xmin)
+    }.map(best => (best._2, best._1))
   }
 }

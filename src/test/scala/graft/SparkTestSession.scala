@@ -13,4 +13,17 @@ object SparkTestSession {
     .getOrCreate()
 
   spark.sparkContext.setLogLevel("ERROR")
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
 }

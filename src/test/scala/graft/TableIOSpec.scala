@@ -43,6 +43,45 @@ class TableIOSpec extends AnyFunSuite {
     assert(computeCalls == 2)
   }
 
+  test("resumeOrCompute: wall_ms includes eager work done while building the DataFrame") {
+    val io = new TableIO(spark, freshRoot())
+    io.resumeOrCompute("slow", "s", "in@0") {
+      Thread.sleep(1000) // a checkpoint or count run before the plan is returned
+      Seq((1, "a")).toDF("id", "v")
+    }
+    assert(io.latest("slow").get.wallMs >= 1000)
+    assert(io.readLineage("slow").collect().forall(_.getAs[Long]("wall_ms") >= 1000))
+  }
+
+  test("footer lineage: empty partitions and zero-row files get no lineage row") {
+    import org.apache.spark.sql.functions.{count, input_file_name, lit, regexp_extract}
+    val io = new TableIO(spark, freshRoot())
+    // rows in partitions 0-2 only; partition 0 empty (Spark still writes it
+    // as a 0-row file); no rows at all
+    Seq("sparse" -> spark.range(0, 10, 1, 8).where($"id" < 3),
+      "first_empty" -> spark.range(0, 10, 1, 8).where($"id" > 6),
+      "empty" -> spark.range(0, 10, 1, 8).where($"id" < 0)).foreach { case (t, df) =>
+      val snap = io.commit(t, df.toDF(), "s", "in@0")
+      val lin = io.readLineage(t).collect()
+        .map(r => r.getAs[Int]("partition_id") -> r.getAs[Long]("row_count")).toMap
+      val rows = io.read(t).count()
+      assert(lin.values.sum == snap.rowCount && snap.rowCount == rows, t)
+      // the per-file counts a scan of the written files groups out
+      val scanned = io.read(t).groupBy(input_file_name().as("f")).agg(count(lit(1)).as("c"))
+        .select(regexp_extract($"f", "part-(\\d+)", 1).cast("int"), $"c")
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(lin == scanned, t)
+    }
+    assert(io.latest("empty").get.rowCount == 0 && io.readLineage("empty").count() == 0)
+  }
+
+  test("commit starts at most 2 Spark jobs: the data write and the lineage write") {
+    val io = new TableIO(spark, freshRoot())
+    val df = spark.range(0, 1000, 1, 4).toDF()
+    val jobs = SparkTestSession.jobsDuring(io.commit("jobs", df, "s", "in@0"))
+    assert(jobs <= 2, s"commit started $jobs Spark jobs")
+  }
+
   test("orphan snapshot dir (simulated kill) does not corrupt reads") {
     val root = freshRoot()
     val io = new TableIO(spark, root)
