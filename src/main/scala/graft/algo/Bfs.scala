@@ -42,34 +42,14 @@ object Bfs {
   def distancesOnAdj(adj: DataFrame, source: String): DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
-    var visited = Seq((source, 0L)).toDF("vertex", "dist").localCheckpoint(true)
-    var frontier = visited.select("vertex")
-    var level = 0L
-    var frontierCount = 1L
-    while (frontierCount > 0) {
-      level += 1
-      val next = adj.join(frontier, adj("src") === frontier("vertex"))
-        .select(col("dst").as("vertex")).distinct()
-        .join(visited, Seq("vertex"), "left_anti")
-        .localCheckpoint(false) // lazy: the count below materializes it
-      frontierCount = next.count()
-      if (frontierCount > 0) {
-        // lazy too: a pure union of already-materialized frames, computed
-        // inside whichever job consumes it next (the following level's
-        // anti-join count, or the caller's action) — one job per level
-        visited = visited.union(next.withColumn("dist", lit(level))).localCheckpoint(false)
-        frontier = next
-      }
-    }
-    visited
+    levels(adj, Seq((source, 0L)).toDF("vertex", "dist"), 1L)
   }
 
   /** Directed BFS distances from a SET of sources in ONE fixpoint: the
     * frontier is keyed (seed, vertex), so k seeds cost max-eccentricity
     * rounds total instead of k independent BFS loops — the scale shape for
     * sampled centralities (harmonic/closeness), where k is a constant and
-    * the per-round join fans each frontier row by its out-degree. Same
-    * lazy-checkpoint/one-job-per-level discipline as [[distances]].
+    * the per-round join fans each frontier row by its out-degree.
     * Returns (seed, vertex, dist) with dist = min #hops seed -> vertex.
     */
   def multiSourceDistances(edges: DataFrame, seeds: Seq[String],
@@ -77,17 +57,28 @@ object Bfs {
     val adj = prepareAdj(edges, assumeDistinct)
     val spark = adj.sparkSession
     import spark.implicits._
-    var visited = seeds.map(s => (s, s, 0L)).toDF("seed", "vertex", "dist")
-      .localCheckpoint(true)
-    var frontier = visited.select("seed", "vertex")
+    levels(adj, seeds.map(s => (s, s, 0L)).toDF("seed", "vertex", "dist"), seeds.size.toLong)
+  }
+
+  /** The BFS level loop from `start` ([seed,] vertex, dist = 0) holding
+    * `n0` rows: each level joins the frontier with `adj` and anti-joins the
+    * visited set on the key columns. One action per level: the frontier's
+    * checkpoint is lazy and its count materializes it; the visited union is
+    * lazy too, computed inside whichever job consumes it next (the next
+    * level's count, or the caller's action).
+    */
+  private def levels(adj: DataFrame, start: DataFrame, n0: Long): DataFrame = {
+    val keys = start.columns.toSeq.filter(_ != "dist")
+    var visited = start.localCheckpoint(true)
+    var frontier = visited.select(keys.map(col): _*)
     var level = 0L
-    var frontierCount = seeds.size.toLong
+    var frontierCount = n0
     while (frontierCount > 0) {
       level += 1
       val next = adj.join(frontier, adj("src") === frontier("vertex"))
-        .select(col("seed"), col("dst").as("vertex")).distinct()
-        .join(visited, Seq("seed", "vertex"), "left_anti")
-        .localCheckpoint(false) // lazy: the count below materializes it
+        .select(keys.init.map(col) :+ col("dst").as("vertex"): _*).distinct()
+        .join(visited, keys, "left_anti")
+        .localCheckpoint(false)
       frontierCount = next.count()
       if (frontierCount > 0) {
         visited = visited.union(next.withColumn("dist", lit(level))).localCheckpoint(false)

@@ -115,14 +115,14 @@ object ConnectedComponents {
     // consumption of the result — for a caller whose edge table is an
     // expensive similarity chain (incremental canonicalization) that
     // tripled the query
-    val allVsBase = timed("allVs")(edges
+    val allVsBase = edges
       .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
       .distinct() // one scan, not union-of-two-selects (halves input decode)
-      .localCheckpoint(true))
+      .localCheckpoint(true)
 
     // the count scans the checkpoint blocks, not the caller's plan; |V|
     // also sizes the per-round broadcast decision (BroadcastMaxVertices)
-    val nV = timed("countV")(allVsBase.count())
+    val nV = allVsBase.count()
     // size-derived partition pin (IterUtil discipline): the checkpoint
     // inherits the static shuffle partition count, so on the suite's small
     // graphs every downstream join/fill stage schedules 128 near-empty
@@ -133,8 +133,7 @@ object ConnectedComponents {
     if (nV < encodeMinVertices) return fill(allVs, fixpoint(edges, maxIter, nV))
 
     val vmap = allVs.select(col("vertex"), xxhash64(col("vertex")).as("vh"))
-    val nh = timed("collisionChk")(
-      vmap.agg(count_distinct(col("vh")).as("nh")).head().getLong(0))
+    val nh = vmap.agg(count_distinct(col("vh")).as("nh")).head().getLong(0)
     if (nh != nV)
       return fill(allVs, fixpoint(edges, maxIter, nV)) // hash collision: iterate originals
 
@@ -160,12 +159,6 @@ object ConnectedComponents {
     allVs.join(asSelf, Seq("vertex"), "left_outer")
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
 
-  /** Large-star/small-star fixpoint over vertices that appear in at least
-    * one non-self-loop edge; returns (vertex, component = min reachable id
-    * under the INPUT type's ordering).
-    */
-  // diagnostics only: per-phase walls on stderr when SPARK_GRAFT_CC_TIMING
-  // is set (used by tools.CcLegProbe to attribute leg scaling)
   /** Narrow coalesce of a materialized frame to `ceil(n / 64k)` partitions
     * (never more than it already has). The budget is ROW-count based and
     * deliberately finer than IterUtil's 4M-row default: a star round does
@@ -182,22 +175,17 @@ object ConnectedComponents {
     if (p < cur) df.coalesce(p) else df
   }
 
-  private def timed[T](what: String)(f: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_CC_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cc] $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
+  /** Large-star/small-star fixpoint over vertices that appear in at least
+    * one non-self-loop edge; returns (vertex, component = min reachable id
+    * under the INPUT type's ordering).
+    */
   private def fixpoint(edges: DataFrame, maxIter: Int, nVertices: Long): DataFrame = {
     // working state between rounds is the CANONICAL pair set (a > b),
     // checkpointed at half the rows of the symmetrized view
-    var canon = timed("symmetrize")(canonEdges(edges).localCheckpoint(true))
+    var canon = canonEdges(edges).localCheckpoint(true)
     // round-0 pair count: one cheap job over the checkpointed blocks;
     // later rounds reuse the signature job's count
-    var canonCount = timed("countPairs")(canon.count())
+    var canonCount = canon.count()
     canon = sizeCoalesced(canon, canonCount)
 
     // Broadcast the mins table only when the pair set DWARFS the vertex
@@ -244,16 +232,15 @@ object ConnectedComponents {
       // signature job scans cached blocks and costs ~0.1 s.
       // The round's ONE pair-set exchange is this dedup, on the skew-free
       // canonical key with map-side partial aggregation (see canonEdges).
-      val next = timed(s"star$iter")(
-        ss.dropDuplicates("a", "b").localCheckpoint(true))
+      val next = ss.dropDuplicates("a", "b").localCheckpoint(true)
 
       // overflow-free set signature: count + bitwise XOR of row hashes
       // (rows are distinct, so XOR is a faithful multiset-free signature;
       // the canonical set determines the symmetrized set, so this is the
       // same convergence test as hashing both directions)
-      val sigRow = timed(s"round$iter")(next.agg(
+      val sigRow = next.agg(
         count(lit(1)).as("c"),
-        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h")).head())
+        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h")).head()
       val sig = (sigRow.getLong(0), sigRow.getLong(1))
       converged = sig == prevSig
       prevSig = sig

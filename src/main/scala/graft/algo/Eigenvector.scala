@@ -6,74 +6,26 @@ import org.apache.spark.sql.functions._
 /** Eigenvector centrality by power iteration on A^T (in-edges accumulate),
   * graph-tool semantics (`centrality.py:42-55` calls `eigenvector(D)`):
   * x'(v) = sum_{(u,v) in E} x(u), L2-normalized each step, convergence when
-  * the L1 delta < eps. Parallel edges count with multiplicity.
+  * the L1 delta < eps. Parallel edges count with multiplicity. When no cycle
+  * feeds the iteration the norm reaches 0 and the vector degenerates to 0,
+  * the reference's fixed point. Both variants are a [[PowerIteration]].
   */
 object Eigenvector {
 
-  def run(edges: DataFrame, eps: Double = 1e-6, maxIter: Int = 100): DataFrame = {
-    val links = IterUtil.pin(edges.select("src", "dst"))
-    val (vertices, n) = IterUtil.pinCounted(links
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-    var x = vertices.withColumn("ev", lit(1.0 / math.sqrt(n.toDouble))).localCheckpoint(true)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (delta > eps && iter < maxIter) {
-      // ONE distributed job per iteration: the L2 norm is folded into the
-      // plan (crossJoin of a 1-row agg, like runFixed), prev is carried in
-      // the same frame, and the checkpoint is LAZY — the delta agg below
-      // materializes it and reads the delta in the same job
-      val prev = x.withColumnRenamed("ev", "prev")
-      val raw = links.join(prev, links("src") === col("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("prev")).as("s"))
-      val withAll = prev.join(raw, Seq("vertex"), "left_outer")
-        .select(col("vertex"), coalesce(col("s"), lit(0.0)).as("s"), col("prev"))
-      val normDF = withAll.agg(sqrt(coalesce(sum(col("s") * col("s")), lit(0.0))).as("nrm"))
-      val next = withAll.crossJoin(normDF)
-        .select(col("vertex"),
-          when(col("nrm") === 0.0, col("s")).otherwise(col("s") / col("nrm")).as("ev"),
-          col("prev"), col("nrm"))
-        .localCheckpoint(false)
-      val row = next.agg(
-        coalesce(sum(abs(col("ev") - col("prev"))), lit(0.0)),
-        coalesce(max(col("nrm")), lit(0.0))).head()
-      // norm 0 = no cycle feeds the iteration: eigenvector degenerates to 0,
-      // terminate (same semantics as the reference's fixed point)
-      delta = if (row.getDouble(1) == 0.0) 0.0 else row.getDouble(0)
-      x = next.select("vertex", "ev")
-      iter += 1
-    }
-    x.select("vertex", "ev")
-  }
+  def run(edges: DataFrame, eps: Double = 1e-6, maxIter: Int = 100): DataFrame =
+    iterate(edges, maxIter, Some(eps))
 
   /** Fixed-iteration variant for the driver-checked oracle queries (the
     * DuckDB twin unrolls the identical normalize-each-step recurrence).
     */
-  def runFixed(edges: DataFrame, iters: Int): DataFrame = {
-    val links = IterUtil.pin(edges.select("src", "dst"))
-    val (vertices, n) = IterUtil.pinCounted(links
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-    // lazy per-round checkpoints (plan truncated per round, nothing runs
-    // until the single materializing count) — the fixed loop is ONE job
-    var x = vertices.withColumn("ev", lit(1.0 / math.sqrt(n.toDouble))).localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val raw = links.join(x, links("src") === x("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("ev")).as("s"))
-      val withAll = vertices.join(raw, Seq("vertex"), "left_outer")
-        .select(col("vertex"), coalesce(col("s"), lit(0.0)).as("s"))
-      // norm folded into the plan (crossJoin of a 1-row agg) — never a
-      // separate driver action for the norm
-      val normDF = withAll.agg(sqrt(coalesce(sum(col("s") * col("s")), lit(0.0))).as("nrm"))
-      x = withAll.crossJoin(normDF)
-        .select(col("vertex"),
-          when(col("nrm") === 0.0, col("s")).otherwise(col("s") / col("nrm")).as("ev"))
-        .localCheckpoint(false)
-    }
-    x.count() // materialize the chain BEFORE dropping the link cache
-    x
+  def runFixed(edges: DataFrame, iters: Int): DataFrame = iterate(edges, iters, None)
+
+  private def iterate(edges: DataFrame, maxIter: Int, eps: Option[Double]): DataFrame = {
+    val g = PowerIteration.setup(edges, lit(1.0), wsum = false)
+    val init = g.vertices.withColumn("x", lit(1.0 / math.sqrt(g.n.toDouble)))
+    PowerIteration.iterate(g, init, maxIter, eps) { (b, x) =>
+      PowerIteration.normalize(PowerIteration.step(g.links, b, x, col("x")))
+    }.withColumnRenamed("x", "ev")
   }
 
   /** argmax vertex, lodcc tie-break "later wins" pinned as greatest vertex. */

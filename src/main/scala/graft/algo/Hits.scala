@@ -12,54 +12,24 @@ import org.apache.spark.sql.functions._
   * in-(out-)edges get authority (hub) 0; an all-zero half-step keeps the
   * raw zeros (degenerate graph) instead of dividing by zero.
   *
-  * Loop discipline matches [[Eigenvector.runFixed]]: per half-step one
-  * equi-join + aggregation shuffle, the L2 norm folded into the plan as a
-  * crossJoin of a 1-row agg (never a driver-side collect), lineage
-  * truncated with localCheckpoint — the authority frame is checkpointed
-  * because the hub half-step and the iteration output both read it.
+  * Each half-step is one [[PowerIteration]] step plus its L2 normalisation;
+  * the hub half-step follows the links backwards. The authority frame is
+  * checkpointed because the hub half-step and the iteration output both
+  * read it.
   */
 object Hits {
 
   def runFixed(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    // loop-state frames re-read 2x per iteration: row-format checkpoints
-    // at a size-derived partition count (IterUtil) instead of 128-pinned
-    // columnar persists; the count rides the pin
-    val links = IterUtil.pin(edges.select("src", "dst"))
-    val (vertices, n) = IterUtil.pinCounted(links
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-    val init = lit(1.0 / math.sqrt(n.toDouble))
-    // lazy per-step checkpoints throughout: every half-step's plan is
-    // truncated to a LogicalRDD, but nothing executes until the single
-    // materializing count after the loop — the whole fixed iteration runs
-    // as ONE multi-stage job instead of 2 driver round-trips per iteration
-    var cur = vertices.select(col("vertex"), init.as("auth"), init.as("hub"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val aRaw = links
-        .join(cur.select(col("vertex").as("src"), col("hub")), "src")
-        .groupBy(col("dst").as("vertex")).agg(sum("hub").as("ar"))
-      val aAll = vertices.join(aRaw, Seq("vertex"), "left_outer")
-        .select(col("vertex"), coalesce(col("ar"), lit(0.0)).as("ar"))
-      val aNorm = aAll.agg(sqrt(coalesce(sum(col("ar") * col("ar")), lit(0.0))).as("an"))
-      val auth = aAll.crossJoin(aNorm)
-        .select(col("vertex"),
-          when(col("an") === 0.0, col("ar")).otherwise(col("ar") / col("an")).as("auth"))
-        .localCheckpoint(false) // checkpointed: the hub half-step AND the
-                                // iteration output both read it
-      val hRaw = links
-        .join(auth.select(col("vertex").as("dst"), col("auth").as("a2")), "dst")
-        .groupBy(col("src").as("vertex")).agg(sum("a2").as("hr"))
-      val hAll = vertices.join(hRaw, Seq("vertex"), "left_outer")
-        .select(col("vertex"), coalesce(col("hr"), lit(0.0)).as("hr"))
-      val hNorm = hAll.agg(sqrt(coalesce(sum(col("hr") * col("hr")), lit(0.0))).as("hn"))
-      val hub = hAll.crossJoin(hNorm)
-        .select(col("vertex"),
-          when(col("hn") === 0.0, col("hr")).otherwise(col("hr") / col("hn")).as("hub"))
-      cur = auth.join(hub, "vertex").localCheckpoint(false)
-    }
-    cur.count() // materialize the chain while the pinned inputs are live
-    cur.select("vertex", "auth", "hub")
+    val g = PowerIteration.setup(edges, lit(1.0), wsum = false)
+    val x0 = lit(1.0 / math.sqrt(g.n.toDouble))
+    val init = g.vertices.select(col("vertex"), x0.as("auth"), x0.as("hub"))
+    PowerIteration.iterate(g, init, iters, None) { (b, cur) =>
+      val auth = PowerIteration.normalize(PowerIteration.step(g.links, b,
+        cur.select(col("vertex"), col("hub").as("x")), col("x"))).localCheckpoint(false)
+      val hub = PowerIteration.normalize(PowerIteration.step(g.links, b, auth, col("x"),
+        reverse = true))
+      auth.withColumnRenamed("x", "auth").join(hub.withColumnRenamed("x", "hub"), "vertex")
+    }.select("vertex", "auth", "hub")
   }
 }

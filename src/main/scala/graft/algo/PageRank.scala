@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank with graph-tool's conventions (`centrality.py:81-98` calls
@@ -9,85 +9,21 @@ import org.apache.spark.sql.functions._
   * damping d = 0.85, L1 convergence epsilon = 1e-6, parallel edges counted
   * with multiplicity, dangling vertices contribute nothing.
   *
-  * DataFrame-iterative: one shuffle join per iteration against a cached
-  * (src, dst, out_deg) link table; lineage truncated via localCheckpoint.
+  * Every variant is a [[PowerIteration]] over a pinned (src, dst, w, wsum)
+  * link table: one shuffle join per iteration, lineage truncated per round.
   */
 object PageRank {
 
   def run(edges: DataFrame, damping: Double = 0.85, eps: Double = 1e-6,
-          maxIter: Int = 100): DataFrame = {
-    // loop-state frames re-read every iteration: row-format checkpoints at
-    // a size-derived partition count (see IterUtil) instead of 128-pinned
-    // columnar persists
-    // ONE evaluation of the caller's edge plan: links and vertices both
-    // derive from this checkpoint (the old shape read the upstream plan
-    // four times: twice for the degree join, twice for the vertex union)
-    val sel = edges.select("src", "dst").localCheckpoint(true)
-    val links = IterUtil.pin(sel
-      .join(sel.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
-    val vertices = IterUtil.pin(sel
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-
-    var ranks = vertices.withColumn("rank", lit(1.0 - damping)).localCheckpoint(true)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (delta > eps && iter < maxIter) {
-      val contribs = links
-        .join(ranks.withColumnRenamed("rank", "prev"), links("src") === col("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("prev") / col("out_deg")).as("c"))
-      // fold the convergence check into the rank-update job: carry prev in
-      // the same frame; the checkpoint is LAZY (plan truncated now, RDD
-      // cached when first computed), so the delta agg below is the ONE job
-      // per iteration — it materializes the checkpoint and reads the delta
-      // in the same pass
-      val next = ranks.withColumnRenamed("rank", "prev")
-        .join(contribs, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"),
-          col("prev"))
-        .localCheckpoint(false)
-      delta = next.agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0.0)))
-        .head().getDouble(0)
-      ranks = next.select("vertex", "rank")
-      iter += 1
-    }
-    ranks.select("vertex", "rank")
-  }
+          maxIter: Int = 100): DataFrame =
+    iterate(edges, lit(1.0), lit(1.0 - damping), damping, maxIter, Some(eps))
 
   /** Fixed-iteration variant (deterministic, no convergence action) — used
     * by the driver-checked oracle queries where DuckDB runs the identical
     * unrolled recurrence.
     */
-  def runFixed(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    // ONE evaluation of the caller's edge plan: links and vertices both
-    // derive from this checkpoint (the old shape read the upstream plan
-    // four times: twice for the degree join, twice for the vertex union)
-    val sel = edges.select("src", "dst").localCheckpoint(true)
-    val links = IterUtil.pin(sel
-      .join(sel.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
-    val vertices = IterUtil.pin(sel
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-    // every per-round checkpoint is LAZY: each round's plan is truncated to
-    // a LogicalRDD immediately, but nothing executes until the single count
-    // below — the whole fixed loop runs as ONE multi-stage job (each round's
-    // RDD is cached as it is first computed), not `iters` driver round-trips
-    var ranks = vertices.withColumn("rank", lit(1.0 - damping)).localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val contribs = links
-        .join(ranks, links("src") === ranks("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("rank") / col("out_deg")).as("c"))
-      ranks = vertices.join(contribs, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-        .localCheckpoint(false)
-    }
-    ranks.count() // materialize the chain BEFORE dropping the link cache
-    ranks
-  }
+  def runFixed(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    iterate(edges, lit(1.0), lit(1.0 - damping), damping, iters, None)
 
   /** Edge-weighted PageRank, fixed iterations: contributions distribute
     * proportionally to edge weight,
@@ -98,34 +34,11 @@ object PageRank {
     * Non-positive weights are excluded (they would invert or zero the
     * distribution). With integer multiplicities as weights this is
     * EXACTLY [[runFixed]] on the expanded multigraph — the cross-check
-    * GraphAlgoSpec pins. Same plan shape: one contribs shuffle per
-    * iteration against the cached weighted link table.
+    * GraphAlgoSpec pins.
     */
   def runWeightedFixed(edges: DataFrame, wCol: String, iters: Int,
-                       damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col(wCol).cast("double").as("w"))
-      .where(col("w") > 0)
-      .localCheckpoint(true) // one upstream pass
-    val links = IterUtil.pin(
-      e.join(e.groupBy("src").agg(sum("w").as("wsum")), "src"))
-    val vertices = IterUtil.pin(e
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
-    // lazy per-round checkpoints + one materializing count: see runFixed
-    var ranks = vertices.withColumn("rank", lit(1.0 - damping)).localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val contribs = links
-        .join(ranks, links("src") === ranks("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("rank") * col("w") / col("wsum")).as("c"))
-      ranks = vertices.join(contribs, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-        .localCheckpoint(false)
-    }
-    ranks.count() // materialize the chain BEFORE dropping the link cache
-    ranks
-  }
+                       damping: Double = 0.85): DataFrame =
+    iterate(edges, col(wCol), lit(1.0 - damping), damping, iters, None)
 
   /** Personalized PageRank, fixed iterations: the teleport mass lands only
     * on `seeds` (uniformly), so ranks measure importance RELATIVE to the
@@ -133,40 +46,28 @@ object PageRank {
     * construction (rank neighborhoods of known-good entities). Same
     * unnormalized convention as [[runFixed]]:
     *   PPR(v) = (1 - d) * p(v) + d * Σ_{(u,v)} PPR(u) / outdeg(u),
-    * p(v) = 1/|seeds| on seeds, 0 elsewhere.
-    *
-    * Plan shape matches [[runFixed]] — one contribs shuffle per iteration
-    * against the cached link table, lineage truncated per round; the base
-    * vector is a column expression, never a driver-side map.
+    * p(v) = 1/|seeds| on seeds, 0 elsewhere. The base vector is a column
+    * expression, never a driver-side map.
     */
   def runPersonalizedFixed(edges: DataFrame, seeds: Seq[String], iters: Int,
                            damping: Double = 0.85): DataFrame = {
     require(seeds.nonEmpty, "seeds must be non-empty")
-    // ONE evaluation of the caller's edge plan: links and vertices both
-    // derive from this checkpoint (the old shape read the upstream plan
-    // four times: twice for the degree join, twice for the vertex union)
-    val sel = edges.select("src", "dst").localCheckpoint(true)
-    val links = IterUtil.pin(sel
-      .join(sel.groupBy("src").agg(count(lit(1)).as("out_deg")), "src"))
-    val vertices = IterUtil.pin(sel
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct())
     val base = when(col("vertex").isInCollection(seeds),
       lit((1.0 - damping) / seeds.size)).otherwise(lit(0.0))
-    // lazy per-round checkpoints + one materializing count: see runFixed
-    var ranks = vertices.select(col("vertex"), base.as("rank")).localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val contribs = links
-        .join(ranks, links("src") === ranks("vertex"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(col("rank") / col("out_deg")).as("c"))
-      ranks = vertices.join(contribs, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          (base + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-        .localCheckpoint(false)
-    }
-    ranks.count() // materialize the chain BEFORE dropping the caches
-    ranks
+    iterate(edges, lit(1.0), base, damping, iters, None)
+  }
+
+  /** PR(v) = base(v) + d * Σ PR(u) · w / wsum(u) from PR = base: the
+    * unweighted variants are w = 1.0, bit-identical to PR(u) / outdeg(u).
+    */
+  private def iterate(edges: DataFrame, w: Column, base: Column, damping: Double,
+                      maxIter: Int, eps: Option[Double]): DataFrame = {
+    val g = PowerIteration.setup(edges, w, wsum = true)
+    PowerIteration.iterate(g, g.vertices.select(col("vertex"), base.as("x")), maxIter, eps) {
+      (b, x) =>
+        PowerIteration.step(g.links, b, x, col("x") * col("w") / col("wsum"))
+          .withColumn("x", base + lit(damping) * col("s")).drop("s")
+    }.withColumnRenamed("x", "rank")
   }
 
   /** (max_pagerank, max_pagerank_vertex) — argmax, ties resolved like lodcc's

@@ -149,6 +149,33 @@ class GraphAlgoSpec extends AnyFunSuite {
       s"convergence check shuffles $extraPerIter records/iteration (|V|=$nv)")
   }
 
+  test("job counts: fixed loops are one job, run one per round, BFS one per level") {
+    // stated where one action is one job; with AQE every round's shuffle
+    // stages also run as jobs of their own when the round is checkpointed
+    val one = SparkTestSession.oneJobPerAction
+    val es = (0 until 60).map(i => (s"v${i % 20}", s"v${(i * 7 + 3) % 20}"))
+    val e = one.createDataFrame(es).toDF("src", "dst")
+    val w = one.createDataFrame(es.map { case (a, b) => (a, b, 2.0) }).toDF("src", "dst", "w")
+    def jobs(body: => Any): Int = SparkTestSession.jobsDuring { body; () }
+    Seq[(String, Int => Any)](
+      "PageRank.runFixed" -> (k => PageRank.runFixed(e, k)),
+      "PageRank.runWeightedFixed" -> (k => PageRank.runWeightedFixed(w, "w", k)),
+      "PageRank.runPersonalizedFixed" -> (k => PageRank.runPersonalizedFixed(e, Seq("v1"), k)),
+      "Eigenvector.runFixed" -> (k => Eigenvector.runFixed(e, k)),
+      "Hits.runFixed" -> (k => graft.algo.Hits.runFixed(e, k))).foreach { case (name, run) =>
+      assert(jobs(run(2)) == jobs(run(8)), name)
+    }
+    val setup = jobs(PageRank.run(e, eps = 0.0, maxIter = 0))
+    Seq(3, 7).foreach(k => assert(jobs(PageRank.run(e, eps = 0.0, maxIter = k)) == setup + k))
+    // a0 -> ... -> aL: L levels reach a vertex and one finds none; the other
+    // two jobs checkpoint the adjacency and the seed row
+    Seq(1, 4).foreach { l =>
+      val path = one.createDataFrame((0 until l).map(i => (s"a$i", s"a${i + 1}"))).toDF("src", "dst")
+      assert(jobs(Bfs.distances(path, "a0")) == 2 + l + 1, s"distances, L=$l")
+      assert(jobs(Bfs.multiSourceDistances(path, Seq("a0"))) == 2 + l + 1, s"multi, L=$l")
+    }
+  }
+
   test("G2 eigenvector on a 3-cycle: uniform 1/sqrt(3)") {
     val cyc = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
     val ev = Eigenvector.run(cyc)

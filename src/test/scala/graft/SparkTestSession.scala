@@ -14,6 +14,18 @@ object SparkTestSession {
 
   spark.sparkContext.setLogLevel("ERROR")
 
+  /** A child session (same SparkContext, own SQL conf) without AQE or
+    * broadcast joins, where one Spark action is one job: AQE runs every
+    * shuffle stage as a job of its own, and a broadcast runs one when its
+    * plan is prepared. Job-count contracts are stated in this session.
+    */
+  lazy val oneJobPerAction: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
   /** Spark jobs started while `body` runs. */
   def jobsDuring(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
