@@ -284,11 +284,13 @@ class MeasuresSpec extends AnyFunSuite {
       val e = edgesOf(es)
       val sources = Seq("v0", "p", "source_only", "sink_only")
       sources.foreach { s =>
-        val got = Bfs.distances(e, s).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        assert(got == refBfs(es, s), s"distances/$seed from $s")
+        val rows = Bfs.distances(e, s).collect()
+        val got = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(rows.length == got.size && got == refBfs(es, s), s"distances/$seed from $s")
       }
-      val multi = Bfs.multiSourceDistances(e, sources).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      val rows = Bfs.multiSourceDistances(e, sources).collect()
+      val multi = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(rows.length == multi.size, s"multiSourceDistances/$seed: duplicate rows")
       assert(multi == sources.flatMap(s => refBfs(es, s).map { case (v, d) => (s, v) -> d }).toMap,
         s"multiSourceDistances/$seed")
     }
