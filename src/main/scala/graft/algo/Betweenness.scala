@@ -47,7 +47,7 @@ object Betweenness {
         .agg(sum("sigma").as("sigma"))
         .withColumnRenamed("dst", "vertex")
         .join(visited.select("seed", "vertex"), Seq("seed", "vertex"), "left_anti")
-        .localCheckpoint(false) // lazy: the count below materializes it
+        .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
       frontierCount = next.count()
       if (frontierCount > 0) {
         visited = visited
@@ -114,7 +114,7 @@ object Betweenness {
       // materialize in the caller's single action. Every 8th level the
       // checkpoint is EAGER so a high-diameter graph (chains, road
       // networks) never accumulates an unboundedly deep join chain inside
-      // one job (the discipline written up in ConnectedComponents; on the
+      // one plan (the discipline written up in ConnectedComponents; on the
       // bench graphs maxD is 3-4 and the eager branch never fires).
       delta = delta.union(contrib.select("seed", "vertex", "delta"))
         .localCheckpoint((maxD - d) % 8 == 7)

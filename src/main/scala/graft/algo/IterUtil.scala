@@ -20,6 +20,11 @@ import org.apache.spark.sql.DataFrame
   * widths — guide §2.2's "fewer, larger partitions" applied to the loop
   * state). `coalesce` is a narrow wrapper over the checkpointed blocks —
   * no extra shuffle, no second copy.
+  *
+  * Under AQE (on in every project session) a LAZY `localCheckpoint(false)`
+  * truncates lineage but defers no work: it runs each shuffle and broadcast
+  * stage of the frame as a job of its own at once, so a loop of lazy
+  * checkpoints is never one job per round or per loop.
   */
 private[graft] object IterUtil {
 

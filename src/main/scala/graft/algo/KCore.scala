@@ -44,8 +44,7 @@ object KCore {
     var iter = 0
     var converged = m == 0L
     while (!converged && iter < maxIter) {
-      val deg = cur.select(col("a").as("v")).union(cur.select(col("b").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("d"))
+      val deg = GraphTables.simpleDegree(cur)
       // peel by the DROP set, not the keep set: dropping v ⟺ deg(v) < k is
       // the same predicate, but the drop side is the SMALL one after the
       // first rounds, so (a) the eager checkpoint that stops the two join
@@ -62,7 +61,7 @@ object KCore {
           .join(drop.withColumnRenamed("v", "a"), Seq("a"), "left_anti")
           .join(drop.withColumnRenamed("v", "b"), Seq("b"), "left_anti")
           .select("a", "b")
-          .localCheckpoint(false) // lazy: the count below materializes it
+          .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
         cur = next
         m = next.count()
         converged = m == 0L
@@ -70,8 +69,7 @@ object KCore {
       iter += 1
     }
     if (!converged) log.warn(s"kCore(k=$k): not converged after $maxIter rounds")
-    cur.select(col("a").as("v")).union(cur.select(col("b").as("v")))
-      .groupBy(col("v").as("vertex")).agg(count(lit(1)).as("core_deg"))
+    GraphTables.simpleDegree(cur).select(col("v").as("vertex"), col("d").as("core_deg"))
   }
 
   /** One-row summary of [[kCore]] (vertex/edge counts + degree stats) —

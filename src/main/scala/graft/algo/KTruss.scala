@@ -11,10 +11,11 @@ import graft.graph.GraphTables
   * triangles WITHIN the subgraph — the edge-cohesion companion to the
   * vertex-peeling [[KCore]]. Computed by iterative support peeling:
   * per round, enumerate triangles of the surviving edge set with the
-  * degree-ordered compact-forward scheme ([[Triangles.triangles]], wedge
-  * volume O(m^1.5) regardless of hub skew), count per-edge support, drop
-  * edges below k-2, repeat to fixpoint. Removal-only peeling makes the
-  * edge COUNT a faithful convergence signature (equal count ⇔ equal set).
+  * degree-ordered compact-forward scheme ([[Triangles.enumerate]] over a
+  * [[Triangles.orient]]ed edge set, wedge volume O(m^1.5) regardless of
+  * hub skew), count per-edge support, drop edges below k-2, repeat to
+  * fixpoint. Removal-only peeling makes the edge COUNT a faithful
+  * convergence signature (equal count ⇔ equal set).
   *
   * Same loop discipline as the other fixpoints: localCheckpoint per round
   * truncates lineage; per-round cost is one triangle enumeration + one
@@ -42,21 +43,7 @@ object KTruss {
     // order. The halving rule is deterministic (a pure function of the
     // materialized counts) and amortizes the re-orientation joins to
     // O(log m) total.
-    def orient(simple: DataFrame): DataFrame = {
-      val deg = simple.select(col("a").as("v"))
-        .union(simple.select(col("b").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("d"))
-      val loFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-      simple
-        .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
-        .select(col("a"), col("b"),
-          when(loFirst, col("a")).otherwise(col("b")).as("lo"),
-          when(loFirst, col("b")).otherwise(col("a")).as("hi"),
-          when(loFirst, col("db")).otherwise(col("da")).as("dhi"))
-    }
-    var cur = orient(GraphTables.simpleUndirected(edges)).localCheckpoint(false)
-    var lastSup: DataFrame = null
+    var cur = Triangles.orient(GraphTables.simpleUndirected(edges)).localCheckpoint(false)
     var prev = -1L
     var cnt = cur.count()
     var orientCnt = cnt
@@ -64,33 +51,23 @@ object KTruss {
     while (cnt != prev && round < maxRounds) {
       prev = cnt
       if (cnt * 2 <= orientCnt) {
-        cur = orient(cur.select("a", "b")).localCheckpoint(true)
+        cur = Triangles.orient(cur.select("a", "b")).localCheckpoint(true)
         orientCnt = cnt
       }
-      val e1 = cur.select(col("lo").as("u"), col("hi").as("v"), col("dhi").as("dv"))
-      val e2 = cur.select(col("lo").as("u"), col("hi").as("w"), col("dhi").as("dw"))
-      val wedges = e1.join(e2, Seq("u"))
-        .where(struct(col("dv"), col("v")) < struct(col("dw"), col("w")))
-      val probe = cur.select(col("lo").as("v"), col("hi").as("w"))
-      val tri = wedges.join(probe, Seq("v", "w"), "left_semi")
-        .select(col("u"), col("v"), col("w"))
       // triangle members are (deg, id)-oriented — normalize each of the 3
       // edges back to the id-ordered (a, b) key of the edge set
-      val sup = tri.select(explode(array(
+      val sup = Triangles.enumerate(cur).select(explode(array(
           struct(col("u").as("x"), col("v").as("y")),
           struct(col("u").as("x"), col("w").as("y")),
           struct(col("v").as("x"), col("w").as("y")))).as("e"))
         .select(least(col("e.x"), col("e.y")).as("a"),
           greatest(col("e.x"), col("e.y")).as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-      val next = cur.join(sup, Seq("a", "b"))
-        .where(col("support") >= k - 2)
-        .localCheckpoint(false) // lazy: the count below materializes it —
-                                // one job per round, lineage still truncated
       // when the set stops changing, these supports were computed over
       // exactly the final set — no extra pass needed
-      lastSup = next
-      cur = next.drop("support")
+      cur = cur.drop("support").join(sup, Seq("a", "b"))
+        .where(col("support") >= k - 2)
+        .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
       cnt = cur.count()
       round += 1
     }
@@ -101,9 +78,7 @@ object KTruss {
       throw new IllegalStateException(
         s"k-truss peel did not converge in $maxRounds rounds " +
           s"(edge count still moving: $prev -> $cnt); raise maxRounds")
-    if (lastSup == null)
-      cur.select("a", "b").withColumn("support", lit(0L)).where(lit(false))
-    else lastSup.select(col("a"), col("b"), col("support"))
+    cur.select(col("a"), col("b"), col("support")) // converged: >= 1 round ran
   }
 
   /** One-row truss summary, [[KCore.summary]]-shaped. */

@@ -44,9 +44,8 @@ object LabelPropagation {
       .localCheckpoint(true)
     val vertices = nbrs.select(col("v").as("vertex")).distinct()
 
-    // lazy per-round checkpoints + one materializing count after the loop:
-    // the whole fixed iteration runs as ONE multi-stage job (plans still
-    // truncated per round), not `iters` driver round-trips
+    // lazy per-round checkpoints (plans truncated per round) + one
+    // materializing count after the loop: no driver action per round
     var labels = vertices.withColumn("community", col("vertex"))
       .localCheckpoint(false)
     (1 to iters).foreach { _ =>

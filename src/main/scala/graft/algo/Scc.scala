@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * every round is one equi-join + min re-aggregation with map-side partial
   * agg, eagerly localCheckpoint'ed like the CC kernel so no round ever
   * re-executes an earlier round's shuffle tree. Convergence piggybacks a
-  * count+bit_xor signature on the checkpoint-materializing job. Throws
+  * count+bit_xor signature on the checkpoint-materializing action. Throws
   * rather than returning a partial answer when a cap is exhausted
   * (same contract as [[TransitiveClosure]] / KTruss).
   *
@@ -70,7 +70,7 @@ object Scc {
         t += 1
         val keep = e.select(col("src").as("vertex")).distinct()
           .join(e.select(col("dst").as("vertex")).distinct(), Seq("vertex"))
-          .localCheckpoint(false) // lazy: the count below materializes it
+          .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
         val nKeep = keep.count()
         if (nKeep == nLeft) trimming = false
         else {
@@ -89,9 +89,9 @@ object Scc {
         // TWO propagation steps per materialized round: min-label coloring
         // is monotone, so applying the update twice before re-checking
         // reaches the identical fixpoint in half the driver round-trips;
-        // the checkpoint is LAZY and the signature agg is the ONE job that
-        // materializes it (the eager-checkpoint + separate-signature shape
-        // paid 2 jobs per single step).
+        // the checkpoint is LAZY and the signature agg is the one action
+        // that materializes it (the eager-checkpoint + separate-signature
+        // shape paid 2 actions per single step).
         def colorStep(cc: DataFrame): DataFrame = {
           val prop = e.join(cc.withColumnRenamed("vertex", "src"), Seq("src"))
             .select(col("dst").as("vertex"), col("c"))
@@ -128,8 +128,7 @@ object Scc {
           .localCheckpoint(true)
         // frontier-based backward mark (the BFS discipline): each round
         // propagates only from the NEWLY marked vertices instead of
-        // re-joining and re-deduplicating the whole marked set, and the
-        // lazy checkpoint's count is the one job per round
+        // re-joining and re-deduplicating the whole marked set
         var m = c.where(col("vertex") === col("c"))
           .select(col("vertex"), col("c").as("scc"))
           .localCheckpoint(true)
@@ -148,7 +147,7 @@ object Scc {
             .select(col("src").as("vertex"), col("scc"))
             .distinct()
             .join(m, Seq("vertex"), "left_anti")
-            .localCheckpoint(false) // lazy: the count below materializes it
+            .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
           fCount = back.count()
           if (fCount > 0) {
             m = m.union(back).localCheckpoint(false)

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * and 200 shuffles on a 200-deep chain. Per-round shuffle volume is
   * bounded by |closure| x avg out-fanout; the min() re-aggregation keeps
   * the frame at one row per reachable pair. Convergence = (row count,
-  * dist sum) stable; both ride the same job as the checkpoint
-  * materialization (one job per round).
+  * dist sum) stable; both are read by the one aggregate per round that
+  * materializes the round's checkpoint.
   */
 object TransitiveClosure {
 
@@ -43,7 +43,7 @@ object TransitiveClosure {
       val row = df.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).head()
       (row.getLong(0), row.getLong(1))
     }
-    var cur = state(r) // materializes the checkpoint: one job per round
+    var cur = state(r) // materializes the checkpoint
     r = pinned(r, cur._1)
     var prev = (-1L, -1L)
     var rounds = 0

@@ -19,20 +19,23 @@ import graft.graph.GraphTables
   */
 object Triangles {
 
-  /** (a, b, c) triangle triples over the simple undirected graph. */
-  def triangles(edges: DataFrame): DataFrame = {
-    val simple = GraphTables.simpleUndirected(edges) // (a < b)
-    val deg = simple.select(col("a").as("v")).union(simple.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    // orient by (degree, vertex): lo -> hi
-    val oriented = simple
+  /** (a, b, lo, hi, dhi): each simple edge (a < b) oriented from its
+    * lower-(degree, id) endpoint lo to hi, with dhi = deg(hi). */
+  private[algo] def orient(simple: DataFrame): DataFrame = {
+    val deg = GraphTables.simpleDegree(simple)
+    val loFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
+    simple
       .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
-      .select(
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a")).otherwise(col("b")).as("lo"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b")).otherwise(col("a")).as("hi"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("da")).otherwise(col("db")).as("dlo"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db")).otherwise(col("da")).as("dhi"))
+      .select(col("a"), col("b"),
+        when(loFirst, col("a")).otherwise(col("b")).as("lo"),
+        when(loFirst, col("b")).otherwise(col("a")).as("hi"),
+        when(loFirst, col("db")).otherwise(col("da")).as("dhi"))
+  }
+
+  /** (u, v, w): each triangle of an [[orient]]ed frame once — wedges
+    * joined at lo under the (dhi, hi) order, closing edge semi-joined. */
+  private[algo] def enumerate(oriented: DataFrame): DataFrame = {
     val e1 = oriented.select(col("lo").as("u"), col("hi").as("v"), col("dhi").as("dv"))
     val e2 = oriented.select(col("lo").as("u"), col("hi").as("w"), col("dhi").as("dw"))
     val wedges = e1.join(e2, Seq("u"))
@@ -41,29 +44,23 @@ object Triangles {
     wedges.join(probe, Seq("v", "w"), "left_semi").select(col("u"), col("v"), col("w"))
   }
 
-  /** single row: (triangle_count, global_clustering, local_clustering).
-    * global = 3T / sum(k(k-1)/2); local mean = avg over ALL vertices of
-    * 2*T_v / (k_v (k_v - 1)) with 0 when k_v < 2 (vertex_average semantics).
-    */
-  def clustering(edges: DataFrame): DataFrame = {
-    val simple = GraphTables.simpleUndirected(edges)
-    val deg = simple.select(col("a").as("v")).union(simple.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val tri = triangles(edges).persist()
-    val perVertex = tri.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("t"))
-    val localStats = deg.join(perVertex, Seq("v"), "left_outer")
-      .select(col("d"), coalesce(col("t"), lit(0L)).as("t"))
+  /** (u, v, w) triangle triples over the simple undirected graph. */
+  def triangles(edges: DataFrame): DataFrame =
+    enumerate(orient(GraphTables.simpleUndirected(edges)))
+
+  /** single row: (triangle_count, global_clustering, local_clustering)
+    * over [[perVertex]]: T = Σt/3, global = 3T / Σ d(d-1)/2, local = the
+    * mean of the per-vertex coefficients (vertex_average semantics). */
+  def clustering(edges: DataFrame): DataFrame =
+    perVertex(edges)
       .agg(
-        sum(col("d") * (col("d") - 1) / 2).as("triplets"),
-        avg(when(col("d") >= 2, lit(2.0) * col("t") / (col("d") * (col("d") - 1)))
-          .otherwise(lit(0.0))).as("local_clustering"))
-    val tcount = tri.agg(count(lit(1)).as("triangle_count"))
-    tcount.crossJoin(localStats).select(
-      col("triangle_count"),
-      (lit(3.0) * col("triangle_count") / col("triplets")).as("global_clustering"),
-      col("local_clustering"))
-  }
+        coalesce((sum(col("triangles")) / 3).cast("bigint"), lit(0L)).as("triangle_count"),
+        sum(col("degree") * (col("degree") - 1) / 2).as("triplets"),
+        avg(col("local_clustering")).as("local_clustering"))
+      .select(
+        col("triangle_count"),
+        (lit(3.0) * col("triangle_count") / col("triplets")).as("global_clustering"),
+        col("local_clustering"))
 
   /** Per-vertex triangle table: (vertex, degree, triangles,
     * local_clustering) over the simple undirected graph — the full local
@@ -73,13 +70,10 @@ object Triangles {
     * triangle list.
     */
   def perVertex(edges: DataFrame): DataFrame = {
-    val simple = GraphTables.simpleUndirected(edges)
-    val deg = simple.select(col("a").as("v")).union(simple.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
     val pv = triangles(edges)
       .select(explode(array(col("u"), col("v"), col("w"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("t"))
-    deg.join(pv, Seq("v"), "left_outer")
+    GraphTables.simpleDegree(GraphTables.simpleUndirected(edges)).join(pv, Seq("v"), "left_outer")
       .select(col("v").as("vertex"),
         col("d").cast("bigint").as("degree"),
         coalesce(col("t"), lit(0L)).cast("bigint").as("triangles"),

@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.gfunctions.xxh64_hex
@@ -124,6 +125,30 @@ object GraphTables {
       .where(col("a") =!= col("b"))
       .distinct()
 
+  /** (v, d): each vertex's degree in a [[simpleUndirected]] edge set. */
+  private[graft] def simpleDegree(simple: DataFrame): DataFrame =
+    simple.select(col("a").as("v")).union(simple.select(col("b").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+
+  /** (key, xs): the sorted items of each key of the distinct (key, item)
+    * `rows` holding 2 to `cap` items. Keys over the cap are dropped before
+    * any `collect_list`, so no array exceeds `cap` (no hot-key OOM). */
+  private[graft] def cappedFold(rows: DataFrame, cap: Int): DataFrame =
+    rows.withColumn("n", count(lit(1)).over(Window.partitionBy("key")))
+      .where(col("n").between(2, cap))
+      .groupBy("key").agg(sort_array(collect_list(col("item"))).as("xs"))
+
+  /** (n, a, b): each pair a < b of every [[cappedFold]] array of size n,
+    * emitted once by the native [[graft.functions.ArrayPairs]] kernel. */
+  private[graft] def cappedPairs(rows: DataFrame, cap: Int): DataFrame =
+    cappedFold(rows, cap)
+      // explode_outer: a plain explode infers a size(ArrayPairs(xs)) > 0
+      // filter that builds every pair array twice (arrays here are never empty)
+      .select(size(col("xs")).as("n"), explode_outer(
+        org.apache.spark.sql.graft.Bridge.column(graft.functions.ArrayPairs(
+          org.apache.spark.sql.graft.Bridge.expression(col("xs"))))).as("p"))
+      .select(col("n"), col("p.a").as("a"), col("p.b").as("b"))
+
   /** Bipartite co-occurrence projection: item pairs (a < b) sharing a
     * context, with the shared-context count as the edge weight — the
     * entity co-mention graph of KG construction (context = conversation,
@@ -134,34 +159,16 @@ object GraphTables {
     * pairs, so one 10⁶-entity hub context is a single-key 10¹²-pair
     * explosion — contexts with more than `maxContextDf` distinct items
     * are dropped from pair generation entirely (logged recall trade, the
-    * web-scale default). `maxContextDf <= 0` disables the guard (test
-    * scale only). One self-join on the context key, one count per pair;
+    * web-scale default). One [[cappedPairs]] fold, one count per pair;
     * never an unblocked cross join.
     */
   def coOccurrence(pairs: DataFrame, contextCol: String, itemCol: String,
                    maxContextDf: Int = 1000): DataFrame = {
-    val t = pairs.select(col(contextCol).as("ctx"), col(itemCol).as("item"))
+    require(maxContextDf >= 2, "maxContextDf must be >= 2")
+    val t = pairs.select(col(contextCol).as("key"), col(itemCol).as("item"))
       .distinct()
-    val blocked = if (maxContextDf > 0) {
-      val hot = t.groupBy("ctx").agg(count(lit(1)).as("d"))
-        .where(col("d") > maxContextDf).select("ctx")
-      t.join(broadcast(hot), Seq("ctx"), "left_anti")
-    } else t
-    // fold each context's items into ONE sorted array (bounded at
-    // maxContextDf by the guard above) and emit every unordered pair
-    // exactly once through the native ArrayPairs kernel — the ctx
-    // self-join streamed both orderings of every pair before the
-    // item < item2 filter kept half, and the groupBy rides the fold's
-    // ctx-partitioning (same degree-oriented move as LinkPredict)
-    val lists = blocked.groupBy("ctx")
-      .agg(sort_array(collect_list(col("item"))).as("xs"))
-      .where(size(col("xs")) >= 2)
-    lists.select(explode_outer(
-        org.apache.spark.sql.graft.Bridge.column(graft.functions.ArrayPairs(
-          org.apache.spark.sql.graft.Bridge.expression(col("xs"))))).as("p"))
-      .where(col("p").isNotNull)
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("weight"))
+    cappedPairs(t, maxContextDf)
+      .groupBy("a", "b").agg(count(lit(1)).as("weight"))
   }
 
   /** Bounded property-path reachability (SPARQL `src p{1,maxHops} dst` /

@@ -9,12 +9,11 @@ import org.apache.spark.sql.functions._
   * stops at per-vertex topology).
   *
   * Scale shape: candidate pairs are generated ONLY through shared
-  * neighbors (a wedge self-join on the center vertex), never vertex x
-  * vertex. The center join is an equi-join whose per-key fan-out is
-  * deg(w)^2, so hubs are excluded from CENTER duty by the `maxHubDeg`
-  * guard (same hot-key pattern as the co-occurrence hub guard): a center
-  * with deg(w) <= maxHubDeg contributes at most maxHubDeg^2/2 pairs, which
-  * bounds the shuffle at |E| * maxHubDeg. Dropping hub centers is the
+  * neighbors (the [[GraphTables.cappedPairs]] fold keyed on the center
+  * vertex), never vertex x vertex. Centers with deg(w) > maxHubDeg are
+  * dropped by the fold's cap (as are co-occurrence hub contexts), so a
+  * center contributes at most maxHubDeg^2/2 pairs and the shuffle is
+  * bounded at |E| * maxHubDeg. Dropping hub centers is the
   * standard semantic here too — a million-degree hub asserts almost
   * nothing about any one pair (its Adamic-Adar term 1/ln(deg) -> 0).
   * Degrees are undirected-distinct and small: the degree frames broadcast.
@@ -26,43 +25,17 @@ object LinkPredict {
     */
   def scores(edges: DataFrame, maxHubDeg: Int): DataFrame = {
     require(maxHubDeg >= 2, "maxHubDeg must be >= 2")
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .where(col("src") =!= col("dst"))
-    val nbr = und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-    val deg = nbr.groupBy("u").agg(count(lit(1)).as("d"))
-    val centers = nbr.select(col("u").as("w"), col("v").as("x"))
-      .join(deg.select(col("u").as("w"), col("d").as("dw")), "w")
-      .where(col("dw") <= maxHubDeg)
-    // degree-oriented wedge generation: fold each guarded center's
-    // neighbors into ONE sorted array (bounded at maxHubDeg elements by
-    // the guard above) and emit every unordered pair exactly once —
-    // the previous center self-join streamed all deg^2 ordered
-    // combinations per center before the l.x < r.x filter kept half.
-    // The groupBy rides the join's w-partitioning: no extra exchange.
-    val lists = centers.groupBy(col("w"), col("dw"))
-      .agg(sort_array(collect_list(col("x"))).as("xs"))
-      // degree-1 centers produce no pairs — and must be dropped BEFORE the
-      // per-center 1/ln(dw) below (ln(1) = 0 would divide by zero on rows
-      // the per-pair formulation never materialized)
-      .where(col("dw") >= 2)
-      // 1/ln(dw) is constant per center: evaluate it once per list here
-      // instead of once per exploded pair (the pair volume is ~deg^2/2)
-      .select((lit(1.0) / log(col("dw").cast("double"))).as("invlog"), col("xs"))
-    // NATIVE codegen pair emission (graft.functions.ArrayPairs): the
-    // nested transform/flatten lambda chain is CodegenFallback — ~30 µs of
-    // interpreted evaluation per emitted pair, the dominant stage cost at
-    // tens of millions of wedges
-    val pairs = lists.select(col("invlog"), explode_outer(
-        org.apache.spark.sql.graft.Bridge.column(graft.functions.ArrayPairs(
-          org.apache.spark.sql.graft.Bridge.expression(col("xs"))))).as("p"))
-      .where(col("p").isNotNull)
-      .select(col("p.a").as("a"), col("p.b").as("b"), col("invlog"))
+    val simple = GraphTables.simpleUndirected(edges)
+    val deg = GraphTables.simpleDegree(simple)
+    // a center's folded neighbor array has size n = its degree
+    val pairs = GraphTables.cappedPairs(simple.select(col("a").as("key"), col("b").as("item"))
+        .union(simple.select(col("b").as("key"), col("a").as("item"))), maxHubDeg)
+      .select(col("a"), col("b"), (lit(1.0) / log(col("n").cast("double"))).as("invlog"))
     pairs.groupBy("a", "b").agg(
         count(lit(1)).as("common_neighbors"),
         sum(col("invlog")).as("adamic_adar"))
-      .join(broadcast(deg.select(col("u").as("a"), col("d").as("da"))), "a")
-      .join(broadcast(deg.select(col("u").as("b"), col("d").as("db"))), "b")
+      .join(broadcast(deg.select(col("v").as("a"), col("d").as("da"))), "a")
+      .join(broadcast(deg.select(col("v").as("b"), col("d").as("db"))), "b")
       .withColumn("jaccard", col("common_neighbors").cast("double") /
         (col("da") + col("db") - col("common_neighbors")).cast("double"))
       .select("a", "b", "common_neighbors", "adamic_adar", "jaccard")

@@ -238,7 +238,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       ("c2", "A"), ("c2", "B"),
       ("c3", "X") // singleton context: no pairs
     ).toDF("ctx", "item")
-    val got = graft.graph.GraphTables.coOccurrence(t, "ctx", "item", maxContextDf = 0)
+    // cap 3 = the largest context: nothing is dropped
+    val got = graft.graph.GraphTables.coOccurrence(t, "ctx", "item", maxContextDf = 3)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(("A", "B") -> 2L, ("A", "C") -> 1L, ("B", "C") -> 1L))
     // cap 2: c1 (3 distinct items) is a hub context, dropped from pair gen

@@ -226,7 +226,8 @@ class PropertySpec extends AnyFunSuite {
   test("coOccurrence uncapped weights conserve sum d*(d-1)/2 over contexts") {
     forAllSeeded(edgeGen) { es =>
       val t = es.toDF("ctx", "item", "ignore").select("ctx", "item")
-      val co = graft.graph.GraphTables.coOccurrence(t, "ctx", "item", maxContextDf = 0)
+      // edgeGen draws items from at most 40 vertices: no context is capped
+      val co = graft.graph.GraphTables.coOccurrence(t, "ctx", "item", maxContextDf = 40)
       val total = co.agg(coalesce(sum("weight"), lit(0L))).head().getLong(0)
       val expected = es.map(e => (e._1, e._2)).distinct.groupBy(_._1)
         .values.map { g => val d = g.size.toLong; d * (d - 1) / 2 }.sum
