@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full-surface sf1 sweep (VERDICT r4 next #6): synthesize sf1 from the
 # driver's sf0.1 parquet, then time every gate query min-of-2 under the
-# Bench session shape. Run EXCLUSIVELY — results feed BASELINE.md.
+# Bench session shape (graft.Sessions.bench at SPARK_GRAFT_CPUS cores). Run EXCLUSIVELY — results feed BASELINE.md.
 #
 #   scripts/sf1_sweep.sh [dstdir]
 #
@@ -19,7 +19,7 @@ if [ ! -f "$DST/lineitem.parquet" ]; then
     grep -E '^[a-z]+: [0-9]+ rows' || exit 1
 fi
 
-echo "== QueryTimer ALL at sf1 =="
-SPARK_GRAFT_SF_DIR="$DST" sbt -batch "runMain graft.tools.QueryTimer ALL" 2>&1 |
+echo "== Probe ALL at sf1 =="
+SPARK_GRAFT_SF_DIR="$DST" sbt -batch "runMain graft.tools.Probe ALL" 2>&1 |
   grep -E '^\{"query"' | tee /tmp/sf1_sweep_times.jsonl
 echo "== done =="

@@ -40,29 +40,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def newSession(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (4 * cores).toString)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hub-vertex skew handling, same configs as the pinned legs
-      // (tools.LegRunner): AQE splits skewed join partitions at the sizes
-      // these inputs actually produce
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def newSession(cores: Int): SparkSession =
+    Sessions.startBench(s"graft-bench-$cores", cores)
 
   /** Spawn one scaling leg as its own CPU-PINNED JVM (graft.tools.LegRunner)
     * and return its timed runs (seconds).
@@ -88,11 +67,6 @@ object Bench {
     */
   private def runLeg(job: String, cores: Int, warm: Int, runs: Int,
                      inputPath: String): List[Double] = {
-    val nproc = Runtime.getRuntime.availableProcessors
-    val cpus = s"${nproc - cores}-${nproc - 1}"
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val heapG = math.min(4 * cores, 64)
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
       "java.base/java.lang.reflect", "java.base/java.io",
@@ -102,26 +76,38 @@ object Bench {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    val jvmOpts = addOpens ++ Seq(s"-Xmx${math.min(4 * cores, 64)}g",
+      "-XX:+UseParallelGC", "-Dspark.ui.enabled=false")
+    val out = pinnedJvm(cores, jvmOpts, "graft.tools.LegRunner",
+      Seq(job, cores.toString, warm.toString, runs.toString, inputPath), s"leg $job p$cores")
+    val secsRx = """"secs":([0-9.]+)""".r
+    out.flatMap(l => secsRx.findFirstMatchIn(l).map(_.group(1).toDouble))
+  }
+
+  /** Runs `main` in a fresh JVM on this JVM's classpath, pinned with
+    * `taskset -c` to the top `cores` cpus of the host (dodging cpu0
+    * housekeeping) and with ActiveProcessorCount = cores, so JVM-sized pools
+    * follow the pin even where taskset is missing. Returns its stdout lines;
+    * its stderr passes through.
+    */
+  private def pinnedJvm(cores: Int, jvmOpts: Seq[String], main: String,
+                        args: Seq[String], label: String): List[String] = {
+    val nproc = Runtime.getRuntime.availableProcessors
     val pin =
       if (new java.io.File("/usr/bin/taskset").exists())
-        Seq("/usr/bin/taskset", "-c", cpus)
-      else Nil // ActiveProcessorCount still bounds JVM-sized pools
-    val cmd = pin ++ Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx${heapG}g", "-XX:+UseParallelGC",
-      s"-XX:ActiveProcessorCount=$cores",
-      "-Dspark.ui.enabled=false",
-      "-cp", cp, "graft.tools.LegRunner",
-      job, cores.toString, warm.toString, runs.toString, inputPath)
+        Seq("/usr/bin/taskset", "-c", s"${nproc - cores}-${nproc - 1}")
+      else Nil
+    val cmd = pin ++ Seq(System.getProperty("java.home") + "/bin/java") ++ jvmOpts ++
+      Seq(s"-XX:ActiveProcessorCount=$cores",
+        "-cp", System.getProperty("java.class.path"), main) ++ args
     val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(false)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     val proc = pb.start()
     val out = scala.io.Source.fromInputStream(proc.getInputStream)
       .getLines().toList
     val rc = proc.waitFor()
-    if (rc != 0) System.err.println(s"[bench] leg $job p$cores exited rc=$rc")
-    val secsRx = """"secs":([0-9.]+)""".r
-    out.flatMap(l => secsRx.findFirstMatchIn(l).map(_.group(1).toDouble))
+    if (rc != 0) System.err.println(s"[bench] $label exited rc=$rc")
+    out
   }
 
   /** Pure-JVM per-core compression probe: `threads` workers each run the
@@ -156,25 +142,10 @@ object Bench {
     * rather than killing the bench).
     */
   private def membwProbe(threads: Int): Double = try {
-    val nproc = Runtime.getRuntime.availableProcessors
-    val cpus = s"${nproc - threads}-${nproc - 1}"
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val pin =
-      if (new java.io.File("/usr/bin/taskset").exists())
-        Seq("/usr/bin/taskset", "-c", cpus)
-      else Nil
-    val cmd = pin ++ Seq(javaBin, "-Xmx12g",
-      s"-XX:ActiveProcessorCount=$threads",
-      "-cp", cp, "graft.tools.MembwProbe", threads.toString, "3", "8")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val proc = pb.start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream)
-      .getLines().toList
-    proc.waitFor()
     val rx = """"gbps":([0-9.]+)""".r
-    out.flatMap(l => rx.findFirstMatchIn(l).map(_.group(1).toDouble))
+    pinnedJvm(threads, Seq("-Xmx12g"), "graft.tools.MembwProbe",
+      Seq(threads.toString, "3", "8"), s"membw p$threads")
+      .flatMap(l => rx.findFirstMatchIn(l).map(_.group(1).toDouble))
       .headOption.getOrElse(0.0)
   } catch { case _: Throwable => 0.0 }
 

@@ -151,15 +151,9 @@ object Cli {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${math.max(a.threads, 1)}]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", a.threadsOpenmp.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-cli", Sessions.base(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${math.max(a.threads, 1)}]"),
+      a.threadsOpenmp) + Sessions.Adaptive, "WARN")
     try run(spark, a) finally spark.stop()
   }
 }

@@ -328,15 +328,8 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val nConvs = if (args.nonEmpty) args(0).toLong else 500L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-pipeline",
+      Sessions.base(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 32) + Sessions.Adaptive, "WARN")
     args.drop(1).headOption match {
       case Some(root) =>
         // checkpointed, resumable run: Pipeline <nConvs> <tableRoot>

@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus(fallback = 4)
+    val spark = Sessions.start("graft-verify", Sessions.base(s"local[$cpus]", cpus), "WARN")
     new java.io.File(outDir).mkdirs()
     // per-query watchdog: one pathological query must not eat the whole
     // round's correctness budget — cancel its job group and move on
@@ -21,21 +14,11 @@ object Verify {
     // dev-only subset filter (unset for driver runs): comma-separated names
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def wanted(name: String) = only.forall(_.contains(name))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     SparkEntry.queries.toSeq.sortBy(_._1).filter(p => wanted(p._1)).foreach { case (name, fn) =>
-      val work = Future {
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        finally spark.sparkContext.clearJobGroup()
+      try Sessions.withDeadline(spark, name, timeoutSec) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      try Await.result(work, timeoutSec.seconds)
       catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          System.err.println(s"[verify] $name timed out after ${timeoutSec}s")
         case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -64,7 +64,7 @@ object ConnectedComponents {
     * per star round then run as exchange-free broadcast-hash joins — no
     * sort, no reshuffle of the pair set, and hot-hub join skew cannot
     * exist. Above the threshold the joins fall back to shuffle joins with
-    * AQE skew-split (session configs in Bench/LegRunner): on a 10^12-turn
+    * AQE skew-split (Sessions.bench): on a 10^12-turn
     * graph whose entity universe outgrows executor memory the plan
     * degrades gracefully instead of OOMing.
     */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Gazetteer+regex mention detection and per-turn triple emission as pure
   * column expressions (whole-stage codegen; no UDFs, no RDDs).
   *
-  * Extraction contract (shared with [[OracleExtractor]], the independent
+  * Extraction contract (shared with OracleExtractor, the independent
   * test-side implementation used for the P/R >= 0.95 gate):
   *   1. normalize text (lowercase, punctuation/diacritic fold, space collapse)
   *   2. leftmost-longest non-overlapping gazetteer alias matches, in order
@@ -28,35 +28,12 @@ object Extractor {
   def normalizeCol(c: Column): Column =
     trim(regexp_replace(translate(lower(c), "üã", "ua"), "[^a-z0-9]+", " "))
 
-  private val aliasIdMap: Column =
-    typedlit(Gazetteer.aliasToId)
-
-  private val idTypeMap: Column =
-    typedlit(Gazetteer.byId.map { case (id, e) => id -> e.etype })
-
-  /** Ordered distinct canonical entity ids mentioned in a text column —
-    * reference implementation via regex + map lookup (kept because the
-    * DuckDB oracle twin can replay it verbatim).
-    */
-  def mentionIds(text: Column): Column =
-    array_distinct(transform(
-      regexp_extract_all(normalizeCol(text), lit(Gazetteer.pattern), lit(1)),
-      m => element_at(aliasIdMap, m)))
-
-  /** Production path: fused single-pass scanner expression (identical
-    * output, pinned by ExtractorSpec; ~O(len) and codegen-resident vs the
-    * interpreted regex/HOF pipeline).
+  /** Ordered distinct canonical entity ids mentioned in a text column:
+    * the fused single-pass scanner expression (~O(len), codegen-resident;
+    * its regex/HOF twin lives with the tests, pinned by ExtractorSpec).
     */
   def mentionIdsFast(text: Column): Column = GazetteerMentions(text)
 
-  /** turns(conv_id, turn_idx, role, text, tool, ts) ->
-    * triples(conv_id, turn_idx, subj, pred, obj), deterministic per-turn order.
-    *
-    * Repartitioning by hashed conv_id + intra-partition sort pins a stable
-    * emission order regardless of input layout (north-rule per-row invariant);
-    * skew on hot conv_ids is bounded because extraction is per-row (map-only,
-    * no shuffle after the repartition) and AQE handles downstream joins.
-    */
   /** SFT training-pair extraction from the transcripts table — the
     * instruction-tuning view of the engine's primary input: every
     * assistant turn pairs with the NEAREST PRECEDING user turn of its
@@ -80,63 +57,23 @@ object Extractor {
         col("__prompt").as("prompt"), col("text").as("response"))
   }
 
+  /** turns(conv_id, turn_idx, role, text, tool, ts) ->
+    * triples(conv_id, turn_idx, subj, pred, obj), deterministic per-turn order.
+    *
+    * Repartitioning by hashed conv_id + intra-partition sort pins a stable
+    * emission order regardless of input layout (north-rule per-row invariant);
+    * skew on hot conv_ids is bounded because extraction is per-row (map-only,
+    * no shuffle after the repartition) and AQE handles downstream joins.
+    */
   def triples(turns: DataFrame, repartitionBy: Option[Int] = None): DataFrame = {
-    val base = reorder(turns, repartitionBy)
+    val base = repartitionBy match {
+      case Some(n) => turns.repartition(n, col("conv_id")).sortWithinPartitions("conv_id", "turn_idx")
+      case None    => turns
+    }
     // fused path: one expression call per turn + one codegen'd explode
     base
       .withColumn("triple", explode(ExtractTriples(
         col("text"), col("conv_id"), col("role"), col("tool"))))
-      .select(
-        col("conv_id"), col("turn_idx"),
-        col("triple.subj").as("subj"),
-        col("triple.pred").as("pred"),
-        col("triple.obj").as("obj"))
-  }
-
-  private def reorder(turns: DataFrame, repartitionBy: Option[Int]): DataFrame =
-    repartitionBy match {
-      case Some(n) => turns.repartition(n, col("conv_id")).sortWithinPartitions("conv_id", "turn_idx")
-      case None    => turns
-    }
-
-  /** Composed column-expression variant (regex + HOFs) — semantically
-    * identical (pinned by ExtractorSpec); retained as the cross-check
-    * implementation and for engines without the custom expressions.
-    */
-  def triplesComposed(turns: DataFrame, repartitionBy: Option[Int] = None): DataFrame = {
-    val base = reorder(turns, repartitionBy)
-    val ents = mentionIds(col("text"))
-
-    val withEnts = base.withColumn("ents", ents)
-
-    val typeTriples = transform(col("ents"), e =>
-      struct(e.as("subj"), lit("rdf:type").as("pred"), element_at(idTypeMap, e).as("obj")))
-
-    val k = size(col("ents"))
-    val relTriples = zip_with(
-      slice(col("ents"), lit(1), greatest(k - 1, lit(0))),
-      slice(col("ents"), lit(2), greatest(k - 1, lit(0))),
-      (a, b) => struct(
-        a.as("subj"),
-        concat(lit("d:rel_"), lower(element_at(idTypeMap, a)), lit("_"), lower(element_at(idTypeMap, b))).as("pred"),
-        b.as("obj")))
-
-    val discusses = when(k > 0,
-      array(struct(
-        concat(lit("conv:"), col("conv_id")).as("subj"),
-        lit("d:discusses").as("pred"),
-        element_at(col("ents"), 1).as("obj"))))
-      .otherwise(array().cast("array<struct<subj:string,pred:string,obj:string>>"))
-
-    val used = when(col("role") === "tool" && col("tool") =!= "",
-      array(struct(
-        concat(lit("conv:"), col("conv_id")).as("subj"),
-        lit("d:used").as("pred"),
-        concat(lit("tool:"), col("tool")).as("obj"))))
-      .otherwise(array().cast("array<struct<subj:string,pred:string,obj:string>>"))
-
-    withEnts
-      .withColumn("triple", explode(concat(typeTriples, relTriples, discusses, used)))
       .select(
         col("conv_id"), col("turn_idx"),
         col("triple.subj").as("subj"),

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array: normalization writes into a thread-local buffer, the trie is a
   * flat int array, matched entity ids are pre-interned UTF8Strings.
   *
-  * Matching contract is IDENTICAL to Extractor.mentionIds (regex) and
+  * Matching contract is IDENTICAL to the regex twin (Twins.mentionIds) and
   * OracleExtractor.mentions (word scanner); three-way equivalence pinned by
   * ExtractorSpec.
   */

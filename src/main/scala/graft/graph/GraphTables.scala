@@ -31,11 +31,6 @@ object GraphTables {
       .distinct()
       .select(xxh64_hex(col("surface")).as("vhash"), col("surface"))
 
-  /** Predicate dictionary: distinct (lhash, surface). */
-  def predicates(triples: DataFrame): DataFrame =
-    triples.select(col("pred").as("surface")).distinct()
-      .select(xxh64_hex(col("surface")).as("lhash"), col("surface"))
-
   /** Dense-int vertex encoding (lodcc S11, `edgelist.py:108-148`).
     * The reference uses insertion order; we pin a deterministic lexicographic
     * order instead (documented deviation — the ids are only group keys).
@@ -95,27 +90,6 @@ object GraphTables {
       .join(ids.withColumnRenamed("vhash", "src").withColumnRenamed("vid", "src_id"), "src")
       .join(ids.withColumnRenamed("vhash", "dst").withColumnRenamed("vid", "dst_id"), "dst")
       .select(col("src_id"), col("dst_id"), col("label"))
-
-  /** lodcc edgelist text interop (S5/S7): one line per edge,
-    * "src dst label" space-separated — byte-compatible with
-    * `data.edgelist.csv` (`edgelist.py:79-83` / `builder.py:30-57`).
-    */
-  def writeEdgelist(edges: DataFrame, path: String): Unit =
-    edges.select(concat_ws(" ", col("src"), col("dst"), col("label")).as("value"))
-      .write.mode("overwrite").text(path)
-
-  def readEdgelist(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .select(split(col("value"), " ").as("t"))
-      .select(
-        element_at(col("t"), 1).as("src"),
-        element_at(col("t"), 2).as("dst"),
-        element_at(col("t"), 3).as("label"))
-
-  /** Symmetrized (undirected-view) edges, lodcc `core_measures.py:74-76`. */
-  def undirected(edges: DataFrame): DataFrame =
-    edges.select("src", "dst")
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
 
   /** Simple undirected edge set: dedup + drop self loops, canonical a<b. */
   def simpleUndirected(edges: DataFrame): DataFrame =

@@ -33,6 +33,8 @@ class TableIO(spark: SparkSession, root: String) {
 
   private def manifestPath(table: String) = new Path(s"$root/$table/_manifest.json")
 
+  private def dataDir(table: String, id: Long) = s"$root/$table/snap-$id/data"
+
   private def parseManifest(s: String): Option[Snapshot] = {
     def field(k: String): Option[String] =
       s"""\"$k\"\\s*:\\s*(\"([^\"]*)\"|[0-9]+)""".r.findFirstMatchIn(s)
@@ -59,7 +61,7 @@ class TableIO(spark: SparkSession, root: String) {
   def read(table: String): DataFrame = {
     val snap = latest(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for table '$table'"))
-    spark.read.parquet(s"$root/$table/snap-${snap.id}/data")
+    spark.read.parquet(dataDir(table, snap.id))
   }
 
   def readLineage(table: String): DataFrame = {
@@ -79,8 +81,7 @@ class TableIO(spark: SparkSession, root: String) {
     val t0 = System.nanoTime()
     val data = df
     val id = latest(table).map(_.id + 1).getOrElse(0L)
-    val dataDir = s"$root/$table/snap-$id/data"
-    data.write.mode("overwrite").parquet(dataDir)
+    data.write.mode("overwrite").parquet(dataDir(table, id))
     val wallMs = (System.nanoTime() - t0) / 1000000
 
     // one lineage row per written part file, its row count read from the
@@ -89,7 +90,7 @@ class TableIO(spark: SparkSession, root: String) {
     // are legitimate (Spark writes no file for an empty partition), and a
     // zero-row file (the one an empty result still writes) gets no row.
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new Path(dataDir))
+    val files = fs.listStatus(new Path(dataDir(table, id)))
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     val perFile = files.toSeq.map { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
@@ -119,7 +120,8 @@ class TableIO(spark: SparkSession, root: String) {
   /** Resume-or-compute: if `table` already has a committed snapshot produced
     * from `inputSnapshot`, read it (skip the stage); otherwise run `compute`
     * and commit the result. This is the per-stage checkpoint/resume contract
-    * of the north rule.
+    * of the north rule. A fresh commit is read back with the schema of the
+    * DataFrame just written, so no schema-inference job runs.
     */
   def resumeOrCompute(table: String, stage: String, inputSnapshot: String)
                      (compute: => DataFrame): DataFrame =
@@ -127,8 +129,9 @@ class TableIO(spark: SparkSession, root: String) {
       case Some(snap) if snap.inputSnapshot == inputSnapshot && snap.stage == stage =>
         read(table)
       case _ =>
-        commit(table, compute, stage, inputSnapshot)
-        read(table)
+        lazy val data = compute
+        val snap = commit(table, data, stage, inputSnapshot)
+        spark.read.schema(data.schema).parquet(dataDir(table, snap.id))
     }
 
   /** [[commit]] with a TARGET OUTPUT-FILE SIZE: the write goes through

@@ -185,7 +185,7 @@ object Dedup {
     *
     * MAP-ONLY: the shingle set, its hashes, and all k minima are computed
     * as array expressions inside one projection — the composed twin
-    * ([[minhashSignaturesComposed]]) pays a distinct shuffle plus a
+    * (in the tests) pays a distinct shuffle plus a
     * coeff-crossJoin-groupBy shuffle for the same result. Documents with
     * no shingle (shorter than shingleK tokens) emit no rows, matching the
     * composed path.
@@ -226,28 +226,6 @@ object Dedup {
     // the filter condition — one full extra hashing pass per row per plan
     // branch (the sf0.1 plan audit showed exactly that)
     hashed.select(col("id"), sigs.as("mhs"))
-  }
-
-  /** Composed-operator twin of [[minhashSignatures]] (cross-check). */
-  def minhashSignaturesComposed(docs: DataFrame, idCol: String, textCol: String,
-                                shingleK: Int): DataFrame = {
-    val sh = TextOps.shingles(docs, idCol, textCol, shingleK)
-      .select(col(idCol).as("id"), TextOps.portableHash31(col("shingle")).as("h"))
-      .distinct()
-    val coeffs = MinhashCoeffs.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }
-      .toDF_(docs)
-    sh.crossJoin(broadcast(coeffs))
-      .withColumn("hv", (col("a") * col("h") + col("b")) % MinhashPrime)
-      .groupBy("id", "i").agg(min("hv").as("mh"))
-  }
-
-  private implicit class SeqOps(private val s: Seq[(Int, Long, Long)]) {
-    def toDF_(ref: DataFrame): DataFrame = {
-      val spark = ref.sparkSession
-      import spark.implicits._
-      s.toDF("i", "a", "b")
-    }
   }
 
   /** LSH candidate pairs: band signatures of `rowsPerBand` minhashes; two

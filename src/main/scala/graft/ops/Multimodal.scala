@@ -54,13 +54,6 @@ object Multimodal {
       }
   }
 
-  /** Column-only metadata (no decode): cheap pushdown-friendly projection. */
-  def byteMeta(media: DataFrame): DataFrame =
-    media.select(
-      col("media_id"),
-      octet_length(col("payload")).cast("long").as("byte_len"),
-      col("payload").getItem(0).cast("int").bitwiseAND(lit(255)).as("first_byte"))
-
   /** Frame sampling for video/audio-shaped payloads: treat the payload as a
     * sequence of fixed `frameSize`-byte frames and emit every `stride`-th
     * COMPLETE frame as its own row (media_id, frame_idx, frame). Pure

@@ -28,7 +28,7 @@ object Similarity {
   /** Left-to-right dot product — same association order as DuckDB's
     * list_dot_product, so oracle values agree bit-for-bit. Backed by the
     * native codegen'd [[graft.functions.DotProduct]] expression: the HOF
-    * formulation ([[dotHof]]) is semantically identical but its lambdas run
+    * formulation (its test twin) is semantically identical but its lambdas run
     * interpreted outside whole-stage codegen, which dominated the embedding
     * dedup/ANN hot paths.
     */
@@ -36,10 +36,6 @@ object Similarity {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.DotProduct(Bridge.expression(a), Bridge.expression(b)))
   }
-
-  /** Reference HOF formulation of [[dot]], kept as the cross-check twin. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   def l2(a: Column): Column = sqrt(dot(a, a))
 
@@ -62,39 +58,18 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
   }
 
-  /** Deterministic integer hyperplane weight for (plane p, dim d):
-    * ((p*37 + d*11) mod 13) - 6 in [-6, 6]. Integer weights make the dot
-    * product exact enough that sign decisions are engine-portable.
-    */
-  def planeWeight(p: Column, d: Column): Column =
-    ((p * 37 + d * 11) % 13 - 6).cast("double")
-
   /** Sign-LSH bucket id (0..2^planes-1) per vector. Map-only: the native
     * codegen'd [[graft.functions.SignLshBucket]] expression computes every
     * plane's sign in one fused loop — the composed explode/HOF/groupBy
-    * formulation ([[lshBucketComposed]]) costs a shuffle per bucket pass.
+    * formulation (its test twin) costs a shuffle per bucket pass. The
+    * hyperplane weights are integers, ((p*37 + d*11) mod 13) - 6 for plane p
+    * and dim d, so sign decisions are engine-portable.
     */
   def lshBucket(embs: DataFrame, idCol: String, vecCol: String, planes: Int): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     embs.select(col(idCol).as("id"),
       Bridge.column(graft.functions.SignLshBucket(
         Bridge.expression(toDoubleVec(col(vecCol))), planes)).as("bucket"))
-  }
-
-  /** Composed-operator twin of [[lshBucket]], kept as the cross-check. */
-  def lshBucketComposed(embs: DataFrame, idCol: String, vecCol: String, planes: Int): DataFrame = {
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    val withPlane = e.select(col("id"), col("v"),
-      explode(sequence(lit(0), lit(planes - 1))).as("p"))
-    val dotted = withPlane.withColumn("dp",
-      aggregate(
-        zip_with(col("v"), sequence(lit(0), size(col("v")) - 1),
-          (x, d) => x * planeWeight(col("p"), d)),
-        lit(0.0), (acc, x) => acc + x))
-    dotted
-      .withColumn("bit",
-        when(col("dp") > 0, expr("shiftleft(CAST(1 AS BIGINT), p)")).otherwise(lit(0L)))
-      .groupBy("id").agg(sum("bit").as("bucket"))
   }
 
   /** Bucketed ANN: exact cosine only within the query's LSH bucket — the

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Explicit skew handling for hot keys (north rule: hot conv_ids at
   * 10^12-turn scale). AQE's skew-join splitting covers joins; these
-  * utilities cover aggregations and explicit salted repartitioning inside
-  * iterative kernels, where AQE cannot help.
+  * utilities cover aggregations, and salted joins inside iterative kernels,
+  * where AQE cannot help.
   */
 object Skew {
 
@@ -61,17 +61,5 @@ object Skew {
     val r = right.withColumn("__salt",
       explode(sequence(lit(0L), lit(saltBuckets - 1L))))
     l.join(r, Seq(keyCol, "__salt")).drop("__salt")
-  }
-
-  /** Repartition with a salt column appended to the key, so a hot key's rows
-    * spread over `saltBuckets` partitions instead of one. Use for map-heavy
-    * stages (e.g. extraction over a conversation with millions of turns).
-    */
-  def saltedRepartition(df: DataFrame, numPartitions: Int, key: Column,
-                        saltBuckets: Int): DataFrame = {
-    val salt = pmod(xxhash64(monotonically_increasing_id()), lit(saltBuckets))
-    df.withColumn("__salt", salt)
-      .repartition(numPartitions, key, col("__salt"))
-      .drop("__salt")
   }
 }

@@ -68,7 +68,7 @@ object TextOps {
   def simhash(docs: DataFrame, idCol: String, textCol: String,
               bits: Int = 60): DataFrame = {
     require(bits >= 1 && bits <= 60, "portableHash64 provides 60 hash bits")
-    // native codegen'd one-pass kernel: the composed twin ([[simhashComposed]])
+    // native codegen'd one-pass kernel: the composed twin (in the tests)
     // explodes tokens x bits rows (a 60x blow-up) through two shuffled
     // aggregations; this is map-only and bit-exact with it (the md5-prefix
     // hash convention is shared, so the DuckDB oracle twin still matches)
@@ -76,21 +76,6 @@ object TextOps {
     docs.select(col(idCol),
       Bridge.column(graft.functions.PortableSimHash(
         Bridge.expression(tokens(col(textCol))), bits)).as("simhash"))
-  }
-
-  /** Composed-operator twin of [[simhash]], kept as the cross-check. */
-  def simhashComposed(docs: DataFrame, idCol: String, textCol: String,
-                      bits: Int = 60): DataFrame = {
-    val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .withColumn("h",
-        if (bits <= 31) portableHash31(col("tok")) else portableHash64(col("tok")))
-    val bcols = toks.select(col(idCol), col("h"),
-      explode(sequence(lit(0), lit(bits - 1))).as("j"))
-      .withColumn("contrib", expr("(shiftright(h, j) & 1) * 2 - 1"))
-    bcols.groupBy(idCol, "j").agg(sum("contrib").as("s"))
-      .withColumn("bit",
-        when(col("s") > 0, expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)))
-      .groupBy(idCol).agg(sum("bit").as("simhash"))
   }
 
   /** Legacy 16-bit SimHash (kept for API compatibility; prefer [[simhash]]

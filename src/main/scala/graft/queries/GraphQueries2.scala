@@ -82,7 +82,11 @@ object GraphQueries2 {
   )
 
   /** Shared compact-forward triangle CTE chain (simple undirected graph,
-    * degree-ordered orientation, triangle list + per-vertex counts).
+    * degree-ordered orientation, triangle list + per-vertex counts). The
+    * wedge-closing edge is an inner join on `oriented (lo, hi)`: `simple`
+    * holds each unordered pair once, so that key is unique and the join is
+    * a semi-join (a correlated EXISTS there exhausts DuckDB's temp space at
+    * sf0.1).
     */
   private val triCte: String =
     s"""$edgesCte,
@@ -96,11 +100,10 @@ object GraphQueries2 {
        |         CASE WHEN (da.d, s.a) < (db.d, s.b) THEN db.d ELSE da.d END AS dhi
        |  FROM simple s JOIN sdeg da ON da.v = s.a JOIN sdeg db ON db.v = s.b),
        |tri AS (
-       |  SELECT w.u, w.v, w.w FROM (
-       |    SELECT e1.lo AS u, e1.hi AS v, e2.hi AS w
-       |    FROM oriented e1 JOIN oriented e2
-       |      ON e1.lo = e2.lo AND (e1.dhi, e1.hi) < (e2.dhi, e2.hi)) w
-       |  WHERE EXISTS (SELECT 1 FROM oriented o WHERE o.lo = w.v AND o.hi = w.w)),
+       |  SELECT e1.lo AS u, e1.hi AS v, e2.hi AS w
+       |  FROM oriented e1 JOIN oriented e2
+       |    ON e1.lo = e2.lo AND (e1.dhi, e1.hi) < (e2.dhi, e2.hi)
+       |  JOIN oriented o ON o.lo = e1.hi AND o.hi = e2.hi),
        |pv AS (SELECT vv AS v, CAST(count(*) AS BIGINT) AS t FROM (
        |         SELECT u AS vv FROM tri UNION ALL SELECT v FROM tri UNION ALL SELECT w FROM tri) q
        |       GROUP BY vv)""".stripMargin

@@ -1,15 +1,14 @@
 package graft.sampling
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sampling operators (SURVEY.md §2.8).
   *
   * SA1 edge sampling: lodcc samples n*k edges uniformly without replacement,
   * k in linspace(0.05, 0.5, 10) (`sample_edgelist_weighted.py:9-79`) —
-  * `edges.sample(fraction, seed)` is the distributed equivalent. A
-  * deterministic hash-mod variant is provided for cross-engine reproducible
-  * tests (seeded RNG streams differ between engines).
+  * `edges.sample(fraction, seed)` is the distributed equivalent; the rate
+  * sweep draws once per edge from a salted hash, so its samples nest.
   *
   * SA2 vertex sampling: uniform vertex subset -> induced subgraph via two
   * semi-joins (`sample_vertices_data.graph.gt.gz.py:9-36`).
@@ -19,12 +18,6 @@ object Sampling {
   /** SA1: uniform edge sample without replacement. */
   def edgeSample(edges: DataFrame, fraction: Double, seed: Long): DataFrame =
     edges.sample(withReplacement = false, fraction, seed)
-
-  /** Deterministic hash-mod edge sample: keeps rows where
-    * xxhash64(cols) mod 100 < percent. Engine-portable and stable.
-    */
-  def edgeSampleDeterministic(edges: DataFrame, percent: Int, cols: Column*): DataFrame =
-    edges.where(pmod(xxhash64(cols: _*), lit(100)) < percent)
 
   /** SA2: sample vertices at `fraction`, return the induced subgraph
     * (both endpoints sampled) via two left-semi joins.
@@ -38,14 +31,6 @@ object Sampling {
       .join(vs.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
       .join(vs.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
       .select("src", "dst", "label")
-  }
-
-  /** Deterministic induced subgraph: vertex kept iff xxhash64(v) mod 100 <
-    * percent — reproducible across engines for the oracle twin.
-    */
-  def vertexInducedDeterministic(edges: DataFrame, percent: Int): DataFrame = {
-    val keep = (c: Column) => pmod(xxhash64(c), lit(100)) < percent
-    edges.where(keep(col("src")) && keep(col("dst")))
   }
 
   /** The reference's sampling task sweeps k over linspace(0.05, 0.5, 10)
@@ -63,14 +48,4 @@ object Sampling {
     val withDraw = edges.withColumn("__draw", draw)
     rates.map(k => k -> withDraw.where(col("__draw") < k).drop("__draw"))
   }
-
-  /** Rate-sweep sink mirroring the reference's `<dataset>-sampled-<k>/`
-    * layout: one parquet dir per rate under `baseDir`.
-    */
-  def writeSampleSweep(edges: DataFrame, baseDir: String,
-                       rates: Seq[Double] = (1 to 10).map(i => 0.05 * i),
-                       seed: Long = 42L): Unit =
-    edgeSampleSweep(edges, rates, seed).foreach { case (k, df) =>
-      df.write.mode("overwrite").parquet(f"$baseDir-sampled-$k%.2f")
-    }
 }

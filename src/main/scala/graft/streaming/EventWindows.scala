@@ -29,17 +29,6 @@ object EventWindows {
   def tumblingCounts(spark: SparkSession, dir: String, glob: String = "events.parquet",
                      windowSec: Int = 300): DataFrame = {
     val name = "evwin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // the file stream source monitors a DIRECTORY; select the events file(s)
-    // within it via pathGlobFilter
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    val agg = stream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), s"$windowSec seconds"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .select(
-        unix_timestamp(col("window.start")).as("win_start"),
-        col("event_type"), col("n"), round(col("sum_value"), 6).as("sum_value"))
     // state-store partitioning tracks the session's core budget, not the
     // batch shuffle-partition setting: the streaming agg creates one state
     // store (RocksDB/HDFS dir, maintenance thread, per-batch task) per
@@ -47,22 +36,29 @@ object EventWindows {
     // coalesces streaming stages — at 128 static partitions every
     // microbatch of this bounded replay scheduled 128 mostly-empty
     // stateful tasks. Scale-adaptive (defaultParallelism = the session's
-    // cores), not a local-mode constant; restored after the drain so batch
-    // queries keep the session setting.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
-    try {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start() // clones the session conf; the drain below runs on the clone
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set(key, prev) // batch queries keep the session setting
-    }
-    spark.table(name)
+    // cores), not a local-mode constant. The stream runs in a child session
+    // (same SparkContext, SQL conf from the context's, temp views of its
+    // own), so the caller's session keeps its setting; the memory sink's
+    // table lives in the child.
+    val child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toString)
+    // the file stream source monitors a DIRECTORY; select the events file(s)
+    // within it via pathGlobFilter
+    val agg = child.readStream.schema(eventsSchema)
+      .option("pathGlobFilter", glob).parquet(dir)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), s"$windowSec seconds"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
+      .select(
+        unix_timestamp(col("window.start")).as("win_start"),
+        col("event_type"), col("n"), round(col("sum_value"), 6).as("sum_value"))
+    val q = agg.writeStream
+      .outputMode("complete")
+      .format("memory")
+      .queryName(name)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    child.table(name)
   }
 
   /** Production streaming shape — APPEND mode with watermark-driven state

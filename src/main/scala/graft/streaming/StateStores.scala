@@ -31,9 +31,6 @@ object StateStores {
     */
   def useRocksDb(spark: SparkSession): Unit = spark.conf.set(Key, RocksDbProvider)
 
-  /** Revert to Spark's default (HDFS-backed, on-heap) provider. */
-  def useDefault(spark: SparkSession): Unit = spark.conf.unset(Key)
-
   /** Run `body` with RocksDB state for queries started inside it, restoring
     * the prior provider setting afterwards.
     */

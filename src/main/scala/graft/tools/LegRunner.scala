@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One scaling-evidence leg, run in ITS OWN JVM (spawned by [[graft.Bench]]
   * via taskset-pinned `java`) — the local-mode analog of "a cluster with
   * `cores` total cores":
@@ -31,25 +29,7 @@ object LegRunner {
     val runs = args(3).toInt
     val inputPath = args(4)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-leg-$job-$cores")
-      .config("spark.sql.shuffle.partitions", (4 * cores).toString)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hub-vertex skew (hot conversations / ubiquitous entities): let AQE
-      // split skewed join partitions at sizes this leg actually sees — the
-      // bench graph's hottest u-group is ~3.2M of 61.7M pairs, far below
-      // the 256 MB default threshold (see ConnectedComponents.dedupPairs)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.start(s"graft-leg-$job-$cores", graft.Sessions.bench(cores))
 
     def once(): Long = job match {
       case "ext" =>

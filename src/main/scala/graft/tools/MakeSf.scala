@@ -76,14 +76,7 @@ object MakeSf {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dstDir = if (args.length > 1) args(1) else "/tmp/graft-testdata/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-make-sf")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Sessions.start("graft-make-sf", graft.Sessions.base("local[32]", 32))
     new java.io.File(dstDir).mkdirs()
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

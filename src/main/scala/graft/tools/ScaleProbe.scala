@@ -24,27 +24,13 @@ import org.apache.spark.sql.functions._
   * IDENTICAL text, which multiplies every duplicate cluster by 10 — the
   * exact stress the signature-collapse guard exists for.
   *
-  * Protocol: min of 2 passes per (query, scale), same session config as the
-  * Bench query suite (local[32], 128 shuffle partitions, AQE on).
+  * Protocol: min of 2 passes per (query, scale), in the Bench session shape
+  * ([[graft.Sessions.bench]]) at `SPARK_GRAFT_CPUS` cores.
   */
 object ScaleProbe {
 
-  private def session(): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def session(): SparkSession =
+    graft.Sessions.startBench("graft-scale-probe", graft.Sessions.cpus())
 
   /** 10 vertex-disjoint replicas of the kg gate graph (see
     * [[graft.queries.QueryUtil.liEdges]]: vertex space 4096, 7 labels).

@@ -70,7 +70,7 @@ class ExtractorSpec extends AnyFunSuite {
     val ds = Transcripts.generate(spark, nConvs = 80, partitions = 4).cache()
     val both = ds.toDF().select(
       org.apache.spark.sql.functions.col("text"),
-      Extractor.mentionIds(org.apache.spark.sql.functions.col("text")).as("slow"),
+      Twins.mentionIds(org.apache.spark.sql.functions.col("text")).as("slow"),
       Extractor.mentionIdsFast(org.apache.spark.sql.functions.col("text")).as("fast"))
       .collect()
     both.foreach { r =>
@@ -88,7 +88,7 @@ class ExtractorSpec extends AnyFunSuite {
       "NEW YORK new york New-York", "sao paulo São Paulo")
     val out = tricky.toDF("text").select(
       org.apache.spark.sql.functions.col("text"),
-      Extractor.mentionIds(org.apache.spark.sql.functions.col("text")).as("slow"),
+      Twins.mentionIds(org.apache.spark.sql.functions.col("text")).as("slow"),
       Extractor.mentionIdsFast(org.apache.spark.sql.functions.col("text")).as("fast"))
       .collect()
     out.foreach { r =>
@@ -114,7 +114,7 @@ class ExtractorSpec extends AnyFunSuite {
     val ds = Transcripts.generate(spark, nConvs = 60, partitions = 4).cache()
     val fused = Extractor.triples(ds.toDF(), Some(3)).as[Triple].collect()
       .groupBy(t => (t.conv_id, t.turn_idx)).map { case (k, v) => k -> v.toSeq }
-    val composed = Extractor.triplesComposed(ds.toDF(), Some(3)).as[Triple].collect()
+    val composed = Twins.triplesComposed(ds.toDF(), Some(3)).as[Triple].collect()
       .groupBy(t => (t.conv_id, t.turn_idx)).map { case (k, v) => k -> v.toSeq }
     assert(fused == composed)
   }

@@ -135,7 +135,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       // drain the async listener bus deterministically (same contract as
       // PlanSpec's zero-job gates; a fixed sleep can miss late task-end
       // events under load and under-count one side of the comparison)
-      try { body; org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext) }
+      try { body; org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(l)
       n.get
     }

@@ -172,7 +172,7 @@ class OpsSpec extends AnyFunSuite {
   test("map-only minhash signatures == composed distinct/crossJoin/groupBy twin") {
     val native = Dedup.minhashSignatures(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val composed = Dedup.minhashSignaturesComposed(docs, "doc_id", "text", 3)
+    val composed = Twins.minhashSignaturesComposed(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(native == composed) // incl. doc 5 ("tiny"): no shingles, no rows
     assert(!native.exists(_._1 == 5L))
@@ -243,7 +243,7 @@ class OpsSpec extends AnyFunSuite {
     for (bits <- Seq(16, 60)) {
       val native = TextOps.simhash(corpus, "doc_id", "text", bits)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val composed = TextOps.simhashComposed(corpus, "doc_id", "text", bits)
+      val composed = Twins.simhashComposed(corpus, "doc_id", "text", bits)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(native == composed, s"bits=$bits")
     }
@@ -489,7 +489,7 @@ class OpsSpec extends AnyFunSuite {
         Array.tabulate(16)(d => math.sin(i * d + 1.0)),
         Array.tabulate(16)(d => math.cos(i - d * 1.0)))
     }.toDF("id", "a", "b")
-    df.select(Similarity.dot($"a", $"b").as("n"), Similarity.dotHof($"a", $"b").as("h"))
+    df.select(Similarity.dot($"a", $"b").as("n"), Twins.dotHof($"a", $"b").as("h"))
       .collect().foreach(r => assert(r.getDouble(0) == r.getDouble(1))) // bit-exact
     // empty arrays -> 0.0 (the HOF's aggregate zero)
     val z = Seq((Array.empty[Double], Array.empty[Double])).toDF("a", "b")
@@ -509,7 +509,7 @@ class OpsSpec extends AnyFunSuite {
     for (planes <- Seq(1, 4, 8)) {
       val native = Similarity.lshBucket(embs, "vec_id", "embedding", planes)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val composed = Similarity.lshBucketComposed(embs, "vec_id", "embedding", planes)
+      val composed = Twins.lshBucketComposed(embs, "vec_id", "embedding", planes)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(native == composed, s"planes=$planes")
       assert(native.values.forall(b => b >= 0 && b < (1L << planes)))

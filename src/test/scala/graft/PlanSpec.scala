@@ -185,7 +185,7 @@ class PlanSpec extends AnyFunSuite {
       graft.ops.Dedup.simhashPairs(docs, "doc_id", "text", 3)
       // drain the async listener bus deterministically (ADVICE r3: a fixed
       // sleep could miss late-posted events under load)
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -223,7 +223,7 @@ class PlanSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val plan = try {
       val p = planOf(graft.ops.Dedup.tfidfCosinePairs(docs, "doc_id", "text", 0.5))
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} Spark job(s)")
       p
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -352,7 +352,7 @@ class PlanSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val plan = try {
       val p = planOf(graft.graph.GraphTables.negativeSamples(it, n))
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} Spark job(s)")
       p
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -387,7 +387,7 @@ class PlanSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val plan = try {
       val p = planOf(graft.ops.TextOps.unigramLogProb(docs, "doc_id", "text"))
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} Spark job(s)")
       p
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -422,7 +422,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = try {
       val p = planOf(graft.ops.Dsir.importanceWeights(
         d, "doc_id", "text", col("lang") === "en", buckets = 16))
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} Spark job(s)")
       p
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -436,5 +436,30 @@ class PlanSpec extends AnyFunSuite {
     // partial_ aggregates before the exchange = map-side combine is on
     assert(plan.contains("partial_"), plan.take(1200))
     assert(!plan.contains("Join"), plan.take(1200))
+  }
+
+  test("Probe: one JSON line per query with both passes, position, jobs and exchanges") {
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    graft.tools.Probe.run(spark, sf, Seq("kg_basic", "doc_minhash_lsh"),
+      stages = true, plan = true, out = lines += _)
+    def field(line: String, k: String): Double =
+      ("\"" + k + "\":(-?[0-9.]+)").r.findFirstMatchIn(line).get.group(1).toDouble
+    val json = lines.filter(_.startsWith("{\"query\":"))
+    assert(json.size == 2)
+    assert(json(0).startsWith("{\"query\":\"kg_basic\"") &&
+      json(1).startsWith("{\"query\":\"doc_minhash_lsh\""))
+    json.foreach { l =>
+      assert(field(l, "pass1") > 0 && field(l, "pass2") > 0, l)
+      assert(field(l, "min2") == math.min(field(l, "pass1"), field(l, "pass2")), l)
+      assert(field(l, "jobs") >= 1 && field(l, "exchanges") >= 0, l)
+    }
+    // kg_basic's result is collected while its plan is built (a local
+    // relation, no exchange); the LSH join shuffles
+    assert(field(json(1), "exchanges") >= 1, json(1))
+    assert(field(json(1), "pos") == field(json(0), "pos") + 1)
+    assert(lines.contains("==== doc_minhash_lsh: stages of pass1 ===="))
+    assert(lines.exists(_.startsWith("[sum stage wall:")))
+    assert(lines.contains("==== kg_basic: plan ====") &&
+      lines.exists(_.contains("== Physical Plan ==")))
   }
 }

@@ -4,15 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  spark.sparkContext.setLogLevel("ERROR")
+  lazy val spark: SparkSession = Sessions.start("graft-test", Sessions.base("local[4]", 4))
 
   /** A child session (same SparkContext, own SQL conf) without AQE or
     * broadcast joins, where one Spark action is one job: AQE runs every
@@ -34,7 +26,7 @@ object SparkTestSession {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext) }
+    try { body; org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
     jobs.get()
   }

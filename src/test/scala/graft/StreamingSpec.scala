@@ -103,6 +103,37 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("tumblingCounts streams in a child session: the caller's conf never changes, counts exact") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import graft.streaming.EventWindows
+    val key = "spark.sql.shuffle.partitions"
+    val caller = spark.newSession()
+    caller.conf.set(key, "7")
+    val dir = java.nio.file.Files.createTempDirectory("graft-evwin").toString
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    caller.createDataFrame((0 until 200).map(i =>
+      (i.toLong, new java.sql.Timestamp(t0 + i * 17000L), i % 5L,
+        Seq("view", "click")(i % 2), i * 0.5, "{}")))
+      .toDF(EventWindows.eventsSchema.fieldNames.toIndexedSeq: _*)
+      .write.mode("overwrite").parquet(dir)
+    // the caller's conf is read while the stream runs: a session that is
+    // reconfigured for the stream shows it to every concurrent query
+    val seen = scala.collection.mutable.Set.empty[String]
+    val run = Future(EventWindows.tumblingCounts(caller, dir, glob = "part-*").collect())
+    while (!run.isCompleted) { seen += caller.conf.get(key); Thread.sleep(1) }
+    val streamed = Await.result(run, 2.minutes)
+    assert(seen == Set("7") && caller.conf.get(key) == "7", seen)
+    val batch = caller.read.parquet(dir)
+      .groupBy(window($"ts", "300 seconds"), $"event_type")
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
+      .select(unix_timestamp($"window.start").as("win_start"), $"event_type", $"n",
+        round($"sum_value", 6).as("sum_value"))
+      .collect()
+    assert(streamed.length == batch.length && streamed.toSet == batch.toSet)
+  }
+
   test("streaming funnel: state advances across batches, equals the batch funnel") {
     import graft.streaming.StreamingFunnel
     import graft.ops.EventOps

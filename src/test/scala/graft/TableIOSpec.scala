@@ -82,6 +82,28 @@ class TableIOSpec extends AnyFunSuite {
     assert(jobs <= 2, s"commit started $jobs Spark jobs")
   }
 
+  test("resumeOrCompute of a fresh table starts no jobs beyond its commit (no schema inference)") {
+    val io = new TableIO(spark, freshRoot())
+    val df = spark.range(0, 1000, 1, 4).toDF()
+    val commitJobs = SparkTestSession.jobsDuring(io.commit("committed", df, "s", "in@0"))
+    val resumeJobs = SparkTestSession.jobsDuring(io.resumeOrCompute("computed", "s", "in@0")(df))
+    assert(resumeJobs == commitJobs, s"commit: $commitJobs jobs, resumeOrCompute: $resumeJobs")
+  }
+
+  test("resumeOrCompute returns the schema a read of the committed table infers, nullability included") {
+    import org.apache.spark.sql.functions.{array, struct}
+    val io = new TableIO(spark, freshRoot())
+    // non-nullable top-level, array-element and struct-field types
+    val df = spark.range(0, 10, 1, 2)
+      .select($"id", array($"id", $"id" + 1).as("arr"), struct($"id".as("x")).as("st"))
+    assert(!df.schema("id").nullable)
+    val fresh = io.resumeOrCompute("t", "s", "in@0")(df)
+    val resumed = io.resumeOrCompute("t", "s", "in@0")(df)
+    assert(fresh.schema == io.read("t").schema)
+    assert(resumed.schema == fresh.schema)
+    assert(fresh.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+  }
+
   test("orphan snapshot dir (simulated kill) does not corrupt reads") {
     val root = freshRoot()
     val io = new TableIO(spark, root)
