@@ -9,17 +9,17 @@ import org.apache.spark.sql.functions._
   * per dataset, `graph/measures/` — betweenness is the standard one its
   * graph-tool backend offers that the engine lacked).
   *
-  * Forward pass: one multi-source BFS fixpoint keyed (seed, vertex) where
-  * each frontier row carries sigma = #shortest paths from its seed — the
-  * level join aggregates predecessor sigmas map-side before the exchange,
-  * so k seeds cost max-eccentricity rounds total, shuffle volume bounded by
-  * the per-level DAG fan-out (never |V|^2).
+  * Forward pass: one multi-source BFS ([[Fixpoint.levels]]) keyed (seed,
+  * vertex) where each frontier row carries sigma = #shortest paths from its
+  * seed — the level join aggregates predecessor sigmas map-side before the
+  * exchange, so k seeds cost max-eccentricity rounds total, shuffle volume
+  * bounded by the per-level DAG fan-out (never |V|^2).
   *
-  * Backward pass: Brandes' dependency accumulation by DESCENDING level.
-  * Every shortest-path predecessor of a dist-d vertex sits at dist d-1, so
-  * delta(v) is complete after processing level dist(v)+1 — maxDist joins
-  * total (2-4 on the dense bench graphs), each a (seed, vertex) equi-join
-  * with lazy lineage truncation, materialized by the caller's single action.
+  * Backward pass: Brandes' dependency accumulation by DESCENDING level, a
+  * [[Fixpoint.fixed]] loop. Every shortest-path predecessor of a dist-d
+  * vertex sits at dist d-1, so delta(v) is complete after processing level
+  * dist(v)+1 — maxDist joins total (2-4 on the dense bench graphs), each a
+  * (seed, vertex) equi-join.
   *
   * bc(v) = sum over seeds s != v of delta_s(v); exact for the sampled seed
   * set (no approximation beyond the sampling itself).
@@ -29,35 +29,21 @@ object Betweenness {
   /** Forward sigma pass: (seed, vertex, dist, sigma) over distinct directed
     * edges; sigma = #shortest seed->vertex paths (double: parity with the
     * oracle's division, and counts exceed Long on dense DAGs long before
-    * they lose integer precision in a double).
+    * they lose integer precision in a double). Its last level reached
+    * nothing, so the greatest dist is `rounds - 1`.
     */
-  def sigmaForward(dedupedEdges: DataFrame, seeds: Seq[String]): DataFrame = {
+  private def sigmaForward(dedupedEdges: DataFrame, seeds: Seq[String]): Fixpoint.Result = {
     val spark = dedupedEdges.sparkSession
     import spark.implicits._
-    var visited = seeds.map(s => (s, s, 0L, 1.0))
-      .toDF("seed", "vertex", "dist", "sigma").localCheckpoint(true)
-    var frontier = visited.select("seed", "vertex", "sigma")
-    var level = 0L
-    var frontierCount = seeds.size.toLong
-    while (frontierCount > 0) {
-      level += 1
-      val next = dedupedEdges
+    val start = seeds.map(s => (s, s, 0L, 1.0)).toDF("seed", "vertex", "dist", "sigma")
+    Fixpoint.levels("Betweenness forward", start) { (frontier, visited, level) =>
+      dedupedEdges
         .join(frontier, dedupedEdges("src") === frontier("vertex"))
-        .groupBy(col("seed"), col("dst"))
+        .groupBy(col("seed"), col("dst").as("vertex"))
         .agg(sum("sigma").as("sigma"))
-        .withColumnRenamed("dst", "vertex")
         .join(visited.select("seed", "vertex"), Seq("seed", "vertex"), "left_anti")
-        .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
-      frontierCount = next.count()
-      if (frontierCount > 0) {
-        visited = visited
-          .union(next.select(col("seed"), col("vertex"), lit(level).as("dist"),
-            col("sigma")))
-          .localCheckpoint(false)
-        frontier = next.select("seed", "vertex", "sigma")
-      }
+        .select(col("seed"), col("vertex"), lit(level.toLong).as("dist"), col("sigma"))
     }
-    visited
   }
 
   /** Sampled betweenness from `seeds`: (vertex, betweenness, n_seeds)
@@ -66,18 +52,17 @@ object Betweenness {
     */
   def run(edges: DataFrame, seeds: Seq[String],
           assumeDistinct: Boolean = false): DataFrame = {
-    // eager row-format checkpoints instead of columnar persists: the sigma
-    // loop and the DAG build re-read these frames every level, and the
-    // checkpoint read is a plain cached-block scan at the AQE-coalesced
-    // partitioning; `assumeDistinct` skips re-deduplicating an edge set the
+    // the sigma loop and the DAG build re-read these frames every level;
+    // `assumeDistinct` skips re-deduplicating an edge set the
     // caller already deduplicated (dedup here is a perf guard, not a
     // semantic step — sigma counts are over the distinct edge set either
     // way, which is why mis-declaring would matter: only callers that KNOW
     // the set is distinct pass true)
     val sel = edges.select("src", "dst")
     val de = (if (assumeDistinct) sel else sel.distinct()).localCheckpoint(true)
-    val vis = sigmaForward(de, seeds).localCheckpoint(true)
-    val maxD = vis.agg(max("dist")).head().getLong(0)
+    val forward = sigmaForward(de, seeds)
+    val vis = forward.state
+    val maxD = math.max(0, forward.rounds - 1)
 
     // shortest-path DAG edges per seed: (seed, v, w) with dist(w)=dist(v)+1;
     // explicit plan aliases — both sides derive from `vis`, so bare column
@@ -95,10 +80,14 @@ object Betweenness {
 
     val spark = edges.sparkSession
     import spark.implicits._
-    var delta = Seq.empty[(String, String, Double)]
-      .toDF("seed", "vertex", "delta")
-    var d = maxD
-    while (d >= 1) {
+    // levels maxD .. 1; every 8th level is checkpointed eagerly, so a
+    // high-diameter graph (chains, road networks) never accumulates an
+    // unboundedly deep join chain inside one job (on the bench graphs maxD
+    // is 3-4 and no eager level fires)
+    val delta = Fixpoint.fixed("Betweenness backward",
+        Seq.empty[(String, String, Double)].toDF("seed", "vertex", "delta"), maxD,
+        eagerEvery = 8) { (delta, r) =>
+      val d = maxD - r + 1
       // successors w at dist d with their (already final) deltas
       val wd = vis.where(col("dist") === d)
         .join(delta.withColumnRenamed("delta", "delta_w"),
@@ -110,20 +99,11 @@ object Betweenness {
         .groupBy(col("seed"), col("v").as("vertex"))
         .agg(sum(col("sigma_v") / col("sigma_w") * (lit(1.0) + col("delta_w")))
           .as("delta"))
-      // lazy checkpoint: truncates the per-level lineage; all levels
-      // materialize in the caller's single action. Every 8th level the
-      // checkpoint is EAGER so a high-diameter graph (chains, road
-      // networks) never accumulates an unboundedly deep join chain inside
-      // one plan (the discipline written up in ConnectedComponents; on the
-      // bench graphs maxD is 3-4 and the eager branch never fires).
-      delta = delta.union(contrib.select("seed", "vertex", "delta"))
-        .localCheckpoint((maxD - d) % 8 == 7)
-      d -= 1
+      delta.union(contrib.select("seed", "vertex", "delta"))
     }
-    val out = delta.where(col("vertex") =!= col("seed"))
+    delta.where(col("vertex") =!= col("seed"))
       .groupBy("vertex")
       .agg(round(sum("delta"), 6).as("betweenness"),
         count(lit(1)).cast("bigint").as("n_seeds"))
-    out.localCheckpoint() // run while the checkpointed inputs are live
   }
 }

@@ -7,17 +7,14 @@ import org.apache.spark.sql.functions._
   * (lodcc `edge_based.py:15-32` via graph-tool `pseudo_diameter`).
   *
   * Each BFS level is one hash join frontier-vs-edges plus an anti-join
-  * against the visited set; lineage truncated per level. Directed traversal
+  * against the visited set, a [[Fixpoint.levels]] round. Directed traversal
   * (graph-tool respects edge direction on directed graphs).
   *
   * The adjacency prep (dedup + eager localCheckpoint) is hoisted into
   * [[prepareAdj]] so that (a) callers whose edge set is ALREADY distinct
   * pass `assumeDistinct = true` and skip a full re-dedup exchange of the
   * edge table, and (b) [[pseudoDiameter]] pays the prep once for all its
-  * sweeps instead of once per sweep. The checkpoint is a row-format cache
-  * at the AQE-coalesced partitioning — every level re-reads it, and the
-  * old columnar `persist` paid a decode per level at the static shuffle
-  * partition count.
+  * sweeps instead of once per sweep.
   */
 object Bfs {
 
@@ -42,7 +39,7 @@ object Bfs {
   def distancesOnAdj(adj: DataFrame, source: String): DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
-    levels(adj, Seq((source, 0L)).toDF("vertex", "dist"), 1L)
+    levels(adj, Seq((source, 0L)).toDF("vertex", "dist"))
   }
 
   /** Directed BFS distances from a SET of sources in ONE fixpoint: the
@@ -57,35 +54,21 @@ object Bfs {
     val adj = prepareAdj(edges, assumeDistinct)
     val spark = adj.sparkSession
     import spark.implicits._
-    levels(adj, seeds.map(s => (s, s, 0L)).toDF("seed", "vertex", "dist"), seeds.size.toLong)
+    levels(adj, seeds.map(s => (s, s, 0L)).toDF("seed", "vertex", "dist"))
   }
 
-  /** The BFS level loop from `start` ([seed,] vertex, dist = 0) holding
-    * `n0` rows: each level joins the frontier with `adj` and anti-joins the
-    * visited set on the key columns. One action per level: the frontier's
-    * checkpoint is lazy and its count materializes it; the visited union is
-    * lazy too, computed inside whichever job consumes it next (the next
-    * level's count, or the caller's action).
+  /** The BFS level loop from `start` ([seed,] vertex, dist = 0): each level
+    * joins the frontier with `adj` and anti-joins the visited set on the
+    * key columns.
     */
-  private def levels(adj: DataFrame, start: DataFrame, n0: Long): DataFrame = {
+  private def levels(adj: DataFrame, start: DataFrame): DataFrame = {
     val keys = start.columns.toSeq.filter(_ != "dist")
-    var visited = start.localCheckpoint(true)
-    var frontier = visited.select(keys.map(col): _*)
-    var level = 0L
-    var frontierCount = n0
-    while (frontierCount > 0) {
-      level += 1
-      val next = adj.join(frontier, adj("src") === frontier("vertex"))
+    Fixpoint.levels("BFS", start) { (frontier, visited, level) =>
+      adj.join(frontier, adj("src") === frontier("vertex"))
         .select(keys.init.map(col) :+ col("dst").as("vertex"): _*).distinct()
         .join(visited, keys, "left_anti")
-        .localCheckpoint(false)
-      frontierCount = next.count()
-      if (frontierCount > 0) {
-        visited = visited.union(next.withColumn("dist", lit(level))).localCheckpoint(false)
-        frontier = next
-      }
-    }
-    visited
+        .withColumn("dist", lit(level.toLong))
+    }.state
   }
 
   /** Farthest vertex from source: (vertex, dist); ties -> greatest vertex. */

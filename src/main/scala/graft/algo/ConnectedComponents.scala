@@ -105,6 +105,8 @@ object ConnectedComponents {
     * (measured, protocol runs 16 vs 17) while saving nothing — byte
     * savings only pay when the per-round shuffle volume dominates the
     * per-round job latency.
+    *
+    * Star rounds that have not converged after `maxIter` rounds throw.
     */
   def run(edges: DataFrame, maxIter: Int = 50,
           encodeMinVertices: Long = 500000L): DataFrame = {
@@ -114,21 +116,12 @@ object ConnectedComponents {
     // `edges` re-evaluated the caller's entire upstream plan once per
     // consumption of the result — for a caller whose edge table is an
     // expensive similarity chain (incremental canonicalization) that
-    // tripled the query
-    val allVsBase = edges
+    // tripled the query. |V| also sizes the per-round broadcast decision
+    // (BroadcastMaxVertices); the pin is coalesced at the star rounds'
+    // RowsPerPartition budget.
+    val (allVs, nV) = IterUtil.pinCounted(edges
       .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct() // one scan, not union-of-two-selects (halves input decode)
-      .localCheckpoint(true)
-
-    // the count scans the checkpoint blocks, not the caller's plan; |V|
-    // also sizes the per-round broadcast decision (BroadcastMaxVertices)
-    val nV = allVsBase.count()
-    // size-derived partition pin (IterUtil discipline): the checkpoint
-    // inherits the static shuffle partition count, so on the suite's small
-    // graphs every downstream join/fill stage schedules 128 near-empty
-    // tasks per scan; coalesce caps at the current count, so the big
-    // scaling-leg graphs are untouched
-    val allVs = sizeCoalesced(allVsBase, nV)
+      .distinct(), RowsPerPartition) // one scan, not union-of-two-selects
     if (numericVertices(edges)) return fill(allVs, fixpoint(edges, maxIter, nV))
     if (nV < encodeMinVertices) return fill(allVs, fixpoint(edges, maxIter, nV))
 
@@ -159,56 +152,47 @@ object ConnectedComponents {
     allVs.join(asSelf, Seq("vertex"), "left_outer")
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
 
-  /** Narrow coalesce of a materialized frame to `ceil(n / 64k)` partitions
-    * (never more than it already has). The budget is ROW-count based and
-    * deliberately finer than IterUtil's 4M-row default: a star round does
-    * real per-row join/aggregate compute (~µs/row), so a 64k-row partition
-    * carries ~50-100 ms of work — well above task-scheduling overhead but
-    * small enough that a mid-sized graph (10^5-10^6 pairs) still spreads
-    * across cores, where a single 4M-row budget serialized its rounds onto
-    * one task. Large graphs are untouched (the cap at the current count
-    * binds first).
+  /** Partition budget of the star rounds' state, in rows, finer than
+    * IterUtil's 4M-row default: a star round does real per-row
+    * join/aggregate compute (~µs/row), so a 64k-row partition carries
+    * ~50-100 ms of work — well above task-scheduling overhead but small
+    * enough that a mid-sized graph (10^5-10^6 pairs) still spreads across
+    * cores, where a single 4M-row budget serialized its rounds onto one
+    * task. Large graphs are untouched (the cap at the current count binds
+    * first).
     */
-  private def sizeCoalesced(df: DataFrame, n: Long): DataFrame = {
-    val cur = df.rdd.getNumPartitions
-    val p = math.max(1L, math.min(cur.toLong, n / 65536L + 1L)).toInt
-    if (p < cur) df.coalesce(p) else df
-  }
+  private val RowsPerPartition = 65536L
 
   /** Large-star/small-star fixpoint over vertices that appear in at least
     * one non-self-loop edge; returns (vertex, component = min reachable id
     * under the INPUT type's ordering).
     */
   private def fixpoint(edges: DataFrame, maxIter: Int, nVertices: Long): DataFrame = {
-    // working state between rounds is the CANONICAL pair set (a > b),
-    // checkpointed at half the rows of the symmetrized view
-    var canon = canonEdges(edges).localCheckpoint(true)
-    // round-0 pair count: one cheap job over the checkpointed blocks;
-    // later rounds reuse the signature job's count
-    var canonCount = canon.count()
-    canon = sizeCoalesced(canon, canonCount)
-
     // Broadcast the mins table only when the pair set DWARFS the vertex
     // universe: building + shipping a |V|-row hash relation is serial-ish
     // work at every parallelism (measured: it inflated the post-round-0
     // star rounds, whose pair set has collapsed to ~|V|, by 2x at 2
     // cores), so it pays only while it spares reshuffling a much larger
     // pair set (round 0 on a duplicate-heavy graph).
-    def maybeBc(mins: DataFrame): DataFrame =
-      if (nVertices <= BroadcastMaxVertices && canonCount >= 3 * nVertices)
+    def maybeBc(mins: DataFrame, pairCount: Long): DataFrame =
+      if (nVertices <= BroadcastMaxVertices && pairCount >= 3 * nVertices)
         broadcast(mins)
       else mins
 
-    var converged = false
-    var iter = 0
-    var prevSig: (Long, Long) = (-1L, -1L)
-    while (!converged && iter < maxIter) {
+    // The state between rounds is the CANONICAL pair set (a > b), at half
+    // the rows of the symmetrized view. The stop signature is its count
+    // plus the bitwise XOR of row hashes: the rows are distinct, so the
+    // XOR is a faithful set signature, and the canonical set determines
+    // the symmetrized one.
+    val sig = Seq(coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h"))
+    val star = Fixpoint.converge("CC", canonEdges(edges), maxIter, sig,
+        Some(RowsPerPartition)) { (canon, m) =>
       val pairs = expand(canon)
       // large-star: connect every neighbor v > u to m = min(N(u) u {u}).
       // Output invariant: a = v > u >= mn = b, so ls is canonical (a > b).
       val ls = {
         val mins = pairs.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("mn"))
-        pairs.join(maybeBc(mins), "u")
+        pairs.join(maybeBc(mins, m.getLong(0)), "u")
           .where(col("v") > col("u"))
           .select(col("v").as("a"), col("mn").as("b"))
           .where(col("a") =!= col("b"))
@@ -218,40 +202,18 @@ object ConnectedComponents {
       // Both branches keep the a > b invariant (b >= mn and a > b >= mn).
       val ss = {
         val mins = ls.groupBy("a").agg(min(col("b")).as("mn"))
-        ls.join(maybeBc(mins), "a")
+        ls.join(maybeBc(mins, m.getLong(0)), "a")
           .select(col("b").as("a"), col("mn").as("b"))
           .union(mins.select(col("a"), col("mn").as("b")))
           .where(col("a") =!= col("b"))
       }
-      // EAGER localCheckpoint — deliberately. A lazy checkpoint folded into
-      // the signature job looks like it saves a job launch, but `ls` feeds
-      // `ss` twice and `ss` feeds the dedup; with nothing materialized in
-      // between, the un-truncated branches recompute the round's shuffle
-      // tree 2-4x inside the one job (measured: round 1 on the 71M-edge
-      // bench table 56 s lazy vs 22 s eager at 8 cores). The extra
-      // signature job scans cached blocks and costs ~0.1 s.
-      // The round's ONE pair-set exchange is this dedup, on the skew-free
-      // canonical key with map-side partial aggregation (see canonEdges).
-      val next = ss.dropDuplicates("a", "b").localCheckpoint(true)
-
-      // overflow-free set signature: count + bitwise XOR of row hashes
-      // (rows are distinct, so XOR is a faithful multiset-free signature;
-      // the canonical set determines the symmetrized set, so this is the
-      // same convergence test as hashing both directions)
-      val sigRow = next.agg(
-        count(lit(1)).as("c"),
-        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h")).head()
-      val sig = (sigRow.getLong(0), sigRow.getLong(1))
-      converged = sig == prevSig
-      prevSig = sig
-      canonCount = sig._1
-      iter += 1
-      canon.unpersist(false)
-      canon = sizeCoalesced(next, canonCount)
-    }
-    // canon now the (member > root) star: component = min neighbor for
-    // members, self for roots — expand and take min over both directions
-    val comp = expand(canon)
+      // the round's ONE pair-set exchange is this dedup, on the skew-free
+      // canonical key with map-side partial aggregation (see canonEdges)
+      ss.dropDuplicates("a", "b")
+    }.orFail
+    // the (member > root) star: component = min neighbor for members, self
+    // for roots — expand and take min over both directions
+    val comp = expand(star)
       .groupBy(col("u").as("vertex")).agg(min(col("v")).as("component"))
     comp.select(
       col("vertex"),

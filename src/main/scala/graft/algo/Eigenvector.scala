@@ -23,7 +23,7 @@ object Eigenvector {
   private def iterate(edges: DataFrame, maxIter: Int, eps: Option[Double]): DataFrame = {
     val g = PowerIteration.setup(edges, lit(1.0), wsum = false)
     val init = g.vertices.withColumn("x", lit(1.0 / math.sqrt(g.n.toDouble)))
-    PowerIteration.iterate(g, init, maxIter, eps) { (b, x) =>
+    PowerIteration.iterate("Eigenvector", g, init, maxIter, eps) { (b, x) =>
       PowerIteration.normalize(PowerIteration.step(g.links, b, x, col("x")))
     }.withColumnRenamed("x", "ev")
   }

@@ -24,7 +24,7 @@ object Hits {
     val g = PowerIteration.setup(edges, lit(1.0), wsum = false)
     val x0 = lit(1.0 / math.sqrt(g.n.toDouble))
     val init = g.vertices.select(col("vertex"), x0.as("auth"), x0.as("hub"))
-    PowerIteration.iterate(g, init, iters, None) { (b, cur) =>
+    PowerIteration.iterate("HITS", g, init, iters, None) { (b, cur) =>
       val auth = PowerIteration.normalize(PowerIteration.step(g.links, b,
         cur.select(col("vertex"), col("hub").as("x")), col("x"))).localCheckpoint(false)
       val hub = PowerIteration.normalize(PowerIteration.step(g.links, b, auth, col("x"),

@@ -14,12 +14,10 @@ import graft.graph.GraphTables
   * degree-ordered compact-forward scheme ([[Triangles.enumerate]] over a
   * [[Triangles.orient]]ed edge set, wedge volume O(m^1.5) regardless of
   * hub skew), count per-edge support, drop edges below k-2, repeat to
-  * fixpoint. Removal-only peeling makes the edge COUNT a faithful
-  * convergence signature (equal count ⇔ equal set).
-  *
-  * Same loop discipline as the other fixpoints: localCheckpoint per round
-  * truncates lineage; per-round cost is one triangle enumeration + one
-  * (a, b)-keyed aggregation + one equi-join.
+  * fixpoint in a [[Fixpoint.converge]] loop. Removal-only peeling makes
+  * the edge COUNT a faithful convergence signature (equal count ⇔ equal
+  * set). Per-round cost is one triangle enumeration + one (a, b)-keyed
+  * aggregation + one equi-join.
   */
 object KTruss {
 
@@ -34,26 +32,23 @@ object KTruss {
     // orientation — the per-round re-simplification, degree aggregation
     // and two orientation joins the generic [[Triangles.triangles]] entry
     // pays are hoisted out of the loop. The orientation is REFRESHED from
-    // the CURRENT degrees whenever the edge set has at least halved since
-    // it was last computed: correctness never needs the refresh (the
-    // triangle set is orientation-invariant), but the wedge-volume bound
-    // Σ d_lo(oriented)² = O(m^1.5) only holds for the degrees of the graph
-    // being joined — a heavy peel leaves round-0 hubs mis-oriented and the
-    // sf1 probe measured the wedge join 3-4x over budget on the stale
-    // order. The halving rule is deterministic (a pure function of the
-    // materialized counts) and amortizes the re-orientation joins to
-    // O(log m) total.
-    var cur = Triangles.orient(GraphTables.simpleUndirected(edges)).localCheckpoint(false)
-    var prev = -1L
-    var cnt = cur.count()
-    var orientCnt = cnt
-    var round = 0
-    while (cnt != prev && round < maxRounds) {
-      prev = cnt
-      if (cnt * 2 <= orientCnt) {
-        cur = Triangles.orient(cur.select("a", "b")).localCheckpoint(true)
-        orientCnt = cnt
-      }
+    // the CURRENT degrees, inside the round, whenever the edge set has at
+    // least halved since it was last computed: correctness never needs the
+    // refresh (the triangle set is orientation-invariant), but the
+    // wedge-volume bound Σ d_lo(oriented)² = O(m^1.5) only holds for the
+    // degrees of the graph being joined — a heavy peel leaves round-0 hubs
+    // mis-oriented and the sf1 probe measured the wedge join 3-4x over
+    // budget on the stale order. The halving rule is deterministic (a pure
+    // function of the observed counts) and amortizes the re-orientation
+    // joins to O(log m) total.
+    var orientCnt = -1L // edge count when the orientation was computed
+    val init = Triangles.orient(GraphTables.simpleUndirected(edges)).withColumn("support", lit(0L))
+    Fixpoint.converge("KTruss", init, maxRounds) { (prev, m) =>
+      val cnt = m.getLong(0)
+      if (orientCnt < 0) orientCnt = cnt
+      val cur =
+        if (cnt * 2 > orientCnt) prev.drop("support")
+        else { orientCnt = cnt; Triangles.orient(prev.select("a", "b")) }
       // triangle members are (deg, id)-oriented — normalize each of the 3
       // edges back to the id-ordered (a, b) key of the edge set
       val sup = Triangles.enumerate(cur).select(explode(array(
@@ -65,25 +60,13 @@ object KTruss {
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
       // when the set stops changing, these supports were computed over
       // exactly the final set — no extra pass needed
-      cur = cur.drop("support").join(sup, Seq("a", "b"))
-        .where(col("support") >= k - 2)
-        .localCheckpoint(false) // lazy; IterUtil says what it runs under AQE
-      cnt = cur.count()
-      round += 1
-    }
-    // an unconverged exit would silently return a non-truss whose supports
-    // were computed over the PREVIOUS round's edge set — fail loudly instead
-    // (mirrors how the bench docs treat unconverged fixpoints)
-    if (cnt != prev)
-      throw new IllegalStateException(
-        s"k-truss peel did not converge in $maxRounds rounds " +
-          s"(edge count still moving: $prev -> $cnt); raise maxRounds")
-    cur.select(col("a"), col("b"), col("support")) // converged: >= 1 round ran
+      cur.join(sup, Seq("a", "b")).where(col("support") >= k - 2)
+    }.orFail.select(col("a"), col("b"), col("support"))
   }
 
   /** One-row truss summary, [[KCore.summary]]-shaped. */
   def summary(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
-    val t = run(edges, k, maxRounds) // already checkpointed by the loop
+    val t = run(edges, k, maxRounds) // the loop's last checkpoint
     val es = t.agg(
       count(lit(1)).cast("bigint").as("truss_edges"),
       coalesce(min("support").cast("bigint"), lit(0L)).as("min_support"),

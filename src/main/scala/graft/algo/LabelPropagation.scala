@@ -22,49 +22,46 @@ import org.apache.spark.sql.functions._
   * aggregation — count per (v, label), argmax per v via min(struct(-cnt,
   * label)) so the tie-break rides the same shuffle. Map-side partial
   * aggregation keeps the (v, label) key space bounded by the edge count;
-  * lineage is truncated per round with localCheckpoint, the same loop
-  * discipline as [[PageRank]] / [[KCore]]. At 100 TB this is the standard
+  * both variants are [[Fixpoint.fixed]] loops. At 100 TB this is the standard
   * semi-synchronous LPA shape: nothing wider than the edge list ever
   * shuffles, and hub vertices cost one combiner entry per distinct
   * neighbor label, not one row per neighbor.
   */
 object LabelPropagation {
 
-  /** (vertex, community) after `iters` synchronous rounds. */
-  def runFixed(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 0, "iters must be >= 0")
-    // symmetrize with ONE generator pass over the caller's edge plan (the
-    // two-branch union evaluated the upstream subtree twice); explode_outer
-    // for the same InferFiltersFromGenerate reason as ConnectedComponents
-    val nbrs = edges.where(col("src") =!= col("dst"))
+  /** (v, u) for each neighbor u of v in the raw edge list, both
+    * directions, self loops dropped: ONE generator pass over the caller's
+    * edge plan (a two-branch union evaluated the upstream subtree twice),
+    * `explode_outer` for the same InferFiltersFromGenerate reason as
+    * [[ConnectedComponents]]. Pinned: every round re-reads it.
+    */
+  private def neighbors(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
       .select(explode_outer(array(
           struct(col("src").as("v"), col("dst").as("u")),
           struct(col("dst").as("v"), col("src").as("u")))).as("e"))
       .select(col("e.v").as("v"), col("e.u").as("u"))
       .localCheckpoint(true)
-    val vertices = nbrs.select(col("v").as("vertex")).distinct()
 
-    // lazy per-round checkpoints (plans truncated per round) + one
-    // materializing count after the loop: no driver action per round
-    var labels = vertices.withColumn("community", col("vertex"))
-      .localCheckpoint(false)
-    (1 to iters).foreach { _ =>
-      val next = nbrs
-        .join(labels.withColumnRenamed("vertex", "u"), "u")
-        .groupBy(col("v"), col("community"))
-        .agg(count(lit(1)).as("cnt"))
-        // argmax(count) with min-label tie-break in ONE agg: the struct
-        // orders by (-cnt, label), so min picks highest count, then
-        // smallest label
-        .groupBy(col("v").as("vertex"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("community").as("l")))
-          .as("top"))
-        .select(col("vertex"), col("top.l").as("community"))
-        .localCheckpoint(false)
-      labels = next
+  /** (vertex, community) after `iters` synchronous rounds. */
+  def runFixed(edges: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 0, "iters must be >= 0")
+    val nbrs = neighbors(edges)
+    val vertices = nbrs.select(col("v").as("vertex")).distinct()
+    Fixpoint.fixed("LPA", vertices.withColumn("community", col("vertex")), iters) {
+      (labels, _) =>
+        nbrs
+          .join(labels.withColumnRenamed("vertex", "u"), "u")
+          .groupBy(col("v"), col("community"))
+          .agg(count(lit(1)).as("cnt"))
+          // argmax(count) with min-label tie-break in ONE agg: the struct
+          // orders by (-cnt, label), so min picks highest count, then
+          // smallest label
+          .groupBy(col("v").as("vertex"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("community").as("l")))
+            .as("top"))
+          .select(col("vertex"), col("top.l").as("community"))
     }
-    labels.count() // materialize the chain while the checkpoint is live
-    labels
   }
 
   /** Per-community sizes of [[runFixed]] — (community, size), the
@@ -87,39 +84,25 @@ object LabelPropagation {
     */
   def runSeededFixed(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    // symmetrize with ONE generator pass over the caller's edge plan (the
-    // two-branch union evaluated the upstream subtree twice); explode_outer
-    // for the same InferFiltersFromGenerate reason as ConnectedComponents
-    val nbrs = edges.where(col("src") =!= col("dst"))
-      .select(explode_outer(array(
-          struct(col("src").as("v"), col("dst").as("u")),
-          struct(col("dst").as("v"), col("src").as("u")))).as("e"))
-      .select(col("e.v").as("v"), col("e.u").as("u"))
-      .localCheckpoint(true)
+    val nbrs = neighbors(edges)
     // vertices and the clamped seed table are re-read every round
     val vertices = IterUtil.pin(nbrs.select(col("v").as("vertex")).distinct())
     val sd = IterUtil.pin(seeds.select(col("vertex"), col("label")))
-
-    // lazy checkpoints + one materializing count, as in [[runFixed]]
-    var labels = vertices.join(sd, Seq("vertex"), "left_outer")
-      .localCheckpoint(false)
-    (1 to iters).foreach { _ =>
-      val prop = nbrs
-        .join(labels.select(col("vertex").as("u"), col("label").as("ul")), "u")
-        .where(col("ul").isNotNull)
-        .groupBy(col("v"), col("ul"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v").as("vertex"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("ul").as("l"))).as("top"))
-        .select(col("vertex"), col("top.l").as("prop_label"))
-      labels = vertices
-        .join(sd, Seq("vertex"), "left_outer")
-        .join(prop, Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          coalesce(col("label"), col("prop_label")).as("label"))
-        .localCheckpoint(false)
+    Fixpoint.fixed("Seeded LPA", vertices.join(sd, Seq("vertex"), "left_outer"), iters) {
+      (labels, _) =>
+        val prop = nbrs
+          .join(labels.select(col("vertex").as("u"), col("label").as("ul")), "u")
+          .where(col("ul").isNotNull)
+          .groupBy(col("v"), col("ul"))
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy(col("v").as("vertex"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("ul").as("l"))).as("top"))
+          .select(col("vertex"), col("top.l").as("prop_label"))
+        vertices
+          .join(sd, Seq("vertex"), "left_outer")
+          .join(prop, Seq("vertex"), "left_outer")
+          .select(col("vertex"),
+            coalesce(col("label"), col("prop_label")).as("label"))
     }
-    labels.count() // materialize the chain while the checkpoints are live
-    labels
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * with multiplicity, dangling vertices contribute nothing.
   *
   * Every variant is a [[PowerIteration]] over a pinned (src, dst, w, wsum)
-  * link table: one shuffle join per iteration, lineage truncated per round.
+  * link table: one shuffle join per iteration.
   */
 object PageRank {
 
@@ -63,10 +63,10 @@ object PageRank {
   private def iterate(edges: DataFrame, w: Column, base: Column, damping: Double,
                       maxIter: Int, eps: Option[Double]): DataFrame = {
     val g = PowerIteration.setup(edges, w, wsum = true)
-    PowerIteration.iterate(g, g.vertices.select(col("vertex"), base.as("x")), maxIter, eps) {
-      (b, x) =>
-        PowerIteration.step(g.links, b, x, col("x") * col("w") / col("wsum"))
-          .withColumn("x", base + lit(damping) * col("s")).drop("s")
+    val init = g.vertices.select(col("vertex"), base.as("x"))
+    PowerIteration.iterate("PageRank", g, init, maxIter, eps) { (b, x) =>
+      PowerIteration.step(g.links, b, x, col("x") * col("w") / col("wsum"))
+        .withColumn("x", base + lit(damping) * col("s")).drop("s")
     }.withColumnRenamed("x", "rank")
   }
 

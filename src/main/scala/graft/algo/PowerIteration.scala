@@ -6,15 +6,8 @@ import org.apache.spark.sql.functions._
 /** The power iteration behind [[PageRank]], [[Eigenvector]] and [[Hits]]:
   * each round propagates a per-vertex value `x` along the links,
   * s(v) = Σ_{(u,v)} contrib(x(u), link), and maps s to the next x (an affine
-  * PageRank update, or an L2 normalisation).
-  *
-  * Loop state is lazily checkpointed every round: the round's plan is
-  * truncated to a LogicalRDD at once, and the loop itself takes no driver
-  * action per round. A fixed number of rounds ends in ONE count; the
-  * convergent loop runs one L1-delta aggregate per round, which also
-  * materializes that round's checkpoint. Where one action is one job (no
-  * AQE, no broadcast joins) those are the only loop jobs; with AQE, planning
-  * a round's checkpoint also runs its shuffle stages as jobs of their own.
+  * PageRank update, or an L2 normalisation). A fixed round count is a
+  * [[Fixpoint.fixed]] loop, an eps stop a [[Fixpoint.converge]] loop.
   */
 private[algo] object PowerIteration {
 
@@ -62,35 +55,27 @@ private[algo] object PowerIteration {
       .drop("s", "nrm")
   }
 
-  /** Runs `round(base, x)` from `init` and returns the last x.
+  /** Runs `kernel`'s `round(base, x)` from `init` and returns the last x.
     *
-    * `eps = None`: exactly `maxIter` rounds with `base` = the vertex set,
-    * materialized by one count after the loop, while the pinned inputs live.
+    * `eps = None`: exactly `maxIter` rounds with `base` = the vertex set.
     *
     * `eps = Some(e)`: rounds until the L1 delta is at most e, or x is all
     * zeros (a fixed point of every propagation), or `maxIter` rounds ran.
     * `base` is x renamed to `prev`, so each round's frame carries prev and
-    * the delta is read in the same job that computes the round.
+    * the delta is observed in the job that computes the round. A result at
+    * `maxIter` is returned as it stands: it is the defined approximation
+    * (graph-tool's `max_iter`), not a failure.
     */
-  def iterate(g: Graph, init: DataFrame, maxIter: Int, eps: Option[Double])(
-      round: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    var x = init.localCheckpoint(false)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < maxIter && eps.forall(delta > _)) {
-      x = eps match {
-        case None => round(g.vertices, x).localCheckpoint(false)
-        case Some(_) =>
-          val next = round(x.withColumnRenamed("x", "prev"), x).localCheckpoint(false)
-          val r = next.agg(
-            coalesce(sum(abs(col("x") - col("prev"))), lit(0.0)),
-            coalesce(max(abs(col("x"))), lit(0.0))).head()
-          delta = if (r.getDouble(1) == 0.0) 0.0 else r.getDouble(0)
-          next.select("vertex", "x")
-      }
-      iter += 1
-    }
-    if (eps.isEmpty) x.count()
-    x
+  def iterate(kernel: String, g: Graph, init: DataFrame, maxIter: Int, eps: Option[Double])(
+      round: (DataFrame, DataFrame) => DataFrame): DataFrame = eps match {
+    case None => Fixpoint.fixed(kernel, init, maxIter)((x, _) => round(g.vertices, x))
+    case Some(e) =>
+      val delta = Seq(coalesce(sum(abs(col("x") - col("prev"))), lit(0.0)).as("delta"),
+        coalesce(max(abs(col("x"))), lit(0.0)).as("xmax"))
+      Fixpoint.converge(kernel, init.withColumn("prev", col("x")), maxIter, delta,
+          stop = (_, m) => m.getDouble(2) == 0.0 || m.getDouble(1) <= e) { (cur, _) =>
+        val x = cur.select("vertex", "x")
+        round(x.withColumnRenamed("x", "prev"), x)
+      }.state.select("vertex", "x")
   }
 }

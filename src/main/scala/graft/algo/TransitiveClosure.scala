@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * and 200 shuffles on a 200-deep chain. Per-round shuffle volume is
   * bounded by |closure| x avg out-fanout; the min() re-aggregation keeps
   * the frame at one row per reachable pair. Convergence = (row count,
-  * dist sum) stable; both are read by the one aggregate per round that
-  * materializes the round's checkpoint.
+  * dist sum) stable, observed in the [[Fixpoint.converge]] round's job.
   */
 object TransitiveClosure {
 
@@ -24,46 +23,20 @@ object TransitiveClosure {
     * closure.
     */
   def minDist(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    // per-round state rides the IterUtil partition budget: the lazy
-    // checkpoint inherits the static shuffle partition count, so on a
-    // small hierarchy every round's join + re-aggregation scheduled 128
-    // near-empty tasks per side; coalescing to a size-derived count
-    // (capped at the current count — closures that outgrow one partition
-    // keep their parallelism) cuts the per-round overhead to one task
-    def pinned(df: DataFrame, n: Long): DataFrame = {
-      val cur = df.rdd.getNumPartitions
-      val p = math.max(1L, math.min(cur.toLong, n / 4000000L + 1L)).toInt
-      if (p < cur) df.coalesce(p) else df
-    }
-    var r = edges.select(col("src"), col("dst"), lit(1L).as("dist"))
+    // the state is coalesced at IterUtil's 4M-row budget: on a small
+    // hierarchy every round's join + re-aggregation otherwise scheduled
+    // 128 near-empty tasks per side
+    val init = edges.select(col("src"), col("dst"), lit(1L).as("dist"))
       .where(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(min("dist").as("dist"))
-      .localCheckpoint(false)
-    def state(df: DataFrame): (Long, Long) = {
-      val row = df.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    var cur = state(r) // materializes the checkpoint
-    r = pinned(r, cur._1)
-    var prev = (-1L, -1L)
-    var rounds = 0
-    while (cur != prev) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"transitive closure did not converge in $maxRounds doubling rounds")
-      rounds += 1
+    Fixpoint.converge("TC", init, maxRounds, Seq(coalesce(sum("dist"), lit(0L)).as("s")),
+        Some(4000000L)) { (r, _) =>
       val a = r.select(col("src"), col("dst").as("mid"), col("dist").as("d1"))
       val b = r.select(col("src").as("mid"), col("dst"), col("dist").as("d2"))
       val hop = a.join(b, "mid")
         .select(col("src"), col("dst"), (col("d1") + col("d2")).as("dist"))
         .where(col("src") =!= col("dst"))
-      val next = r.union(hop)
-        .groupBy("src", "dst").agg(min("dist").as("dist"))
-        .localCheckpoint(false)
-      prev = cur
-      cur = state(next)
-      r = pinned(next, cur._1)
-    }
-    r
+      r.union(hop).groupBy("src", "dst").agg(min("dist").as("dist"))
+    }.orFail
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-committed table storage with per-partition lineage — Iceberg-
   * shaped semantics (snapshot ids, atomic manifest swap, resume from last
@@ -58,17 +59,34 @@ class TableIO(spark: SparkSession, root: String) {
     }
   }
 
-  def read(table: String): DataFrame = {
+  def read(table: String): DataFrame = readSnapshot(table, "data")
+
+  def readLineage(table: String): DataFrame = readSnapshot(table, "lineage")
+
+  /** One part of the committed snapshot of `table`, read with the Spark
+    * schema its writer stored in a part file's footer, so no
+    * schema-inference job runs (a footer without it falls back to
+    * inference).
+    */
+  private def readSnapshot(table: String, part: String): DataFrame = {
     val snap = latest(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for table '$table'"))
-    spark.read.parquet(dataDir(table, snap.id))
+    val dir = s"$root/$table/snap-${snap.id}/$part"
+    val schema = partFiles(dir).headOption.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema).parquet(dir)
   }
 
-  def readLineage(table: String): DataFrame = {
-    val snap = latest(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for table '$table'"))
-    spark.read.parquet(s"$root/$table/snap-${snap.id}/lineage")
-  }
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** The parquet part files a write left in `dir`. */
+  private def partFiles(dir: String) =
+    fs.listStatus(new Path(dir)).toSeq.filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
 
   /** Write df as the next snapshot of `table` with per-file lineage rows
     * (stage, partition id, input snapshot, row count, wall ms), then
@@ -89,10 +107,7 @@ class TableIO(spark: SparkSession, root: String) {
     // partition_id is the writer's own part number from the file name; gaps
     // are legitimate (Spark writes no file for an empty partition), and a
     // zero-row file (the one an empty result still writes) gets no row.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new Path(dataDir(table, id)))
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    val perFile = files.toSeq.map { f =>
+    val perFile = partFiles(dataDir(table, id)).map { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       val rows = try reader.getRecordCount finally reader.close()
       ("part-(\\d+)".r.findFirstMatchIn(f.getPath.getName).map(_.group(1).toInt), rows)
@@ -120,8 +135,8 @@ class TableIO(spark: SparkSession, root: String) {
   /** Resume-or-compute: if `table` already has a committed snapshot produced
     * from `inputSnapshot`, read it (skip the stage); otherwise run `compute`
     * and commit the result. This is the per-stage checkpoint/resume contract
-    * of the north rule. A fresh commit is read back with the schema of the
-    * DataFrame just written, so no schema-inference job runs.
+    * of the north rule. Either way the table is read back through
+    * [[read]].
     */
   def resumeOrCompute(table: String, stage: String, inputSnapshot: String)
                      (compute: => DataFrame): DataFrame =
@@ -129,9 +144,8 @@ class TableIO(spark: SparkSession, root: String) {
       case Some(snap) if snap.inputSnapshot == inputSnapshot && snap.stage == stage =>
         read(table)
       case _ =>
-        lazy val data = compute
-        val snap = commit(table, data, stage, inputSnapshot)
-        spark.read.schema(data.schema).parquet(dataDir(table, snap.id))
+        commit(table, compute, stage, inputSnapshot)
+        read(table)
     }
 
   /** [[commit]] with a TARGET OUTPUT-FILE SIZE: the write goes through

@@ -162,7 +162,10 @@ class GraphAlgoSpec extends AnyFunSuite {
       "PageRank.runWeightedFixed" -> (k => PageRank.runWeightedFixed(w, "w", k)),
       "PageRank.runPersonalizedFixed" -> (k => PageRank.runPersonalizedFixed(e, Seq("v1"), k)),
       "Eigenvector.runFixed" -> (k => Eigenvector.runFixed(e, k)),
-      "Hits.runFixed" -> (k => graft.algo.Hits.runFixed(e, k))).foreach { case (name, run) =>
+      "Hits.runFixed" -> (k => graft.algo.Hits.runFixed(e, k)),
+      "LabelPropagation.runFixed" -> (k => LabelPropagation.runFixed(e, k)),
+      "LabelPropagation.runSeededFixed" -> (k => LabelPropagation.runSeededFixed(e,
+        one.createDataFrame(Seq(("v1", "A"))).toDF("vertex", "label"), k))).foreach { case (name, run) =>
       assert(jobs(run(2)) == jobs(run(8)), name)
     }
     val setup = jobs(PageRank.run(e, eps = 0.0, maxIter = 0))
@@ -173,6 +176,45 @@ class GraphAlgoSpec extends AnyFunSuite {
       val path = one.createDataFrame((0 until l).map(i => (s"a$i", s"a${i + 1}"))).toDF("src", "dst")
       assert(jobs(Bfs.distances(path, "a0")) == 2 + l + 1, s"distances, L=$l")
       assert(jobs(Bfs.multiSourceDistances(path, Seq("a0"))) == 2 + l + 1, s"multi, L=$l")
+    }
+  }
+
+  test("job counts: converge and level loops run one job per round after setup") {
+    // each round's jobs carry "<kernel> round <r>" as their call site; the
+    // other jobs (setup, round 0, the fixed-round materialization) must not
+    // depend on the round count
+    val one = SparkTestSession.oneJobPerAction
+    def df(es: Seq[(String, String)]) = one.createDataFrame(es).toDF("src", "dst")
+    def path(n: Int) = df((0 until n).map(i => (s"a$i", s"a${i + 1}")))
+    def cycle(n: Int) = df((0 until n).map(i => (s"c$i", s"c${(i + 1) % n}")))
+    def grid(n: Int) = df(for {
+      i <- 0 until n; j <- 0 until n
+      (di, dj) <- Seq((1, 0), (0, 1), (1, 1)) if i + di < n && j + dj < n
+    } yield (s"g$i.$j", s"g${i + di}.${j + dj}"))
+    def pendant(n: Int) = df(Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+      ("c", "d")) ++ (0 until n).map(i => (if (i == 0) "d" else s"t$i", s"t${i + 1}")))
+    // Betweenness stays under 8 levels, where its backward loop starts an
+    // eager checkpoint
+    Seq[(String, Seq[String], Int, Int => Any)](
+      ("CC", Seq("CC"), 9, n => ConnectedComponents.run(path(n)).collect()),
+      ("KCore", Seq("KCore"), 9, n => KCore.kCore(pendant(n), 2).collect()),
+      ("KTruss", Seq("KTruss"), 9, n => graft.algo.KTruss.run(grid(n), 4).collect()),
+      ("TC", Seq("TC"), 9, n => graft.algo.TransitiveClosure.minDist(path(n)).collect()),
+      ("SCC", Seq("SCC color", "SCC mark"), 9, n => Scc.run(cycle(n)).collect()),
+      ("Betweenness", Seq("Betweenness forward"), 6,
+        n => graft.algo.Betweenness.run(path(n), Seq("a0")).collect())
+    ).foreach { case (name, kernels, largeN, run) =>
+      def split(n: Int): (Seq[Int], Int) = {
+        val sites = SparkTestSession.jobSitesDuring(run(n))
+        val rounds = kernels.flatMap(k => sites.filter(s => s.startsWith(s"$k round ") &&
+          s != s"$k round 0").groupBy(identity).values.map(_.size))
+        (rounds, sites.size - rounds.sum)
+      }
+      val (small, setupSmall) = split(3)
+      val (large, setupLarge) = split(largeN)
+      assert(large.size > small.size, s"$name: ${small.size} -> ${large.size} rounds")
+      assert((small ++ large).forall(_ == 1), s"$name: jobs per round $small, $large")
+      assert(setupSmall == setupLarge, s"$name: setup $setupSmall -> $setupLarge jobs")
     }
   }
 

@@ -19,15 +19,21 @@ object SparkTestSession {
   }
 
   /** Spark jobs started while `body` runs. */
-  def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  def jobsDuring(body: => Unit): Int = jobSitesDuring(body).size
+
+  /** The short call site of each Spark job started while `body` runs, in
+    * start order ("" where none was set).
+    */
+  def jobSitesDuring(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        sites.add(Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+          .getOrElse(""))
     }
     spark.sparkContext.addSparkListener(l)
     try { body; org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
+    scala.jdk.CollectionConverters.IterableHasAsScala(sites).asScala.toSeq
   }
 }

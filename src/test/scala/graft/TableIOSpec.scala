@@ -104,6 +104,23 @@ class TableIOSpec extends AnyFunSuite {
     assert(fresh.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
   }
 
+  test("read and readLineage start no jobs; their schemas equal the inferred ones, nullability included") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array, struct}
+    val root = freshRoot()
+    val io = new TableIO(spark, root)
+    val df = spark.range(0, 10, 1, 2)
+      .select($"id", array($"id", $"id" + 1).as("arr"), struct($"id".as("x")).as("st"))
+    io.commit("t", df, "s", "in@0")
+    Seq[(String, () => DataFrame)]("data" -> (() => io.read("t")),
+        "lineage" -> (() => io.readLineage("t"))).foreach { case (part, read) =>
+      var got: DataFrame = null
+      assert(SparkTestSession.jobsDuring { got = read() } == 0, part)
+      assert(got.schema == spark.read.parquet(s"$root/t/snap-0/$part").schema, part)
+      assert(got.count() == (if (part == "data") 10 else 2), part)
+    }
+  }
+
   test("orphan snapshot dir (simulated kill) does not corrupt reads") {
     val root = freshRoot()
     val io = new TableIO(spark, root)
