@@ -342,10 +342,10 @@ object Pipeline {
           println(s"  $t: snap=${s.id} rows=${s.rowCount} wall_ms=${s.wallMs} input=${s.inputSnapshot}")
         }
       case None =>
-        val turns = graft.io.Transcripts.generate(spark, nConvs).toDF().cache()
+        val (turns, nt) = Pin.pin(graft.io.Transcripts.generate(spark, nConvs).toDF(), budget = None)
         val (triples, edges) = build(turns)
-        val e = edges.cache()
-        println(s"turns=${turns.count()} triples=${triples.count()} edges=${e.count()}")
+        val (e, ne) = Pin.pin(edges, budget = None)
+        println(s"turns=${nt.getLong(0)} triples=${triples.count()} edges=${ne.getLong(0)}")
         measures(e).orderBy("measure").show(60, truncate = false)
     }
     spark.stop()

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Source-sampled betweenness centrality (Brandes 2001) as level-synchronous
   * DataFrame passes — the sampled-centrality companion to
   * [[Bfs.multiSourceDistances]] (lodcc exposes centrality-family measures
@@ -58,8 +60,7 @@ object Betweenness {
     // semantic step — sigma counts are over the distinct edge set either
     // way, which is why mis-declaring would matter: only callers that KNOW
     // the set is distinct pass true)
-    val sel = edges.select("src", "dst")
-    val de = (if (assumeDistinct) sel else sel.distinct()).localCheckpoint(true)
+    val de = Bfs.prepareAdj(edges, assumeDistinct)
     val forward = sigmaForward(de, seeds)
     val vis = forward.state
     val maxD = math.max(0, forward.rounds - 1)
@@ -71,12 +72,12 @@ object Betweenness {
       col("dist").as("dv"), col("sigma").as("sigma_v")).as("l")
     val dw = vis.select(col("seed"), col("vertex").as("w"),
       col("dist").as("dw"), col("sigma").as("sigma_w")).as("r")
-    val dag = de.join(dv, de("src") === col("l.v"))
+    // pinned once; the level loop reuses it maxD times
+    val dag = Pin.pin(de.join(dv, de("src") === col("l.v"))
       .join(dw, col("r.seed") === col("l.seed") && de("dst") === col("r.w") &&
         col("r.dw") === col("l.dv") + 1)
       .select(col("l.seed"), col("v"), col("w"), col("sigma_v"), col("sigma_w"),
-        col("dw"))
-      .localCheckpoint(true) // pin the DAG once; the level loop reuses it maxD times
+        col("dw")))._1
 
     val spark = edges.sparkSession
     import spark.implicits._

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Frontier-join BFS and the pseudo-diameter double sweep
   * (lodcc `edge_based.py:15-32` via graph-tool `pseudo_diameter`).
   *
@@ -10,7 +12,7 @@ import org.apache.spark.sql.functions._
   * against the visited set, a [[Fixpoint.levels]] round. Directed traversal
   * (graph-tool respects edge direction on directed graphs).
   *
-  * The adjacency prep (dedup + eager localCheckpoint) is hoisted into
+  * The adjacency prep (dedup + [[Pin.pin]]) is hoisted into
   * [[prepareAdj]] so that (a) callers whose edge set is ALREADY distinct
   * pass `assumeDistinct = true` and skip a full re-dedup exchange of the
   * edge table, and (b) [[pseudoDiameter]] pays the prep once for all its
@@ -18,16 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  /** Deduped, eagerly checkpointed (src, dst) adjacency for the level
-    * loops. `assumeDistinct` skips the dedup exchange when the caller's
-    * edge set is distinct already (BFS distances are identical on the
+  /** Deduped, pinned (src, dst) adjacency for the level loops, and for
+    * every caller that reads a distinct edge set more than once.
+    * `assumeDistinct` skips the dedup exchange when the caller's edge set
+    * is distinct already (BFS distances are identical on the
     * multigraph and its simple projection — dedup is purely a
     * don't-join-duplicates optimization, so trusting the caller is safe
     * for correctness even if mis-declared).
     */
   def prepareAdj(edges: DataFrame, assumeDistinct: Boolean = false): DataFrame = {
     val sel = edges.select("src", "dst")
-    (if (assumeDistinct) sel else sel.distinct()).localCheckpoint(true)
+    Pin.pin(if (assumeDistinct) sel else sel.distinct())._1
   }
 
   /** distances (vertex, dist) from `source` following src->dst edges. */

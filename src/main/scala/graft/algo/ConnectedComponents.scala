@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Weakly-connected components via alternating large-star / small-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
   * — O(log n) rounds, no giant-frontier propagation, robust to skewed
@@ -119,9 +121,10 @@ object ConnectedComponents {
     // tripled the query. |V| also sizes the per-round broadcast decision
     // (BroadcastMaxVertices); the pin is coalesced at the star rounds'
     // RowsPerPartition budget.
-    val (allVs, nV) = IterUtil.pinCounted(edges
+    val (allVs, m) = Pin.pin(edges
       .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
-      .distinct(), RowsPerPartition) // one scan, not union-of-two-selects
+      .distinct(), budget = Some(RowsPerPartition)) // one scan, not union-of-two-selects
+    val nV = m.getLong(0)
     if (numericVertices(edges)) return fill(allVs, fixpoint(edges, maxIter, nV))
     if (nV < encodeMinVertices) return fill(allVs, fixpoint(edges, maxIter, nV))
 
@@ -153,7 +156,7 @@ object ConnectedComponents {
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
 
   /** Partition budget of the star rounds' state, in rows, finer than
-    * IterUtil's 4M-row default: a star round does real per-row
+    * [[Pin]]'s 4M-row default: a star round does real per-row
     * join/aggregate compute (~µs/row), so a 64k-row partition carries
     * ~50-100 ms of work — well above task-scheduling overhead but small
     * enough that a mid-sized graph (10^5-10^6 pairs) still spreads across

@@ -1,8 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.graft.Bridge
+
+import graft.Pin
 
 /** The round loop of every iterative kernel in `algo/`. A kernel gives
   * the round (state -> next state) and, for [[converge]], its stop metrics
@@ -11,33 +12,21 @@ import org.apache.spark.sql.graft.Bridge
   * A kernel picks one of three loop shapes:
   *
   *  - [[converge]]: rounds until a stop rule over the metrics holds. Each
-  *    round is ONE eager `localCheckpoint(true)` with the metrics attached
-  *    by `Dataset.observe`, so they come back from the checkpoint's own job,
-  *    with no separate `head()` or `count()` job. Eager, because a round
-  *    reads its intermediate frames more than once (CC's large-star output
-  *    feeds the small-star join twice): a lazy checkpoint folded into a
-  *    later stop action recomputes the round's shuffle tree inside that
-  *    action (CC round 1 on a 71M-edge table: 56 s lazy, 22 s eager at 8
-  *    cores). A probe round in a `local[4]` AQE session took 2 jobs this
-  *    way, against 4 as an eager checkpoint plus `head()` and 3 as a lazy
-  *    one plus `head()`.
-  *  - [[levels]]: the frontier loop. Each level's new frontier is an eager
-  *    checkpoint with an observed count; the visited set is a lazy union of
-  *    the frontiers, computed inside whichever job reads it next.
-  *  - [[fixed]]: a given number of rounds, each a LAZY checkpoint, then one
-  *    materializing count. No round reads a value back, and the probe's
-  *    fixed round took 2 jobs lazily against 3 eagerly under AQE.
+  *    round is one [[graft.Pin.pin]] with the metrics attached, so they come
+  *    back from the checkpoint's own job, with no separate `head()` or
+  *    `count()` job. Eager, because a round reads its intermediate frames
+  *    more than once (CC's large-star output feeds the small-star join
+  *    twice): a lazy checkpoint folded into a later stop action recomputes
+  *    the round's shuffle tree inside that action (CC round 1 on a
+  *    71M-edge table: 56 s lazy, 22 s eager at 8 cores).
+  *  - [[levels]]: the frontier loop. Each level's new frontier is a pin
+  *    with its observed count; the visited set is a lazy union of the
+  *    frontiers, computed inside whichever job reads it next.
+  *  - [[fixed]]: a given number of rounds, each a [[graft.Pin.cut]], then
+  *    one materializing count. No round reads a value back.
   *
-  * Checkpoints, not `persist`: a `localCheckpoint` stores plain row blocks
-  * (no per-round columnar decode) and keeps the AQE-coalesced partitioning,
-  * where a cached plan pins the static `spark.sql.shuffle.partitions`
-  * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false),
-  * so every stage that reads a persisted 128-partition shuffle schedules
-  * 128 tasks regardless of its size. Under AQE (on in every project
-  * session) a LAZY checkpoint truncates the plan but defers no work: it runs
-  * each shuffle and broadcast stage of the frame as a job of its own at
-  * once; what it defers is the final stage. A [[converge]] round's state can
-  * also be [[IterUtil.coalesced]] to a row budget given by the kernel.
+  * Why a pin is a checkpoint and what a lazy checkpoint runs under AQE is
+  * written once, in [[graft.Pin]].
   *
   * Every round's jobs carry `"<kernel> round <r>"` as their short call site
   * (stage names in a listener or the UI; the long form with the caller's
@@ -73,18 +62,18 @@ private[algo] object Fixpoint {
     * holds over the observed metrics (default: they did not change), the
     * state is empty, or `bound` rounds ran. `init` is pinned as round 0, so
     * the first comparison is against the input. With `budget`, every pinned
-    * state is [[IterUtil.coalesced]] to that many rows per partition.
+    * state is [[graft.Pin.coalesced]] to that many rows per partition.
     */
   def converge(kernel: String, init: DataFrame, bound: Int, metrics: Seq[Column] = Nil,
                budget: Option[Long] = None, stop: (Row, Row) => Boolean = _ == _)(
       round: (DataFrame, Row) => DataFrame): Result = {
-    var (state, m) = named(init, kernel, 0)(pin(init, metrics, budget))
+    var (state, m) = named(init, kernel, 0)(Pin.pin(init, metrics, budget))
     var r = 0
     val n0 = m.getLong(0)
     var done = n0 == 0L
     while (!done && r < bound) {
       r += 1
-      val (next, nm) = named(init, kernel, r)(pin(round(state, m), metrics, budget))
+      val (next, nm) = named(init, kernel, r)(Pin.pin(round(state, m), metrics, budget))
       done = nm.getLong(0) == 0L || stop(m, nm)
       Bridge.releaseCheckpoints(state)
       state = next
@@ -101,13 +90,13 @@ private[algo] object Fixpoint {
     */
   def levels(kernel: String, start: DataFrame, bound: Int = Int.MaxValue)(
       step: (DataFrame, DataFrame, Int) => DataFrame): Result = {
-    var (frontier, m) = named(start, kernel, 0)(pin(start, Nil, None))
+    var (frontier, m) = named(start, kernel, 0)(Pin.pin(start, budget = None))
     var visited = frontier
     val n0 = m.getLong(0)
     var r = 0
     while (m.getLong(0) > 0L && r < bound) {
       r += 1
-      val (next, nm) = named(start, kernel, r)(pin(step(frontier, visited, r), Nil, None))
+      val (next, nm) = named(start, kernel, r)(Pin.pin(step(frontier, visited, r), budget = None))
       if (nm.getLong(0) > 0L) visited = visited.union(next)
       frontier = next
       m = nm
@@ -122,23 +111,17 @@ private[algo] object Fixpoint {
     */
   def fixed(kernel: String, init: DataFrame, rounds: Int, eagerEvery: Int = 0)(
       round: (DataFrame, Int) => DataFrame): DataFrame = {
-    var state = init.localCheckpoint(false)
+    var state = Pin.cut(init)
     var r = 0
     while (r < rounds) {
       r += 1
-      state = named(init, kernel, r)(
-        round(state, r).localCheckpoint(eagerEvery > 0 && r % eagerEvery == 0))
+      state = named(init, kernel, r) {
+        val next = round(state, r)
+        if (eagerEvery > 0 && r % eagerEvery == 0) Pin.pin(next, budget = None)._1 else Pin.cut(next)
+      }
     }
     Bridge.withCallSite(init.sparkSession.sparkContext, s"$kernel materialize")(state.count())
     state
-  }
-
-  /** Eager checkpoint of `df` observing `n` = its row count and `metrics`. */
-  private def pin(df: DataFrame, metrics: Seq[Column], budget: Option[Long]): (DataFrame, Row) = {
-    val obs = Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n"), metrics: _*).localCheckpoint(true)
-    val m = Bridge.observedRow(obs)
-    (budget.fold(ck)(IterUtil.coalesced(ck, m.getLong(0), _)), m)
   }
 
   private def named[T](df: DataFrame, kernel: String, r: Int)(body: => T): T =

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** HITS (Kleinberg hubs & authorities), fixed-iteration power method — the
   * natural directed companion to [[Eigenvector]] in lodcc's centrality
   * family: authority(v) accumulates hub mass over in-edges, hub(u)
@@ -25,8 +27,8 @@ object Hits {
     val x0 = lit(1.0 / math.sqrt(g.n.toDouble))
     val init = g.vertices.select(col("vertex"), x0.as("auth"), x0.as("hub"))
     PowerIteration.iterate("HITS", g, init, iters, None) { (b, cur) =>
-      val auth = PowerIteration.normalize(PowerIteration.step(g.links, b,
-        cur.select(col("vertex"), col("hub").as("x")), col("x"))).localCheckpoint(false)
+      val auth = Pin.cut(PowerIteration.normalize(PowerIteration.step(g.links, b,
+        cur.select(col("vertex"), col("hub").as("x")), col("x"))))
       val hub = PowerIteration.normalize(PowerIteration.step(g.links, b, auth, col("x"),
         reverse = true))
       auth.withColumnRenamed("x", "auth").join(hub.withColumnRenamed("x", "hub"), "vertex")

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Synchronous label propagation (Raghavan et al. 2007) made fully
   * deterministic — an engine addition beyond lodcc's measure set (its
   * natural companion: lodcc profiles per-dataset structure; LPA gives the
@@ -36,12 +38,11 @@ object LabelPropagation {
     * [[ConnectedComponents]]. Pinned: every round re-reads it.
     */
   private def neighbors(edges: DataFrame): DataFrame =
-    edges.where(col("src") =!= col("dst"))
+    Pin.pin(edges.where(col("src") =!= col("dst"))
       .select(explode_outer(array(
           struct(col("src").as("v"), col("dst").as("u")),
           struct(col("dst").as("v"), col("src").as("u")))).as("e"))
-      .select(col("e.v").as("v"), col("e.u").as("u"))
-      .localCheckpoint(true)
+      .select(col("e.v").as("v"), col("e.u").as("u")))._1
 
   /** (vertex, community) after `iters` synchronous rounds. */
   def runFixed(edges: DataFrame, iters: Int): DataFrame = {
@@ -86,8 +87,8 @@ object LabelPropagation {
     require(iters >= 0, "iters must be >= 0")
     val nbrs = neighbors(edges)
     // vertices and the clamped seed table are re-read every round
-    val vertices = IterUtil.pin(nbrs.select(col("v").as("vertex")).distinct())
-    val sd = IterUtil.pin(seeds.select(col("vertex"), col("label")))
+    val vertices = Pin.pin(nbrs.select(col("v").as("vertex")).distinct())._1
+    val sd = Pin.pin(seeds.select(col("vertex"), col("label")))._1
     Fixpoint.fixed("Seeded LPA", vertices.join(sd, Seq("vertex"), "left_outer"), iters) {
       (labels, _) =>
         val prop = nbrs

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** The power iteration behind [[PageRank]], [[Eigenvector]] and [[Hits]]:
   * each round propagates a per-vertex value `x` along the links,
   * s(v) = Σ_{(u,v)} contrib(x(u), link), and maps s to the next x (an affine
@@ -22,13 +24,13 @@ private[algo] object PowerIteration {
     */
   def setup(edges: DataFrame, w: Column, wsum: Boolean): Graph = {
     val sel = edges.select(col("src"), col("dst"), w.cast("double").as("w")).where(col("w") > 0)
-    val ck = if (wsum) sel.localCheckpoint(true) else IterUtil.pin(sel)
+    val ck = Pin.pin(sel)._1
     val links =
-      if (wsum) IterUtil.pin(ck.join(ck.groupBy("src").agg(sum("w").as("wsum")), "src")) else ck
-    val (vertices, n) = IterUtil.pinCounted(ck
+      if (wsum) Pin.pin(ck.join(ck.groupBy("src").agg(sum("w").as("wsum")), "src"))._1 else ck
+    val (vertices, m) = Pin.pin(ck
       .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
       .distinct())
-    Graph(links, vertices, n)
+    Graph(links, vertices, m.getLong(0))
   }
 
   /** One propagation step: `base` plus s = Σ `contrib` over the links into

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Strongly connected components over a directed edge table — the directed
   * complement of [[ConnectedComponents]] for KG cycle analysis (equivalence
   * cliques in `sameAs`/`subClassOf` hierarchies, circular provenance).
@@ -42,16 +44,13 @@ object Scc {
           maxOuter: Int = 40,
           maxInner: Int = 500,
           trimRounds: Int = 8): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
-    var verts = edges.select(col("src").as("vertex"))
-      .union(edges.select(col("dst").as("vertex"))).distinct()
-      .localCheckpoint(true)
-    var done: DataFrame = null // (vertex, scc)
-    def peel(d: DataFrame): Unit =
-      done = if (done == null) d.localCheckpoint(true)
-             else done.union(d).localCheckpoint(true)
+    var e = Pin.pin(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct())._1
+    var verts = Pin.pin(edges.select(col("src").as("vertex"))
+      .union(edges.select(col("dst").as("vertex"))).distinct())._1
+    // each peeled (vertex, scc) set is pinned once; the output is their union
+    val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def peel(d: DataFrame): DataFrame = { val p = Pin.pin(d)._1; peeled += p; p }
     def singletons(d: DataFrame) = d.select(col("vertex"), col("vertex").as("scc"))
 
     // the outer peel: each pass trims, then peels one SCC per color
@@ -74,9 +73,8 @@ object Scc {
         if (outer > maxOuter)
           throw Fixpoint.notConverged("SCC peel", maxOuter, s"$nLeft vertices left")
         if (trimmed)
-          e = e.join(verts.select(col("vertex").as("src")), Seq("src"), "left_semi")
-            .join(verts.select(col("vertex").as("dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(true)
+          e = Pin.pin(e.join(verts.select(col("vertex").as("src")), Seq("src"), "left_semi")
+            .join(verts.select(col("vertex").as("dst")), Seq("dst"), "left_semi"))._1
 
         // ---- forward min-label coloring fixpoint -------------------------
         // TWO propagation steps per round: min-label coloring is monotone,
@@ -87,44 +85,40 @@ object Scc {
             .select(col("dst").as("vertex"), col("c"))
           cc.union(prop).groupBy("vertex").agg(min("c").as("c"))
         }
-        // the inner step is lazily checkpointed: the outer step reads it
-        // twice (join side + union side), and without the checkpoint the
-        // inner join+agg subtree would execute twice per round
+        // the inner step is cut: the outer step reads it twice (join side
+        // + union side), and without the cut the inner join+agg subtree
+        // would execute twice per round
         val c = Fixpoint.converge("SCC color", verts.select(col("vertex"), col("vertex").as("c")),
             maxInner, Seq(coalesce(bit_xor(xxhash64(col("vertex"), col("c"))), lit(0L)).as("h"))) {
-          (c, _) => colorStep(colorStep(c).localCheckpoint(false))
+          (c, _) => colorStep(Pin.cut(colorStep(c)))
         }.orFail
 
         // ---- backward mark from each color's root over intra-color edges -
-        val intra = e
+        val intra = Pin.pin(e
           .join(c.select(col("vertex").as("src"), col("c").as("cs")), Seq("src"))
           .join(c.select(col("vertex").as("dst"), col("c").as("cd")), Seq("dst"))
           .where(col("cs") === col("cd"))
-          .select(col("src"), col("dst"), col("cs").as("scc"))
-          .localCheckpoint(true)
+          .select(col("src"), col("dst"), col("cs").as("scc")))._1
         // each level propagates only from the NEWLY marked vertices; edge
         // scc == c(dst) == mark scc of dst by construction, so the
         // dst-keyed equi-join alone is the full propagation condition
         val roots = c.where(col("vertex") === col("c")).select(col("vertex"), col("c").as("scc"))
-        val m = Fixpoint.levels("SCC mark", roots, maxInner) { (frontier, marked, _) =>
+        val m = peel(Fixpoint.levels("SCC mark", roots, maxInner) { (frontier, marked, _) =>
           intra
             .join(frontier.select(col("vertex").as("dst")), Seq("dst"), "left_semi")
             .select(col("src").as("vertex"), col("scc"))
             .distinct()
             .join(marked, Seq("vertex"), "left_anti")
-        }.orFail
-
-        peel(m)
+        }.orFail)
         verts = verts.join(m.select("vertex"), Seq("vertex"), "left_anti")
-        e = e.join(m.select(col("vertex").as("src")), Seq("src"), "left_anti")
-          .join(m.select(col("vertex").as("dst")), Seq("dst"), "left_anti")
-          .localCheckpoint(true)
+        e = Pin.pin(e.join(m.select(col("vertex").as("src")), Seq("src"), "left_anti")
+          .join(m.select(col("vertex").as("dst")), Seq("dst"), "left_anti"))._1
       }
     }
 
-    if (done == null)
+    if (peeled.isEmpty)
       edges.sparkSession.emptyDataFrame
         .select(lit("").as("vertex"), lit("").as("scc")).limit(0)
-    else done
+    else peeled.reduce(_ union _)
   }
 }

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** All-pairs reachability with min-hop distances via path doubling —
   * the RDFS-style closure materializer (subClassOf / subPropertyOf
   * hierarchies, category trees) for KG construction.
@@ -23,14 +25,14 @@ object TransitiveClosure {
     * closure.
     */
   def minDist(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    // the state is coalesced at IterUtil's 4M-row budget: on a small
+    // the state is coalesced at Pin's 4M-row budget: on a small
     // hierarchy every round's join + re-aggregation otherwise scheduled
     // 128 near-empty tasks per side
     val init = edges.select(col("src"), col("dst"), lit(1L).as("dist"))
       .where(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(min("dist").as("dist"))
     Fixpoint.converge("TC", init, maxRounds, Seq(coalesce(sum("dist"), lit(0L)).as("s")),
-        Some(4000000L)) { (r, _) =>
+        Some(Pin.RowsPerPartition)) { (r, _) =>
       val a = r.select(col("src"), col("dst").as("mid"), col("dist").as("d1"))
       val b = r.select(col("src").as("mid"), col("dst"), col("dist").as("d2"))
       val hop = a.join(b, "mid")

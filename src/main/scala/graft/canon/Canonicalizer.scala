@@ -3,7 +3,8 @@ package graft.canon
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.algo.{ConnectedComponents, IterUtil}
+import graft.Pin
+import graft.algo.ConnectedComponents
 import graft.extract.Extractor
 import graft.ops.{Dedup, TextOps}
 
@@ -54,7 +55,8 @@ object Canonicalizer {
     */
   def canonicalize(surfaces: DataFrame, shingleK: Int = 3,
                    rowsPerBand: Int = 2, minJ: Double = 0.5): DataFrame = {
-    val s = IterUtil.cachePinned(surfaces.select(col("surface")).distinct())._1
+    // pinned (see Pin): the edge build and the final join both read it
+    val s = Pin.pin(surfaces.select(col("surface")).distinct())._1
     val withNorm = s.withColumn("norm", Extractor.normalizeCol(col("surface")))
 
     // (a) exact edges through the normalized form (star, not all-pairs)
@@ -72,9 +74,9 @@ object Canonicalizer {
     // chain is CodegenFallback (interpreted per element); the compiled
     // loop computes the identical values (OpsSpec twin-equality)
     import org.apache.spark.sql.graft.Bridge
-    val withHs = IterUtil.cachePinned(withNorm.withColumn("hs",
+    val withHs = withNorm.withColumn("hs",
       Bridge.column(graft.functions.CharShingleHash31(
-        Bridge.expression(col("norm")), k))))._1
+        Bridge.expression(col("norm")), k)))
     // array form feeds the LSH directly — the signature table never
     // shuffles (Dedup.minhashLshCandidatesArrays scaladoc)
     val sigArrays = withHs.select(col("surface").as("id"),
@@ -100,15 +102,9 @@ object Canonicalizer {
           (size(col("__ha")) + size(col("__hb")) - col("__inter")) >= minJ)
       .select(col("a").as("src"), col("b").as("dst"))
 
-    // the CC kernel scans its edge input several times (vertex-universe
-    // pin + the first star round); cache the verified chain so the LSH +
-    // Jaccard-verify joins run once — all scans happen inside run(), so
-    // the cache is released as soon as it returns (same shape as the
-    // incremental path's edges cache)
-    val edgesC = exactEdges.union(verified).cache()
-    val edges = IterUtil.cachePinned(edgesC)._1 // eager + size-coalesced view
-    val cc = ConnectedComponents.run(edges)
-    edgesC.unpersist(false)
+    // pinned: the CC kernel scans its edge input in several jobs (vertex
+    // universe + the first star round), so the LSH + verify joins run once
+    val cc = ConnectedComponents.run(Pin.pin(exactEdges.union(verified))._1)
     // surfaces that collected no edge are their own canonical form
     s.join(cc.withColumnRenamed("vertex", "surface"), Seq("surface"), "left_outer")
       .select(col("surface"), coalesce(col("component"), col("surface")).as("canonical"))
@@ -123,7 +119,7 @@ object Canonicalizer {
   def canonicalizeML(surfaces: DataFrame, shingleK: Int = 3,
                      numHashTables: Int = 8, minJ: Double = 0.5): DataFrame = {
     import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    val s = surfaces.select(col("surface")).distinct().cache()
+    val s = Pin.pin(surfaces.select(col("surface")).distinct())._1
     val withNorm = s.withColumn("norm", Extractor.normalizeCol(col("surface")))
     val exactEdges = exactNormEdges(withNorm)
 
@@ -187,26 +183,14 @@ object Canonicalizer {
                               shingleK: Int = 3, rowsPerBand: Int = 2,
                               minJ: Double = 0.5): DataFrame = {
     val k = shingleK
-    // both sides of the increment are consumed by several joins below —
-    // materialize each ONCE (pm: anti-join, anchor-replace x2, anchor set;
-    // ps: norm-star semi-join, band table, shingle table) instead of
-    // re-running the upstream scan per consumer
-    // shared caches are pinned via IterUtil.cachePinned: EAGER (a cold
-    // cache materializes independently inside every concurrent AQE
-    // broadcast-subtree job the final action spawns — the cold-run stage
-    // profile showed 380+ task-seconds of exactly that recompute, 82 s
-    // cold vs 3.4 s warm in the driver's own pass1/pass2) and coalesced to
-    // a size-derived partition count (a cached 128-partition shuffle pins
-    // 128 near-empty tasks onto every downstream stage of this
-    // small-surface chain)
-    val (pm, _) = IterUtil.cachePinned(
-      prior.select(col("surface"), col("canonical")))
-    val (ps, _) = IterUtil.cachePinned(pm.select(col("surface"))
-      .withColumn("norm", Extractor.normalizeCol(col("surface"))))
-    val (nw, _) = IterUtil.cachePinned(
-      newSurfaces.select(col("surface")).distinct()
-        .join(pm.select(col("surface")), Seq("surface"), "left_anti")
-        .withColumn("norm", Extractor.normalizeCol(col("surface"))))
+    // pm and nw are pinned (see Pin): the new-surface pin, the edge pin
+    // and the final join each read them
+    val pm = Pin.pin(prior.select(col("surface"), col("canonical")))._1
+    val ps = pm.select(col("surface"))
+      .withColumn("norm", Extractor.normalizeCol(col("surface")))
+    val nw = Pin.pin(newSurfaces.select(col("surface")).distinct()
+      .join(pm.select(col("surface")), Seq("surface"), "left_anti")
+      .withColumn("norm", Extractor.normalizeCol(col("surface"))))._1
 
     // (a) exact-norm star edges over {new} ∪ {prior sharing a new norm}
     val tnorm = nw.select(col("norm")).distinct()
@@ -229,7 +213,7 @@ object Canonicalizer {
           Bridge.expression(col("hs")),
           Dedup.MinhashCoeffs.map(_._1), Dedup.MinhashCoeffs.map(_._2),
           Dedup.MinhashPrime)).as("mhs"))
-    val hsNew = IterUtil.cachePinned(withHs(nw))._1
+    val hsNew = withHs(nw)
     val hsPrior = withHs(ps)
     val bNew = Dedup.bandTable(sigArrays(hsNew), rowsPerBand)
     val bAll = bNew.unionByName(Dedup.bandTable(sigArrays(hsPrior), rowsPerBand))
@@ -265,10 +249,9 @@ object Canonicalizer {
       .select(coalesce(col("__s_c"), col("src")).as("src"),
         coalesce(col("__d_c"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
-    // pinned: the CC kernel and its consumers evaluate this chain
-    // (bands + verify + anchor joins) several times otherwise
-    val edgesP = IterUtil.cachePinned(edges)._1
-    val cc = IterUtil.cachePinned(ConnectedComponents.run(edgesP))._1 // 2 consumers
+    // pinned: the CC kernel's jobs evaluate this chain (bands + verify +
+    // anchor joins) several times otherwise
+    val cc = ConnectedComponents.run(Pin.pin(edges)._1)
     val anchors = pm.select(col("canonical").as("vertex")).distinct()
     val compAnchor = cc.join(anchors, "vertex")
       .groupBy("component").agg(min("vertex").as("anchor"))

@@ -159,15 +159,16 @@ object GraphTables {
     * (exponential path count, the classic transitive-closure blow-up).
     * All joins are key-partitioned shuffles on vertex ids; nothing is
     * collected, and maxHops bounds the job count, so the plan is the same
-    * shape a 1000-executor run wants.
+    * shape a 1000-executor run wants. Building the plan runs one pin job:
+    * the label-filtered edge set every hop reads.
     */
   def kHop(edges: DataFrame, edgeLabel: String, srcFilter: Column,
            maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     // pinned once: every hop joins the frontier against this set, and the
     // lazy form re-ran the scan + filter + dedup shuffle per hop
-    val e = graft.algo.IterUtil.pin(edges.where(col("label") === edgeLabel)
-      .select(col("src"), col("dst")).distinct())
+    val e = graft.Pin.pin(edges.where(col("label") === edgeLabel)
+      .select(col("src"), col("dst")).distinct())._1
     val hop1 = e.where(srcFilter)
       .select(col("src").as("origin"), col("dst").as("v")).distinct()
     var all = hop1.withColumn("hops", lit(1))
@@ -199,7 +200,8 @@ object GraphTables {
     * rank) against the adjacency — so the working set is O(#live walks)
     * rows and `steps` bounds the job count. Hot vertices are naturally
     * load-balanced: the composite (vertex, rank) key spreads a hub's
-    * incoming walks across its neighbor rows.
+    * incoming walks across its neighbor rows. Building the plan runs one
+    * pin job: the ranked adjacency every step reads.
     */
   def randomWalks(edges: DataFrame, startFilter: Column, nWalks: Int,
                   steps: Int): DataFrame = {
@@ -209,9 +211,9 @@ object GraphTables {
     // the ranked adjacency is joined twice per step; pinned once, each
     // step's two joins read the stored blocks instead of re-running the
     // scan + dedup + window per consumer
-    val adj = graft.algo.IterUtil.pin(e.withColumn("rank",
+    val adj = graft.Pin.pin(e.withColumn("rank",
       row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy("dst")) - 1))
+        .partitionBy("src").orderBy("dst")) - 1))._1
     // out-degree from the pinned adjacency (= distinct out-neighbor count)
     val outdeg = adj.groupBy("src").agg(count(lit(1)).as("d"))
     val starts = adj.where(startFilter).select(col("src").as("origin")).distinct()
@@ -259,7 +261,8 @@ object GraphTables {
     * O(live walks x maxOutDegree) rows per step. The expansion joins are
     * all equi-joins on vertex/pair keys, the scoring window partitions by
     * (origin, walk) — one live state each, so no skew — and `steps`
-    * bounds the job count.
+    * bounds the job count. Building the plan runs one pin job: the capped
+    * adjacency every step reads.
     */
   def node2vecWalks(edges: DataFrame, startFilter: Column, nWalks: Int,
                     steps: Int, wReturn: Int, wCommon: Int, wOut: Int,
@@ -274,9 +277,9 @@ object GraphTables {
     // pinned once: the capped adjacency is joined 3x per step (candidate
     // expansion, the t->x common-edge probe, plus the step-1 draw), and
     // the lazy form re-ran the scan + dedup + window per consumer
-    val adj = graft.algo.IterUtil.pin(
+    val adj = graft.Pin.pin(
       (if (maxOutDegree > 0) ranked.where(col("rank") < maxOutDegree)
-       else ranked).select(col("src"), col("dst"), col("rank")))
+       else ranked).select(col("src"), col("dst"), col("rank")))._1
     val outdeg = adj.groupBy("src").agg(count(lit(1)).as("d"))
     val starts = adj.where(startFilter).select(col("src").as("origin")).distinct()
     val w0 = starts

@@ -171,14 +171,13 @@ object CoreMeasures {
     * `precomputedCC` (VERDICT r3 next #3): a (vertex, component) table from
     * a prior [[graft.algo.ConnectedComponents.run]] — e.g. the measure
     * suite's shared CC snapshot — skips the iterative CC job entirely; when
-    * absent, CC is computed (and cached only for the duration of this call).
+    * absent, CC is computed and pinned for this call.
     */
   def pseudoDiameter(edges: DataFrame,
                      precomputedCC: Option[DataFrame] = None): DataFrame = {
     import graft.algo.{Bfs, ConnectedComponents}
     val spark = edges.sparkSession
-    val ownCC = precomputedCC.isEmpty
-    val cc = precomputedCC.getOrElse(ConnectedComponents.run(edges).cache())
+    val cc = precomputedCC.getOrElse(graft.Pin.pin(ConnectedComponents.run(edges))._1)
     val top = ConnectedComponents.componentSizes(cc)
       .orderBy(col("size").desc, col("component").asc).limit(1).collect()
     def maxOutSource(e: DataFrame): String =
@@ -188,18 +187,17 @@ object CoreMeasures {
     // the selected edge set is read by the source-degree aggregation AND by
     // every BFS sweep: checkpoint the (possibly semi-joined) multigraph once
     // so neither consumer re-executes the caller's upstream plan
-    val useEdges =
-      (if (top.isEmpty || top.head.getLong(1) <= 1) edges.select("src", "dst")
-       else {
-         val comp = top.head.getString(0)
-         val members = cc.where(col("component") === comp).select(col("vertex"))
-         edges.select("src", "dst")
-           .join(members.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
-           .join(members.withColumnRenamed("vertex", "dst"), Seq("dst"), "left_semi")
-       }).localCheckpoint(true)
+    val useEdges = graft.Pin.pin(
+      if (top.isEmpty || top.head.getLong(1) <= 1) edges.select("src", "dst")
+      else {
+        val comp = top.head.getString(0)
+        val members = cc.where(col("component") === comp).select(col("vertex"))
+        edges.select("src", "dst")
+          .join(members.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
+          .join(members.withColumnRenamed("vertex", "dst"), Seq("dst"), "left_semi")
+      })._1
     val source = maxOutSource(useEdges)
     val (d, s, t) = Bfs.pseudoDiameter(useEdges, source)
-    if (ownCC) cc.unpersist(false)
     import spark.implicits._
     Seq((d, s, t)).toDF("pseudo_diameter", "pseudo_diameter_src_vertex", "pseudo_diameter_trg_vertex")
   }

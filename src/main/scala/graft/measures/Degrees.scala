@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Shared degree vectors — the "compute once" of lodcc
   * (`degree_based.py:26`). One shuffle on the vertex key; every degree-based
-  * measure reuses the result (callers should `.cache()` it).
+  * measure reuses the result (a caller that reads it in more than one
+  * action pins it, see [[graft.Pin]]).
   */
 object Degrees {
 

@@ -74,33 +74,33 @@ object Plots {
 
   /** Histogram DataFrame (x, cnt) -> PDF points -> SVG string. */
   def histogramSvg(hist: DataFrame, title: String,
-                   xLabel: String = "degree"): String = {
+                   xLabel: String = "degree"): String =
     // |distinct degrees| rows — the same operator-bounded collect the
     // reference performs to hand matplotlib its vectors
-    val rows = hist.select(col("x").cast("double"), col("cnt").cast("long"))
-      .collect().map(r => (r.getDouble(0), r.getLong(1)))
+    pdfSvg(hist.select(col("x").cast("double"), col("cnt").cast("long"))
+      .collect().map(r => (r.getDouble(0), r.getLong(1))).toSeq, title, xLabel)
+
+  /** Collected histogram rows (x, cnt) -> PDF points -> SVG string. */
+  private def pdfSvg(rows: Seq[(Double, Long)], title: String, xLabel: String): String = {
     val n = rows.map(_._2).sum.toDouble
-    logLogSvg(rows.map { case (x, c) => (x, c / n) }.toSeq,
-      title, xLabel, "pdf")
+    logLogSvg(rows.map { case (x, c) => (x, c / n) }, title, xLabel, "pdf")
   }
 
   /** The reference's per-dataset plot set (`plots` feature + the
     * centrality plots): degree / in-degree / out-degree distribution SVGs
     * written as `<dir>/<dataset>_<kind>_distribution.svg`, mirroring
-    * lodcc's one-image-per-measure layout.
+    * lodcc's one-image-per-measure layout. The three histograms come from
+    * one Spark job ([[Degrees.histograms]]).
     */
   def writeDegreePlots(edges: DataFrame, dataset: String, dir: String): Seq[String] = {
-    val degrees = Degrees.degrees(edges).cache()
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Seq(("degree", "deg"), ("in_degree", "in_deg"), ("out_degree", "out_deg"))
-        .map { case (kind, c) =>
-          val svg = histogramSvg(Degrees.histogram(degrees, c),
-            s"$dataset: $kind distribution", kind)
-          val path = java.nio.file.Paths.get(dir, s"${dataset}_${kind}_distribution.svg")
-          java.nio.file.Files.write(path, svg.getBytes("UTF-8"))
-          path.toString
-        }
-    } finally degrees.unpersist(false)
+    val hists = Degrees.histograms(Degrees.degrees(edges))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    Seq(("degree", "deg"), ("in_degree", "in_deg"), ("out_degree", "out_deg"))
+      .map { case (kind, c) =>
+        val svg = pdfSvg(hists(c), s"$dataset: $kind distribution", kind)
+        val path = java.nio.file.Paths.get(dir, s"${dataset}_${kind}_distribution.svg")
+        java.nio.file.Files.write(path, svg.getBytes("UTF-8"))
+        path.toString
+      }
   }
 }

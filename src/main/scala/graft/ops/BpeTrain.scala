@@ -43,12 +43,12 @@ object BpeTrain {
 
     // initial symbol table: one row per character of each vocab word
     // (substr-indexed, not regex-split — engine-portable to the letter)
-    var syms = vocab
+    // the symbol table is loop state: pinned every round (see graft.Pin)
+    var syms = graft.Pin.pin(vocab
       .select(col("word"), col("freq"),
         explode(sequence(lit(1), length(col("word")))).as("pos"))
       .select(col("word"), col("freq"), col("pos"),
-        col("word").substr(col("pos"), lit(1)).as("sym"))
-      .localCheckpoint(true)
+        col("word").substr(col("pos"), lit(1)).as("sym")))._1
 
     val byWord = Window.partitionBy("word").orderBy("pos")
     var merges: DataFrame = null
@@ -91,12 +91,11 @@ object BpeTrain {
         .withColumn("doMerge", col("hit") && pmod(col("runPos"), lit(2)) === 1)
         .withColumn("consumed",
           coalesce(lag(col("doMerge"), 1).over(byWord), lit(false)))
-      syms = decided.where(!col("consumed"))
+      syms = graft.Pin.pin(decided.where(!col("consumed"))
         .select(col("word"), col("freq"),
           row_number().over(byWord).as("pos"),
           when(col("doMerge"), concat(col("sym"), col("nxt")))
-            .otherwise(col("sym")).as("sym"))
-        .localCheckpoint(true)
+            .otherwise(col("sym")).as("sym")))._1
     }
     merges
   }

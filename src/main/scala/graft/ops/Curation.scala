@@ -309,15 +309,10 @@ object Curation {
     *      running sum (`mapPartitions` — the sanctioned per-partition
     *      imperative case: an iterator-order-dependent accumulator).
     *
-    * The projected (id, ord, toks) table is materialized once (eager
-    * `localCheckpoint`) because step 2 is a separate ACTION from the
-    * result scan — cross-action reuse, not the multi-branch single-action
-    * caching the Dedup scaladoc warns against. localCheckpoint rather than
-    * persist: checkpoint blocks are released by the ContextCleaner when
-    * the result goes unreferenced, while a `persist` stays registered in
-    * the CacheManager until an explicit unpersist — one leaked corpus
-    * copy per call. `idCol`/`orderCol`/`tokensCol` must be numeric (cast
-    * to long).
+    * The projected (id, ord, toks) table is pinned ([[graft.Pin]]) because
+    * step 2 is a separate ACTION from the result scan; the pin keeps its
+    * partitioning, which the offsets are keyed on. `idCol`/`orderCol`/
+    * `tokensCol` must be numeric (cast to long).
     */
   def packChunksGlobal(docs: DataFrame, idCol: String, tokensCol: String,
                        orderCol: String, windowTokens: Long,
@@ -326,12 +321,11 @@ object Curation {
     require(numPartitions > 0, "numPartitions must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val d = docs.select(col(idCol).cast("long").as("id"),
+    val d = graft.Pin.pin(docs.select(col(idCol).cast("long").as("id"),
         col(orderCol).cast("long").as("ord"),
         col(tokensCol).cast("long").as("toks"))
       .repartitionByRange(numPartitions, col("ord"), col("id"))
-      .sortWithinPartitions("ord", "id")
-      .localCheckpoint(true)
+      .sortWithinPartitions("ord", "id"), budget = None)._1
     val totals = d.groupBy(org.apache.spark.sql.functions.spark_partition_id().as("pid"))
       .agg(sum("toks").as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

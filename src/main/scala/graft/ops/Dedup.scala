@@ -8,14 +8,10 @@ import org.apache.spark.sql.functions._
   * by blocking (a pair is only materialized when a block key collides), the
   * standard web-scale shape — never an unblocked cross join.
   *
-  * Deliberately NO internal persist() of multi-branch intermediates (the
-  * shingle table, banded signatures): Spark's ReusedExchange already
-  * dedupes the identical shuffle subtrees these plans share, and an A/B
-  * measurement showed lazy MEMORY_AND_DISK marks made the dedup suite
-  * 2-4x SLOWER (columnar encode + extra stage boundaries + broken codegen
-  * fusion outweigh the avoided recomputation). A caller fanning one
-  * signature table into many downstream jobs should materialize it
-  * explicitly (TableIO/parquet) instead.
+  * No internal pin of the multi-branch intermediates (the shingle table,
+  * banded signatures): only the branches of one action read them
+  * ([[graft.Pin]]'s rule). An A/B measurement showed lazy MEMORY_AND_DISK
+  * marks made the dedup suite 2-4x SLOWER.
   */
 object Dedup {
 

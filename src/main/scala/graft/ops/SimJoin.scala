@@ -56,11 +56,9 @@ object SimJoin {
     require(maxShortBlock > 0, "maxShortBlock must be positive")
     val d = maxDist
     val k = d + 1 // segments per string
-    // eager row checkpoint, not a columnar cache: four consumers read this
-    // frame (index, probe, both verify joins) and a .cache() materializes
-    // racily from concurrent stages and decodes columnar batches per read
+    // not pinned (see graft.Pin): the index, the probe and both verify
+    // joins read it inside one action
     val s = strs.select(col(idCol).as("id"), col(strCol).as("str"))
-      .localCheckpoint(true)
     val withLen = s.withColumn("l", length(col("str")))
 
     // integer segment boundaries of a length-l string into k parts:
@@ -194,8 +192,7 @@ object SimJoin {
     val tok = docs.select(col(idCol).as("id"),
         explode(split(col(textCol), " +")).as("token"))
       .where(length(col("token")) > 0)
-      .distinct()
-      .localCheckpoint(true) // eager row checkpoint: see editDistancePairs
+      .distinct() // not pinned: one action reads it (see graft.Pin)
     val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
 
     import org.apache.spark.sql.expressions.Window
@@ -254,8 +251,7 @@ object SimJoin {
     val tok = docs.select(col(idCol).as("id"),
         explode(split(col(textCol), " +")).as("token"))
       .where(length(col("token")) > 0)
-      .distinct()
-      .localCheckpoint(true) // eager row checkpoint: see editDistancePairs
+      .distinct() // not pinned: one action reads it (see graft.Pin)
     // set size and prefix rank ride ONE id-keyed exchange (two window
     // functions over the same partition key), and sz is carried through
     // the candidate pairs so no separate size table ever joins again; the

@@ -44,10 +44,9 @@ object AnalyticsQueries {
     // ties to the greatest vertex), ONE multi-source BFS fixpoint —
     // closeness(s) = reached / sum of BFS distances from s
     "kg_closeness" -> ((s, dir) => {
-      // ONE dedup of the edge set, checkpointed: the seed scan reads the
-      // cached blocks and the BFS skips its own re-dedup (assumeDistinct)
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
+      // ONE dedup of the edge set, pinned: the seed scan reads the pinned
+      // blocks and the BFS skips its own re-dedup (assumeDistinct)
+      val e = Bfs.prepareAdj(liEdges(s, dir))
       val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
         .orderBy(col("od").desc, col("src").desc).limit(4)
         .collect().map(_.getString(0)).toSeq // O(k) driver rows
@@ -63,8 +62,7 @@ object AnalyticsQueries {
     // + per-level backward dependency accumulation — all DataFrame joins,
     // maxDist (~3) rounds each way
     "kg_betweenness" -> ((s, dir) => {
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
+      val e = Bfs.prepareAdj(liEdges(s, dir))
       val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
         .orderBy(col("od").desc, col("src").desc).limit(3)
         .collect().map(_.getString(0)).toSeq // O(k) driver rows

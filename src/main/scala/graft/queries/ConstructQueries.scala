@@ -155,14 +155,13 @@ object ConstructQueries {
     }),
 
     "kg_snapshot_diff" -> ((s, dir) => {
-      // pinned once: churn (3 scans per side) + degree delta (1 per side)
-      // re-ran the parquet scan + concat projection 8x from the lazy form
-      val li = graft.algo.IterUtil.pin(
-        s.read.parquet(s"$dir/lineitem.parquet").select(
-          concat(lit("v"), (col("l_orderkey") % 4096).cast("string")).as("src"),
-          concat(lit("v"), (col("l_partkey") % 4096).cast("string")).as("dst"),
-          concat(lit("p"), (col("l_suppkey") % 7).cast("string")).as("label"),
-          col("l_linenumber").as("ln")))
+      // not pinned (see graft.Pin): churn and degree delta read it inside
+      // one action
+      val li = s.read.parquet(s"$dir/lineitem.parquet").select(
+        concat(lit("v"), (col("l_orderkey") % 4096).cast("string")).as("src"),
+        concat(lit("v"), (col("l_partkey") % 4096).cast("string")).as("dst"),
+        concat(lit("p"), (col("l_suppkey") % 7).cast("string")).as("label"),
+        col("l_linenumber").as("ln"))
       val before = li.where(col("ln") <= 4).drop("ln")
       val after = li.where(col("ln") >= 2).drop("ln")
       val dd = Fusion.degreeDelta(before, after).agg(

@@ -21,28 +21,25 @@ object KgQueries {
     "kg_max_vertices" -> ((s, dir) =>
       CoreMeasures.maxDegreeVertices(Degrees.degrees(liEdges(s, dir)))),
 
+    // the histograms come from one job (Degrees.histograms): no frame is
+    // read by more than one action, so nothing is pinned
     "kg_gini" -> ((s, dir) => {
-      val deg = Degrees.degrees(liEdges(s, dir)).cache()
-      val g = DistributionMeasures.gini(Degrees.histogram(deg, "deg"))
-        .withColumnRenamed("gini", "gini_coefficient")
-      val gi = DistributionMeasures.gini(Degrees.histogram(deg, "in_deg"))
-        .withColumnRenamed("gini", "gini_coefficient_in_degree")
-      val go = DistributionMeasures.gini(Degrees.histogram(deg, "out_deg"))
-        .withColumnRenamed("gini", "gini_coefficient_out_degree")
-      roundDoubles(g.crossJoin(gi).crossJoin(go))
+      import s.implicits._
+      val h = Degrees.histograms(Degrees.degrees(liEdges(s, dir)))
+      def g(k: String) = DistributionMeasures.gini(h(k))
+      roundDoubles(Seq((g("deg"), g("in_deg"), g("out_deg"))).toDF("gini_coefficient",
+        "gini_coefficient_in_degree", "gini_coefficient_out_degree"))
     }),
 
     "kg_hindex" -> ((s, dir) => {
-      val deg = Degrees.degrees(liEdges(s, dir)).cache()
-      val hu = DistributionMeasures.hIndex(Degrees.histogram(deg, "deg"))
-        .withColumnRenamed("h_index", "h_index_u")
-      val hd = DistributionMeasures.hIndex(Degrees.histogram(deg, "in_deg"))
-        .withColumnRenamed("h_index", "h_index_d")
-      hu.crossJoin(hd)
+      import s.implicits._
+      val h = Degrees.histograms(Degrees.degrees(liEdges(s, dir)))
+      Seq((DistributionMeasures.hIndex(h("deg")), DistributionMeasures.hIndex(h("in_deg"))))
+        .toDF("h_index_u", "h_index_d")
     }),
 
     "kg_rdf_out" -> ((s, dir) => {
-      val e = liEdges(s, dir).cache()
+      val e = liEdges(s, dir)
       roundDoubles(RdfMeasures.outDegree(e)
         .crossJoin(RdfMeasures.partialOutDegree(e))
         .crossJoin(RdfMeasures.labelledOutDegree(e))
@@ -50,7 +47,7 @@ object KgQueries {
     }),
 
     "kg_rdf_in" -> ((s, dir) => {
-      val e = liEdges(s, dir).cache()
+      val e = liEdges(s, dir)
       roundDoubles(RdfMeasures.inDegree(e)
         .crossJoin(RdfMeasures.partialInDegree(e))
         .crossJoin(RdfMeasures.labelledInDegree(e))
@@ -58,7 +55,7 @@ object KgQueries {
     }),
 
     "kg_rdf_pred" -> ((s, dir) => {
-      val e = liEdges(s, dir).cache()
+      val e = liEdges(s, dir)
       roundDoubles(RdfMeasures.predicateDegree(e)
         .crossJoin(RdfMeasures.predicateInDegree(e))
         .crossJoin(RdfMeasures.predicateOutDegree(e)))
@@ -164,7 +161,7 @@ object KgQueries {
       // filtered tail-corruption negatives over the integer-encoded
       // triple table (one candidate per input edge, parallel edges kept)
       val e = liEdges(s, dir)
-      val ids = graft.graph.GraphTables.vertexIds(e).cache()
+      val ids = graft.graph.GraphTables.vertexIds(e)
       val it = graft.graph.GraphTables.intEdges(e, ids)
         .select(col("src_id"),
           substring(col("label"), 2, 10).cast("long").as("label_id"),

@@ -81,7 +81,8 @@ object MoreQueries {
         .select(concat(lit("s"), (col("s_suppkey") % 30).cast("string")).as("src"),
           concat(lit("m"), col("s_nationkey").cast("string")).as("dst"))
       val edges = nation.union(cust).union(supp)
-      val cc = ConnectedComponents.run(edges).cache() // the ONE fixpoint
+      // the ONE fixpoint, pinned: the census and the diameter's jobs read it
+      val cc = graft.Pin.pin(ConnectedComponents.run(edges))._1
       val sizes = ConnectedComponents.componentSizes(cc)
       val census = sizes.agg(
         count(lit(1)).cast("bigint").as("n_components"),
@@ -99,8 +100,7 @@ object MoreQueries {
     // harmonic(v) = sum over seeds s of 1/d(s, v), d > 0
     "kg_harmonic" -> ((s, dir) => {
       import graft.algo.Bfs
-      val e = liEdges(s, dir).select("src", "dst").distinct()
-        .localCheckpoint(true)
+      val e = Bfs.prepareAdj(liEdges(s, dir))
       val seeds = e.groupBy("src").agg(count(lit(1)).as("od"))
         .orderBy(col("od").desc, col("src").desc).limit(4)
         .collect().map(_.getString(0)).toSeq // O(k) driver rows

@@ -462,4 +462,28 @@ class PlanSpec extends AnyFunSuite {
     assert(lines.contains("==== kg_basic: plan ====") &&
       lines.exists(_.contains("== Physical Plan ==")))
   }
+
+  test("the queries whose plan construction runs Spark jobs are exactly the listed ones") {
+    // parquet schema inference runs a job per read (call site "parquet at
+    // ..."); a query that runs any other job while its plan is built (a
+    // pin, a kernel's rounds, a collected value, a zipWithIndex
+    // or a started stream) is listed here
+    val started = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (q, build) =>
+      val sites = SparkTestSession.jobSitesDuring { build(spark, sf); () }
+        .filterNot(_.startsWith("parquet at "))
+      if (sites.isEmpty) None else Some(q)
+    }.toSet
+    val expected = Set(
+      "doc_bpe_merges", "doc_contamination_bloom", "doc_dedup_clusters", "doc_label_prop",
+      "doc_pack", "doc_sorted_neighborhood", "ev_window", "kg_basic", "kg_betweenness",
+      "kg_bfs", "kg_bgp", "kg_bgp_snowflake", "kg_canon_incremental", "kg_cc", "kg_closeness",
+      "kg_degree_stats", "kg_eigenvector", "kg_eigenvector_distribution", "kg_gini",
+      "kg_harmonic", "kg_hindex", "kg_hits", "kg_kcore", "kg_khop", "kg_ktruss", "kg_lpa",
+      "kg_measures_shared", "kg_negative_samples", "kg_node2vec", "kg_pagerank",
+      "kg_pagerank_distribution", "kg_powerlaw", "kg_powerlaw_in", "kg_ppr",
+      "kg_pseudo_diameter", "kg_reciprocity", "kg_scc", "kg_tc_closure", "kg_vertex_ids",
+      "kg_vertex_ids_first_seen", "kg_walks", "kg_weighted_pagerank")
+    assert(started == expected,
+      s"unlisted: ${(started -- expected).toSeq.sorted}; listed, job-free: ${(expected -- started).toSeq.sorted}")
+  }
 }

@@ -22,14 +22,15 @@ object SparkTestSession {
   def jobsDuring(body: => Unit): Int = jobSitesDuring(body).size
 
   /** The short call site of each Spark job started while `body` runs, in
-    * start order ("" where none was set).
+    * start order: the one set by the caller, else the name Spark gave the
+    * job's result stage (e.g. "parquet at QueryUtil.scala:12").
     */
   def jobSitesDuring(body: => Unit): Seq[String] = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         sites.add(Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse(""))
+          .orElse(js.stageInfos.sortBy(-_.stageId).headOption.map(_.name)).getOrElse(""))
     }
     spark.sparkContext.addSparkListener(l)
     try { body; org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext) }
