@@ -12,7 +12,11 @@ import org.apache.spark.sql.graft.Bridge
   *    a loop reads;
   *  - do not pin a frame that only the branches of one action read through
   *    the same exchange: Spark runs the identical exchange once and reuses
-  *    it (`ReusedExchange`);
+  *    it (`ReusedExchange`). The exchange is identical only when every
+  *    branch reads the same columns under the same filters; column pruning
+  *    or a pushed filter gives a branch its own exchange and its own pass
+  *    over the source, so build such a frame as one branch
+  *    (`ops.Dedup.minhashLshCandidatesArrays`);
   *  - do not pin a frame that is read once.
   *
   * How: a pin is an eager `localCheckpoint`, never `cache()` or `persist`.
@@ -27,9 +31,9 @@ import org.apache.spark.sql.graft.Bridge
   *
   * Release: a checkpoint is never registered in the CacheManager, so no
   * caller holds a handle or calls `unpersist`. The ContextCleaner frees its
-  * blocks once its frame is unreachable. The one early release is
+  * blocks once its frame is unreachable. The early release is
   * [[Bridge.releaseCheckpoints]], which `algo.Fixpoint.converge` calls for
-  * each superseded round.
+  * each superseded round and `algo.ConnectedComponents` for its input pin.
   *
   * Under AQE (on in every project session) a lazy checkpoint truncates the
   * plan but defers no work: it runs each shuffle and broadcast stage of the
@@ -65,10 +69,13 @@ private[graft] object Pin {
     * `max(1, min(current, n / rowsPerPartition + 1))` partitions: one task
     * per stage for a small frame, about `rowsPerPartition` rows each for a
     * large one, never more partitions than it has. No shuffle, no copy.
+    * A one-partition frame is coalesced too: only `coalesce(1)` reports a
+    * single partition, so a later aggregate or join on other keys adds no
+    * exchange and no job.
     */
   def coalesced(df: DataFrame, n: Long, rowsPerPartition: Long): DataFrame = {
     val cur = df.rdd.getNumPartitions
     val p = math.max(1L, math.min(cur.toLong, n / rowsPerPartition + 1L)).toInt
-    if (p < cur) df.coalesce(p) else df
+    if (p < cur || p == 1) df.coalesce(p) else df
   }
 }

@@ -14,23 +14,24 @@ import graft.Pin
   *
   * The adjacency prep (dedup + [[Pin.pin]]) is hoisted into
   * [[prepareAdj]] so that (a) callers whose edge set is ALREADY distinct
-  * pass `assumeDistinct = true` and skip a full re-dedup exchange of the
-  * edge table, and (b) [[pseudoDiameter]] pays the prep once for all its
-  * sweeps instead of once per sweep.
+  * and pinned pass `assumeDistinct = true` and skip both the re-dedup
+  * exchange and the copy, and (b) [[pseudoDiameter]] pays the prep once
+  * for all its sweeps instead of once per sweep.
   */
 object Bfs {
 
   /** Deduped, pinned (src, dst) adjacency for the level loops, and for
     * every caller that reads a distinct edge set more than once.
-    * `assumeDistinct` skips the dedup exchange when the caller's edge set
-    * is distinct already (BFS distances are identical on the
-    * multigraph and its simple projection — dedup is purely a
-    * don't-join-duplicates optimization, so trusting the caller is safe
-    * for correctness even if mis-declared).
+    * `assumeDistinct = true` promises that `edges` is distinct on
+    * (src, dst) and already pinned (a frame this method returned, or a
+    * projection of a pinned table): its projection is returned with no
+    * dedup and no second pin. BFS distances are identical on the
+    * multigraph and its simple projection, so a mis-declared duplicate
+    * costs only duplicate join rows.
     */
   def prepareAdj(edges: DataFrame, assumeDistinct: Boolean = false): DataFrame = {
     val sel = edges.select("src", "dst")
-    Pin.pin(if (assumeDistinct) sel else sel.distinct())._1
+    if (assumeDistinct) sel else Pin.pin(sel.distinct())._1
   }
 
   /** distances (vertex, dist) from `source` following src->dst edges. */

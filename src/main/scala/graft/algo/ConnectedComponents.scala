@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.Pin
 
@@ -20,8 +21,11 @@ import graft.Pin
 object ConnectedComponents {
 
   /** The undirected edge set in CANONICAL form — one row (a, b) with
-    * a > b per unordered pair, self-loops dropped, deduplicated on the
-    * pair key. Canonical-before-explode, deliberately:
+    * a >= b per unordered pair, deduplicated on the pair key. Self-loops
+    * stay (a = b), and an edge with a null endpoint keeps both endpoints,
+    * so that every input vertex reaches the vertex universe; the star
+    * rounds start from the a > b rows. Canonical-before-explode,
+    * deliberately:
     *
     *  - **Half the shuffle.** Deduplicating the canonical pair moves HALF
     *    the rows of deduplicating the symmetrized (u, v) set (the r4–r9
@@ -42,11 +46,14 @@ object ConnectedComponents {
     *    entity pair inside one conversation collapse in the scan
     *    partition, where a `repartition` ships every copy.
     */
-  private def canonEdges(edges: DataFrame): DataFrame =
-    edges.where(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("a"),
-        least(col("src"), col("dst")).as("b"))
+  private def canonPairs(edges: DataFrame): DataFrame = {
+    // not greatest/least, which skip a null and would drop it from the
+    // universe: a null comparison keeps the row as (dst, src)
+    val fwd = col("src") >= col("dst")
+    edges.select(when(fwd, col("src")).otherwise(col("dst")).as("a"),
+        when(fwd, col("dst")).otherwise(col("src")).as("b"))
       .dropDuplicates("a", "b")
+  }
 
   /** Symmetrized (u, v) view of a canonical (a, b) a>b pair set: each row
     * explodes to both directions. Distinct by construction (the canonical
@@ -108,33 +115,37 @@ object ConnectedComponents {
     * savings only pay when the per-round shuffle volume dominates the
     * per-round job latency.
     *
+    * `edges` is read by exactly one job: the eager [[Pin.pin]] of its
+    * canonical pair set ([[canonPairs]]). The vertex universe and the
+    * first star round are both derived from that pin, and it is released
+    * once both are pinned. A caller therefore needs no pin of its own to
+    * keep an expensive edge chain (a similarity join) from running twice.
+    *
     * Star rounds that have not converged after `maxIter` rounds throw.
     */
   def run(edges: DataFrame, maxIter: Int = 50,
           encodeMinVertices: Long = 500000L): DataFrame = {
-    // vertex universe, pinned EAGERLY while the input chain is being paid
-    // anyway: the final fill must see every input vertex (incl.
-    // self-loop-only ones the pairs drop), and deriving it lazily from
-    // `edges` re-evaluated the caller's entire upstream plan once per
-    // consumption of the result — for a caller whose edge table is an
-    // expensive similarity chain (incremental canonicalization) that
-    // tripled the query. |V| also sizes the per-round broadcast decision
-    // (BroadcastMaxVertices); the pin is coalesced at the star rounds'
-    // RowsPerPartition budget.
-    val (allVs, m) = Pin.pin(edges
-      .select(explode_outer(array(col("src"), col("dst"))).as("vertex"))
+    // the vertex universe is pinned on its own: the final fill reads it,
+    // and |V| sizes the per-round broadcast decision (BroadcastMaxVertices)
+    val pairs = Pin.pin(canonPairs(edges), budget = Some(RowsPerPartition))._1
+    val (allVs, m) = Pin.pin(pairs
+      .select(explode_outer(array(col("a"), col("b"))).as("vertex"))
       .distinct(), budget = Some(RowsPerPartition)) // one scan, not union-of-two-selects
     val nV = m.getLong(0)
-    if (numericVertices(edges)) return fill(allVs, fixpoint(edges, maxIter, nV))
-    if (nV < encodeMinVertices) return fill(allVs, fixpoint(edges, maxIter, nV))
+    val round0 = pairs.where(col("a") =!= col("b")) // no self-loops, no null endpoint
+    if (numericVertices(edges)) return fill(allVs, fixpoint(round0, maxIter, nV))
+    if (nV < encodeMinVertices) return fill(allVs, fixpoint(round0, maxIter, nV))
 
     val vmap = allVs.select(col("vertex"), xxhash64(col("vertex")).as("vh"))
     val nh = vmap.agg(count_distinct(col("vh")).as("nh")).head().getLong(0)
     if (nh != nV)
-      return fill(allVs, fixpoint(edges, maxIter, nV)) // hash collision: iterate originals
+      return fill(allVs, fixpoint(round0, maxIter, nV)) // hash collision: iterate originals
 
-    val enc = edges.select(
-      xxhash64(col("src")).as("src"), xxhash64(col("dst")).as("dst"))
+    // the hash is injective on the universe, so the encoded pairs are
+    // distinct and loop-free; only their (a > b) orientation changes
+    val ha = xxhash64(col("a"))
+    val hb = xxhash64(col("b"))
+    val enc = round0.select(greatest(ha, hb).as("a"), least(ha, hb).as("b"))
     val ccL = fixpoint(enc, maxIter, nV) // (vertex: long, component: long)
     // decode (|V|-sized): original vertex -> long component group, then
     // restore canonical naming as the min original member id
@@ -166,11 +177,11 @@ object ConnectedComponents {
     */
   private val RowsPerPartition = 65536L
 
-  /** Large-star/small-star fixpoint over vertices that appear in at least
-    * one non-self-loop edge; returns (vertex, component = min reachable id
-    * under the INPUT type's ordering).
+  /** Large-star/small-star fixpoint from `canon`, a distinct a > b pair
+    * set over the pinned [[canonPairs]] of [[run]]; returns (vertex,
+    * component = min reachable id under the INPUT type's ordering).
     */
-  private def fixpoint(edges: DataFrame, maxIter: Int, nVertices: Long): DataFrame = {
+  private def fixpoint(canon: DataFrame, maxIter: Int, nVertices: Long): DataFrame = {
     // Broadcast the mins table only when the pair set DWARFS the vertex
     // universe: building + shipping a |V|-row hash relation is serial-ish
     // work at every parallelism (measured: it inflated the post-round-0
@@ -188,9 +199,12 @@ object ConnectedComponents {
     // XOR is a faithful set signature, and the canonical set determines
     // the symmetrized one.
     val sig = Seq(coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h"))
-    val star = Fixpoint.converge("CC", canonEdges(edges), maxIter, sig,
-        Some(RowsPerPartition)) { (canon, m) =>
-      val pairs = expand(canon)
+    val star = Fixpoint.converge("CC", canon, maxIter, sig,
+        Some(RowsPerPartition)) { (state, m) =>
+      // round 0 is pinned, so nothing reads run's pair-set pin any more
+      // (a repeated release is harmless)
+      Bridge.releaseCheckpoints(canon)
+      val pairs = expand(state)
       // large-star: connect every neighbor v > u to m = min(N(u) u {u}).
       // Output invariant: a = v > u >= mn = b, so ls is canonical (a > b).
       val ls = {
@@ -211,7 +225,7 @@ object ConnectedComponents {
           .where(col("a") =!= col("b"))
       }
       // the round's ONE pair-set exchange is this dedup, on the skew-free
-      // canonical key with map-side partial aggregation (see canonEdges)
+      // canonical key with map-side partial aggregation (see canonPairs)
       ss.dropDuplicates("a", "b")
     }.orFail
     // the (member > root) star: component = min neighbor for members, self

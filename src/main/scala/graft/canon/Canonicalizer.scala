@@ -102,9 +102,9 @@ object Canonicalizer {
           (size(col("__ha")) + size(col("__hb")) - col("__inter")) >= minJ)
       .select(col("a").as("src"), col("b").as("dst"))
 
-    // pinned: the CC kernel scans its edge input in several jobs (vertex
-    // universe + the first star round), so the LSH + verify joins run once
-    val cc = ConnectedComponents.run(Pin.pin(exactEdges.union(verified))._1)
+    // the CC kernel reads its edge input in one job, so the LSH + verify
+    // joins run once
+    val cc = ConnectedComponents.run(exactEdges.union(verified))
     // surfaces that collected no edge are their own canonical form
     s.join(cc.withColumnRenamed("vertex", "surface"), Seq("surface"), "left_outer")
       .select(col("surface"), coalesce(col("component"), col("surface")).as("canonical"))
@@ -183,7 +183,7 @@ object Canonicalizer {
                               shingleK: Int = 3, rowsPerBand: Int = 2,
                               minJ: Double = 0.5): DataFrame = {
     val k = shingleK
-    // pm and nw are pinned (see Pin): the new-surface pin, the edge pin
+    // pm and nw are pinned (see Pin): the new-surface pin, CC's edge pin
     // and the final join each read them
     val pm = Pin.pin(prior.select(col("surface"), col("canonical")))._1
     val ps = pm.select(col("surface"))
@@ -249,9 +249,8 @@ object Canonicalizer {
       .select(coalesce(col("__s_c"), col("src")).as("src"),
         coalesce(col("__d_c"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
-    // pinned: the CC kernel's jobs evaluate this chain (bands + verify +
-    // anchor joins) several times otherwise
-    val cc = ConnectedComponents.run(Pin.pin(edges)._1)
+    // one read of this chain (bands + verify + anchor joins): CC's pin
+    val cc = ConnectedComponents.run(edges)
     val anchors = pm.select(col("canonical").as("vertex")).distinct()
     val compAnchor = cc.join(anchors, "vertex")
       .groupBy("component").agg(min("vertex").as("anchor"))

@@ -176,28 +176,27 @@ object CoreMeasures {
   def pseudoDiameter(edges: DataFrame,
                      precomputedCC: Option[DataFrame] = None): DataFrame = {
     import graft.algo.{Bfs, ConnectedComponents}
+    import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     val cc = precomputedCC.getOrElse(graft.Pin.pin(ConnectedComponents.run(edges))._1)
     val top = ConnectedComponents.componentSizes(cc)
       .orderBy(col("size").desc, col("component").asc).limit(1).collect()
-    def maxOutSource(e: DataFrame): String =
-      e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-        .agg(max_by(col("src"), struct(col("od"), col("src"))))
-        .head().getString(0)
-    // the selected edge set is read by the source-degree aggregation AND by
-    // every BFS sweep: checkpoint the (possibly semi-joined) multigraph once
-    // so neither consumer re-executes the caller's upstream plan
-    val useEdges = graft.Pin.pin(
-      if (top.isEmpty || top.head.getLong(1) <= 1) edges.select("src", "dst")
+    // the selected edge set as ONE pinned (src, dst, n) multiplicity
+    // table, which every BFS sweep reads as its distinct adjacency. The
+    // source comes from the pin's own job: each row carries its source's
+    // multigraph out-degree Σn, and the observed max_by keeps the tie rule
+    val sel = edges.select("src", "dst")
+    val (adj, m) = graft.Pin.pin(
+      (if (top.isEmpty || top.head.getLong(1) <= 1) sel
       else {
         val comp = top.head.getString(0)
         val members = cc.where(col("component") === comp).select(col("vertex"))
-        edges.select("src", "dst")
-          .join(members.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
+        sel.join(members.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
           .join(members.withColumnRenamed("vertex", "dst"), Seq("dst"), "left_semi")
-      })._1
-    val source = maxOutSource(useEdges)
-    val (d, s, t) = Bfs.pseudoDiameter(useEdges, source)
+      }).groupBy("src", "dst").agg(count(lit(1)).as("n"))
+        .withColumn("od", sum(col("n")).over(Window.partitionBy("src"))),
+      Seq(max_by(col("src"), struct(col("od"), col("src")))))
+    val (d, s, t) = Bfs.pseudoDiameter(adj, m.getString(1), assumeDistinct = true)
     import spark.implicits._
     Seq((d, s, t)).toDF("pseudo_diameter", "pseudo_diameter_src_vertex", "pseudo_diameter_trg_vertex")
   }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * graphs), produced by one distributed groupBy over the vertices. A
   * distributed plan over the histogram would funnel the same rows through
   * one task (a global window) and pay a Spark job per step for no
-  * parallelism. The DataFrame overloads are the query entry points: they
-  * collect the histogram and return a one-row table.
+  * parallelism. [[powerlawFit]]'s DataFrame overload is a query entry
+  * point: it collects the histogram and returns a one-row table.
   */
 object DistributionMeasures {
 
@@ -57,12 +57,6 @@ object DistributionMeasures {
       Some(num / (n * (sum + n * (shift + eps))))
     }
 
-  /** [[gini]] of a histogram DataFrame as one row (gini). */
-  def gini(hist: DataFrame): DataFrame = {
-    import hist.sparkSession.implicits._
-    Seq(Tuple1(gini(collect(hist)))).toDF("gini")
-  }
-
   /** h-index: largest h such that at least h values are >= h
     * (`degree_based.py:103-113`). Per distinct value x with N_ge values >= x,
     * the candidate is min(x, N_ge); h = max over candidates, 0 when empty.
@@ -74,12 +68,6 @@ object DistributionMeasures {
       nGe += cnt
       math.floor(math.min(x, nGe.toDouble)).toLong
     }.maxOption.getOrElse(0L)
-  }
-
-  /** [[hIndex]] of a histogram DataFrame as one row (h_index). */
-  def hIndex(hist: DataFrame): DataFrame = {
-    import hist.sparkSession.implicits._
-    Seq(Tuple1(hIndex(collect(hist)))).toDF("h_index")
   }
 
   /** Continuous CSN power-law fit, semantics of `powerlaw.Fit(data)` as used

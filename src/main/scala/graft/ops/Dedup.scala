@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -281,16 +281,20 @@ object Dedup {
   /** LSH candidates over the MAP-ONLY array signatures
     * ([[minhashSignatureArrays]]): banding, the band digests, and the
     * full-signature collapse key are all per-row projections, so the
-    * signature table itself never shuffles — the only wide stages are the
-    * band self-join, the rep min-aggregation, and the rep join-back
-    * (collapse on), every one keyed on an 8-byte xxhash64 digest.
+    * signature table itself never shuffles. The wide stages are the band
+    * self-join and, with collapse on, the rep window, each keyed on an
+    * 8-byte xxhash64 digest.
     *
-    * Determinism matters for the plan, not just the result: the digests are
-    * pure functions of `mhs` (no collect_list anywhere), so Spark's
-    * exchange-reuse dedupes the two sides of the band self-join instead of
-    * recomputing the signature projection per branch (the non-deterministic
-    * collect_list in the legacy path defeats canonicalization and with it
-    * every reuse opportunity).
+    * One branch, one signature pass: exchange reuse only merges identical
+    * subtrees, so branches that read the signature projection with
+    * different columns or filters each re-run the md5-heavy
+    * shingle+minhash pass (a min-id aggregate joined back reads it
+    * twice). One window `min(id) over (partition by fullsig)` names each
+    * row's rep, and one `explode_outer` emits the rep's band rows or a
+    * member's single null-band row, its star edge; the band self-join and
+    * the stars both read that frame, so they share the window's one
+    * exchange. A hot identical-signature group costs one task's spillable
+    * sort.
     *
     * Digest collision class: xxhash64 on the minhash array — injective up
     * to 64-bit collisions, the same acceptance class as the md5 text keys
@@ -300,48 +304,35 @@ object Dedup {
     */
   def minhashLshCandidatesArrays(sigArrays: DataFrame, rowsPerBand: Int,
                                  collapse: Boolean = true): DataFrame = {
-    val nb = ((size(col("mhs")) + lit(rowsPerBand - 1)) / lit(rowsPerBand)).cast("int")
-    val bandsCol = transform(
-      sequence(lit(0), nb - 1),
-      b => struct(b.cast("int").as("band"),
-        xxhash64(slice(col("mhs"), b * rowsPerBand + 1, lit(rowsPerBand))).as("sig")))
-    // ONE deterministic exchange pinned directly above the signature
-    // projection: the plan fans withSigs into several branches (the rep
-    // aggregation, the rep join-back, both sides of the band self-join),
-    // and without a common shuffle boundary each branch would re-run the
-    // md5-heavy shingle+minhash projection from the source (measured 30x
-    // wall-time blowup at sf0.1). With it, ReusedExchange/AQE-stage-reuse
-    // computes the projection once and every branch reads the shuffle
-    // files — payload is the compact (id, 8 longs) table, orders of
-    // magnitude smaller than the exploded per-(id, i) signature shuffle
-    // the legacy path pays.
-    val withSigs = sigArrays.select(col("id"),
-      xxhash64(col("mhs")).as("fullsig"), bandsCol.as("__bands"))
-      .repartition(col("id"))
-    // explode_OUTER, deliberately: __bands is never empty (nb >= 1 for the
-    // fixed-k signature array), but plain explode triggers
-    // InferFiltersFromGenerate, whose size(__bands) > 0 predicate gets
-    // pushed below the exchange with the ENTIRE bands+minhash+md5 tree
-    // inlined into the filter — re-hashing every shingle of every row once
-    // more per plan branch (measured 45x wall-time at sf0.1). The outer
-    // generate has identical output here and infers nothing.
-    def explodeBands(df: DataFrame): DataFrame =
-      df.select(col("id"), explode_outer(col("__bands")).as("__b"))
-        .select(col("id"), col("__b.band").as("band"), col("__b.sig").as("sig"))
+    import org.apache.spark.sql.expressions.Window
     def bandPairs(b: DataFrame): DataFrame =
       b.as("x").join(b.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.id") < col("y.id"))
         .select(col("x.id").as("a"), col("y.id").as("b"))
         .distinct()
-    if (!collapse) bandPairs(explodeBands(withSigs))
+    if (!collapse) bandPairs(bandTable(sigArrays, rowsPerBand))
     else {
-      val reps = withSigs.groupBy("fullsig").agg(min("id").as("rep"))
-      val withRep = withSigs.join(reps, "fullsig") // carries __bands through
-      val stars = withRep.where(col("id") =!= col("rep"))
+      // rep = min id of the row's identical-signature group; only reps band
+      val rows = sigArrays
+        .select(col("id"), xxhash64(col("mhs")).as("fullsig"), bands(rowsPerBand).as("__bands"))
+        .withColumn("rep", min(col("id")).over(Window.partitionBy("fullsig")))
+        .select(col("id"), col("rep"),
+          explode_outer(when(col("id") === col("rep"), col("__bands"))).as("__b"))
+      val stars = rows.where(col("id") =!= col("rep"))
         .select(col("rep").as("a"), col("id").as("b")) // rep = min id, so a < b
-      bandPairs(explodeBands(withRep.where(col("id") === col("rep")))).union(stars)
+      bandPairs(rows.where(col("id") === col("rep"))
+        .select(col("id"), col("__b.band").as("band"), col("__b.sig").as("sig"))).union(stars)
     }
+  }
+
+  /** The band digests of `mhs` as one array: a (band, sig) struct per
+    * band of `rowsPerBand` minhashes, `sig` = xxhash64 of its slice. */
+  private def bands(rowsPerBand: Int): Column = {
+    val nb = ((size(col("mhs")) + lit(rowsPerBand - 1)) / lit(rowsPerBand)).cast("int")
+    transform(sequence(lit(0), nb - 1),
+      b => struct(b.cast("int").as("band"),
+        xxhash64(slice(col("mhs"), b * rowsPerBand + 1, lit(rowsPerBand))).as("sig")))
   }
 
   /** Exploded band table over array signatures: (id, band, sig) with one
@@ -350,18 +341,18 @@ object Dedup {
     * but exposed as a table, for consumers that join band buckets across
     * TWO signature sets (e.g. incremental canonicalization probing a new
     * batch against a persisted prior band table) instead of running the
-    * single-set self-join. explode_outer for the same
-    * InferFiltersFromGenerate reason documented above.
+    * single-set self-join.
+    *
+    * `explode_outer` here and in [[minhashLshCandidatesArrays]]: a plain
+    * explode triggers InferFiltersFromGenerate, whose size(...) > 0
+    * predicate is pushed below the exchange with the whole bands+minhash
+    * tree inlined into it — one more hashing pass per row per plan branch
+    * (measured 45x wall-time at sf0.1). A null band array yields one
+    * null-band row, which joins nothing.
     */
-  def bandTable(sigArrays: DataFrame, rowsPerBand: Int): DataFrame = {
-    val nb = ((size(col("mhs")) + lit(rowsPerBand - 1)) / lit(rowsPerBand)).cast("int")
-    val bandsCol = transform(
-      sequence(lit(0), nb - 1),
-      b => struct(b.cast("int").as("band"),
-        xxhash64(slice(col("mhs"), b * rowsPerBand + 1, lit(rowsPerBand))).as("sig")))
-    sigArrays.select(col("id"), explode_outer(bandsCol).as("__b"))
+  def bandTable(sigArrays: DataFrame, rowsPerBand: Int): DataFrame =
+    sigArrays.select(col("id"), explode_outer(bands(rowsPerBand)).as("__b"))
       .select(col("id"), col("__b.band").as("band"), col("__b.sig").as("sig"))
-  }
 
   /** SimHash near-dup pairs with pigeonhole banding over a `bits`-wide
     * SimHash (default 60): the hash splits into `maxHamming + 1` bands, so

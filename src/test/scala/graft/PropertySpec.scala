@@ -63,10 +63,10 @@ class PropertySpec extends AnyFunSuite {
       if (es.nonEmpty) {
         val edges = es.toDF("src", "dst", "label")
         val deg = Degrees.degrees(edges)
-        val hist = Degrees.histogram(deg, "deg")
-        val g = DistributionMeasures.gini(hist).head().getDouble(0)
+        val hist = Degrees.histograms(deg)("deg")
+        val g = DistributionMeasures.gini(hist).get
         assert(g >= -1e-12 && g <= 1.0)
-        val h = DistributionMeasures.hIndex(hist).head().getLong(0)
+        val h = DistributionMeasures.hIndex(hist)
         assert(h <= math.sqrt(2.0 * es.size) + 1)
       }
     }
