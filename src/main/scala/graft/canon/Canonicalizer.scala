@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Pin
 import graft.algo.ConnectedComponents
 import graft.extract.Extractor
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, SimJoin}
 
 /** Entity canonicalization (north rule): MinHash-LSH blocking over character
   * shingles of the normalized surface form, Jaccard verification, then the
@@ -33,6 +33,29 @@ object Canonicalizer {
       .where(col("surface") =!= col("hub"))
       .select(col("hub").as("src"), col("surface").as("dst"))
   }
+
+  /** Appends `hs`, the hashed distinct char k-shingle set of `norm` — one
+    * array column per surface, from which the signatures and the verify
+    * sets both read. NATIVE codegen kernel (graft.functions.PortableMinhash):
+    * the transform/array_min lambda chain is CodegenFallback (interpreted
+    * per element); the compiled loop computes the identical values (OpsSpec
+    * twin-equality).
+    */
+  private def withShingleHashes(withNorm: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge
+    withNorm.withColumn("hs", Bridge.column(graft.functions.CharShingleHash31(
+      Bridge.expression(col("norm")), k)))
+  }
+
+  /** (id = surface, mhs): the MinHash signature arrays of
+    * [[withShingleHashes]] rows — MAP-ONLY, where the composed formulation
+    * paid a distinct shuffle plus a coeff-crossJoin-groupBy shuffle; at
+    * 10^8+ extracted surfaces those two shuffles dominate the
+    * canonicalization stage. The array form feeds the LSH directly, so the
+    * signature table never shuffles.
+    */
+  private def shingleSigs(withHs: DataFrame): DataFrame =
+    withHs.select(col("surface").as("id"), Dedup.minhashSigs(col("hs")).as("mhs"))
 
   /** Character k-shingles of the normalized surface. */
   def charShingles(surfaces: DataFrame, k: Int): DataFrame = {
@@ -62,44 +85,13 @@ object Canonicalizer {
     // (a) exact edges through the normalized form (star, not all-pairs)
     val exactEdges = exactNormEdges(withNorm)
 
-    // (b) near-dup edges: minhash signatures over char shingles. The
-    // hashed distinct-shingle set is one array column (materialized once
-    // per surface) and all signatures are array minima over it — MAP-ONLY,
-    // where the composed formulation paid a distinct shuffle plus a
-    // coeff-crossJoin-groupBy shuffle; at 10^8+ extracted surfaces those
-    // two shuffles dominate the canonicalization stage
-    val k = shingleK
-    // NATIVE codegen char-shingle hashing + signature minima
-    // (graft.functions.PortableMinhash): the transform/array_min lambda
-    // chain is CodegenFallback (interpreted per element); the compiled
-    // loop computes the identical values (OpsSpec twin-equality)
-    import org.apache.spark.sql.graft.Bridge
-    val withHs = withNorm.withColumn("hs",
-      Bridge.column(graft.functions.CharShingleHash31(
-        Bridge.expression(col("norm")), k)))
-    // array form feeds the LSH directly — the signature table never
-    // shuffles (Dedup.minhashLshCandidatesArrays scaladoc)
-    val sigArrays = withHs.select(col("surface").as("id"),
-      Bridge.column(graft.functions.MinhashSigs(
-        Bridge.expression(col("hs")),
-        Dedup.MinhashCoeffs.map(_._1), Dedup.MinhashCoeffs.map(_._2),
-        Dedup.MinhashPrime)).as("mhs"))
-    val cands = Dedup.minhashLshCandidatesArrays(sigArrays, rowsPerBand)
-
-    // verify candidates at Jaccard >= minJ over the char shingle sets —
-    // per-PAIR array intersection on the stored hash arrays instead of the
-    // exploded (id, h) double-join + count + two size joins: the shuffled
-    // rows drop from Σ|hs| per candidate to 2 arrays per candidate, and
-    // the per-id size table disappears (guide §2.3 — shuffle fewer bytes).
-    // `inter >= 1` reproduces the inner double-join exactly (a pair with
-    // an empty intersection produced no row there)
-    val verified = cands
-      .join(withHs.select(col("surface").as("a"), col("hs").as("__ha")), "a")
-      .join(withHs.select(col("surface").as("b"), col("hs").as("__hb")), "b")
-      .withColumn("__inter", size(array_intersect(col("__ha"), col("__hb"))))
-      .where(col("__inter") >= 1 &&
-        col("__inter").cast("double") /
-          (size(col("__ha")) + size(col("__hb")) - col("__inter")) >= minJ)
+    // (b) near-dup edges: MinHash-LSH candidates over char shingles,
+    // verified at Jaccard >= minJ over the same shingle-hash sets
+    val withHs = withShingleHashes(withNorm, shingleK)
+    val cands = Dedup.minhashLshCandidatesArrays(shingleSigs(withHs), rowsPerBand)
+    val verified = SimJoin.verifyOverlap(cands,
+        withHs.select(col("surface").as("id"), col("hs").as("set")), "jaccard", minJ)(
+        SimJoin.jaccard)
       .select(col("a").as("src"), col("b").as("dst"))
 
     // the CC kernel reads its edge input in one job, so the LSH + verify
@@ -182,7 +174,6 @@ object Canonicalizer {
   def incrementalCanonicalize(prior: DataFrame, newSurfaces: DataFrame,
                               shingleK: Int = 3, rowsPerBand: Int = 2,
                               minJ: Double = 0.5): DataFrame = {
-    val k = shingleK
     // pm and nw are pinned (see Pin): the new-surface pin, CC's edge pin
     // and the final join each read them
     val pm = Pin.pin(prior.select(col("surface"), col("canonical")))._1
@@ -196,27 +187,13 @@ object Canonicalizer {
     val tnorm = nw.select(col("norm")).distinct()
     val grp = nw.select(col("surface"), col("norm")).unionByName(
       ps.join(tnorm, Seq("norm"), "left_semi").select(col("surface"), col("norm")))
-    val hubs = grp.groupBy("norm").agg(min("surface").as("h"))
-    val normEdges = grp.join(hubs, "norm")
-      .where(col("surface") =!= col("h"))
-      .select(col("h").as("src"), col("surface").as("dst"))
+    val normEdges = exactNormEdges(grp)
 
-    // (b) LSH candidates, new-side-driven: new bands join ALL bands.
-    // NATIVE codegen shingle hashing + signature minima (see canonicalize)
-    import org.apache.spark.sql.graft.Bridge
-    def withHs(df: DataFrame): DataFrame =
-      df.withColumn("hs", Bridge.column(graft.functions.CharShingleHash31(
-        Bridge.expression(col("norm")), k)))
-    def sigArrays(df: DataFrame): DataFrame =
-      df.select(col("surface").as("id"),
-        Bridge.column(graft.functions.MinhashSigs(
-          Bridge.expression(col("hs")),
-          Dedup.MinhashCoeffs.map(_._1), Dedup.MinhashCoeffs.map(_._2),
-          Dedup.MinhashPrime)).as("mhs"))
-    val hsNew = withHs(nw)
-    val hsPrior = withHs(ps)
-    val bNew = Dedup.bandTable(sigArrays(hsNew), rowsPerBand)
-    val bAll = bNew.unionByName(Dedup.bandTable(sigArrays(hsPrior), rowsPerBand))
+    // (b) LSH candidates, new-side-driven: new bands join ALL bands
+    val hsNew = withShingleHashes(nw, shingleK)
+    val hsPrior = withShingleHashes(ps, shingleK)
+    val bNew = Dedup.bandTable(shingleSigs(hsNew), rowsPerBand)
+    val bAll = bNew.unionByName(Dedup.bandTable(shingleSigs(hsPrior), rowsPerBand))
     val cands = bNew.as("x").join(bAll.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.id") =!= col("y.id"))
@@ -224,19 +201,11 @@ object Canonicalizer {
         greatest(col("x.id"), col("y.id")).as("b"))
       .distinct()
 
-    // verify candidates at char-shingle Jaccard >= minJ — per-PAIR array
-    // intersection on the stored hash arrays (see canonicalize: shuffles 2
-    // arrays per candidate instead of Σ|hs| exploded rows + a size table;
-    // `inter >= 1` reproduces the inner double-join exactly)
-    val hsAll = hsNew.select(col("surface").as("id"), col("hs"))
-      .unionByName(hsPrior.select(col("surface").as("id"), col("hs")))
-    val verified = cands
-      .join(hsAll.select(col("id").as("a"), col("hs").as("__ha")), "a")
-      .join(hsAll.select(col("id").as("b"), col("hs").as("__hb")), "b")
-      .withColumn("__inter", size(array_intersect(col("__ha"), col("__hb"))))
-      .where(col("__inter") >= 1 &&
-        col("__inter").cast("double") /
-          (size(col("__ha")) + size(col("__hb")) - col("__inter")) >= minJ)
+    // verify candidates at char-shingle Jaccard >= minJ (new and prior
+    // surfaces are disjoint: nw anti-joins the prior)
+    val hsAll = hsNew.select(col("surface").as("id"), col("hs").as("set"))
+      .unionByName(hsPrior.select(col("surface").as("id"), col("hs").as("set")))
+    val verified = SimJoin.verifyOverlap(cands, hsAll, "jaccard", minJ)(SimJoin.jaccard)
       .select(col("a").as("src"), col("b").as("dst"))
 
     // anchor-replace prior endpoints, then one CC merge

@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
-
   /** Exact dedup by text hash: one row per duplicate group with the kept
     * (minimum) id and the group size.
     */
@@ -31,67 +29,35 @@ object Dedup {
     * Blocking-key hygiene (the web-scale guard): without the df cap, the
     * candidate count is Σ df(shingle)² — one stop-shingle shared by 10⁶ docs
     * is a single-key ~10¹² pair explosion. Shingles with df > maxDf are
-    * dropped from CANDIDATE GENERATION only (the drop is logged); the Jaccard
-    * value itself is still computed exactly over every shingle, so surviving
-    * pairs have exact scores. Pairs whose only common shingles are hot ones
-    * are missed — the standard, documented recall trade of df-capped
-    * blocking; NOTE the cap is ON by default (maxDf = 1000), so default
-    * calls trade that recall for the bounded candidate count. `maxDf <= 0`
-    * disables the cap (test-scale only).
+    * dropped from CANDIDATE GENERATION only; the Jaccard value itself is
+    * still computed exactly over every shingle, so surviving pairs have
+    * exact scores. Pairs whose only common shingles are hot ones are
+    * missed — the standard, documented recall trade of df-capped blocking.
+    * The cap is required (`maxDf >= 1`, default 1000); a cap at the
+    * largest df of the data blocks nothing.
+    *
+    * Ids: rows sharing an id are one document, whose shingle set is the
+    * union of theirs (the distinct (id, shingle) table feeds both the
+    * blocking and the verify sets).
     *
     * This function is plan-construction only — no Spark job runs until the
     * caller acts on the result (the hot-shingle set is an anti-join inside
-    * the plan, not a driver-side lookup). Pass `auditDrops = true` for the
-    * diagnostic eager count of dropped shingles (one extra job; keep it off
-    * production hot paths).
+    * the plan, not a driver-side lookup).
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, minJ: Double, maxDf: Int = 1000,
-                        auditDrops: Boolean = false): DataFrame = {
+                        k: Int, minJ: Double, maxDf: Int = 1000): DataFrame = {
+    require(maxDf >= 1, "maxDf must be >= 1")
     val sh = TextOps.shingles(docs, idCol, textCol, k)
       .select(col(idCol).as("id"), col("shingle")).distinct()
-    val blocked = if (maxDf > 0) {
-      val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .where(col("df") > maxDf)
-      if (auditDrops) {
-        val Array(dropped, droppedRows) = hot
-          .agg(count(lit(1)), coalesce(sum("df"), lit(0L))).head()
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        log.warn(s"ngramJaccardPairs: dropping $dropped shingles with df > $maxDf " +
-          s"($droppedRows doc-shingle rows) from candidate generation")
-      }
-      sh.join(broadcast(hot.select("shingle")), Seq("shingle"), "left_anti")
-    } else sh
+    val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .where(col("df") > maxDf)
+    val blocked = sh.join(broadcast(hot.select("shingle")), Seq("shingle"), "left_anti")
     val cands = blocked.as("x").join(blocked.as("y"), Seq("shingle"))
       .where(col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()
-    // exact intersection over the FULL shingle sets by PER-PAIR array
-    // intersection: each candidate ships two shingle-set arrays instead of
-    // Σ|A∩B| exploded rows through a double join + count + two size joins
-    // (guide §2.3). Set sizes fall out of the arrays, so the separate
-    // `sizes` table disappears from this path; `inter >= 1` reproduces the
-    // inner double-join exactly (candidates share a blocked shingle that
-    // is present in both full sets, so no pair is lost even at minJ = 0).
-    // The array table is a DETERMINISTIC map-only projection (native
-    // shingle kernel + array_distinct — no explode/regroup, no eager job:
-    // plan construction stays job-free per PlanSpec, and the a/b join
-    // sides canonicalize for exchange reuse where a collect_list would
-    // not).
-    import org.apache.spark.sql.graft.Bridge
-    val arr = docs.select(col(idCol).as("id"),
-      array_distinct(Bridge.column(graft.functions.TokenShingles(
-        Bridge.expression(TextOps.tokens(col(textCol))), k, " "))).as("toks"))
-    cands
-      .join(arr.select(col("id").as("a"), col("toks").as("__ta")), "a")
-      .join(arr.select(col("id").as("b"), col("toks").as("__tb")), "b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))))
-      .where(col("inter") >= 1)
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("__ta")) + size(col("__tb")) - col("inter")))
-      .where(col("jaccard") >= minJ)
-      .select(col("a"), col("b"), col("jaccard"))
+    SimJoin.verifyOverlap(cands, SimJoin.setTable(sh, "shingle"), "jaccard", minJ)(
+      SimJoin.jaccard)
   }
 
   /** Incremental-ingestion dedup: the rows of `docs` that are genuinely
@@ -129,6 +95,8 @@ object Dedup {
     * matter — which is also why the df cap costs little recall here),
     * empty tokens dropped on both engines.
     *
+    * The df cap is required (`maxDf >= 1`, default 1000).
+    *
     * Scale shape: everything is keyed on the term or the (a, b) pair —
     * tf/df/norm are single aggregations, candidate generation only joins
     * df-capped postings, and the exact-dot join ships each candidate pair
@@ -136,21 +104,11 @@ object Dedup {
     * (no driver-side count — construction stays job-free).
     */
   def tfidfCosinePairs(docs: DataFrame, idCol: String, textCol: String,
-                       minCos: Double, maxDf: Int = 1000,
-                       auditDrops: Boolean = false): DataFrame = {
+                       minCos: Double, maxDf: Int = 1000): DataFrame = {
+    require(maxDf >= 1, "maxDf must be >= 1")
     val w = TextOps.tfidfWeights(docs, idCol, textCol)
     val norms = w.groupBy("id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-    val blocked = if (maxDf > 0) {
-      if (auditDrops) {
-        val Array(dropped, droppedRows) = w.select("term", "df").distinct()
-          .where(col("df") > maxDf)
-          .agg(count(lit(1)), coalesce(sum("df"), lit(0.0)).cast("long")).head()
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        log.warn(s"tfidfCosinePairs: dropping $dropped terms with df > $maxDf " +
-          s"($droppedRows doc-term rows) from candidate generation")
-      }
-      w.where(col("df") <= maxDf)
-    } else w
+    val blocked = w.where(col("df") <= maxDf)
     val cands = blocked.select(col("id"), col("term")).as("x")
       .join(blocked.select(col("id").as("id2"), col("term")).as("y"), "term")
       .where(col("id") < col("id2"))
@@ -176,57 +134,58 @@ object Dedup {
     (317489L, 875929L), (661393L, 421807L), (739217L, 582341L), (258911L, 742297L))
   val MinhashPrime = 2147483647L
 
-  /** MinHash signatures: (id, i, minhash_i) for i in 0..k-1 over k-shingles.
-    * h31 keeps a_i * h < 2^51 — no overflow under ANSI mode.
+  /** The portable MinHash signature of a shingle-hash array `hs`: `mhs[i]`
+    * = min over h of (a_i * h + b_i) mod [[MinhashPrime]], for the
+    * [[MinhashCoeffs]] family. h31 keeps a_i * h < 2^51 — no overflow
+    * under ANSI mode.
     *
-    * MAP-ONLY: the shingle set, its hashes, and all k minima are computed
-    * as array expressions inside one projection — the composed twin
-    * (in the tests) pays a distinct shuffle plus a
-    * coeff-crossJoin-groupBy shuffle for the same result. Documents with
-    * no shingle (shorter than shingleK tokens) emit no rows, matching the
-    * composed path.
+    * NATIVE codegen kernel (graft.functions.PortableMinhash): the composed
+    * transform/array_min lambdas are CodegenFallback and evaluate
+    * interpreted at ~10 ms/row — multiplied by every plan branch that
+    * re-inlines the projection. One compiled loop per row computes the
+    * identical values (OpsSpec pins bit-equality against the composed
+    * twin).
     */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int): DataFrame =
-    minhashSignatureArrays(docs, idCol, textCol, shingleK)
-      .select(col("id"), posexplode(col("mhs")).as(Seq("i", "mh")))
+  private[graft] def minhashSigs(hs: Column): Column = {
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(graft.functions.MinhashSigs(Bridge.expression(hs),
+      MinhashCoeffs.map(_._1), MinhashCoeffs.map(_._2), MinhashPrime))
+  }
 
-  /** Array form of [[minhashSignatures]]: one MAP-ONLY row per document,
-    * `mhs[i]` = the i-th minhash. This is the shape [[minhashLshCandidatesArrays]]
-    * consumes — the signature table then NEVER shuffles (banding, the
-    * full-signature digest, and the collapse key are all per-row
-    * projections), where the exploded (id, i, mh) form costs a k-rows-per-doc
-    * groupBy to reassemble. Documents with no shingle emit no row.
+  /** MinHash signatures over k-token shingles: one MAP-ONLY row per
+    * document, `mhs[i]` = the i-th minhash ([[minhashSigs]]). This is the
+    * shape [[minhashLshCandidatesArrays]] consumes — the signature table
+    * NEVER shuffles (banding, the full-signature digest, and the collapse
+    * key are all per-row projections). The shingle set, its hashes, and
+    * all k minima are array expressions inside one projection — the
+    * composed twin (in the tests) pays a distinct shuffle plus a
+    * coeff-crossJoin-groupBy shuffle for the same result. Documents with
+    * no shingle (shorter than shingleK tokens) emit no row.
     */
   def minhashSignatureArrays(docs: DataFrame, idCol: String, textCol: String,
                              shingleK: Int): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     val toks = TextOps.tokens(col(textCol))
-    // NATIVE codegen kernels (graft.functions.PortableMinhash): the
-    // composed transform/array_min lambdas are CodegenFallback and
-    // evaluate interpreted at ~10 ms/row — multiplied by every plan
-    // branch that re-inlines the projection (the optimizer prunes the
-    // branches to DIFFERENT column sets, so exchange reuse cannot dedupe
-    // them). One compiled loop per row computes the identical values
-    // (OpsSpec pins bit-equality against the composed twin).
     val hashed = docs.where(size(toks) >= shingleK)
       .select(col(idCol).as("id"),
         Bridge.column(graft.functions.TokenShingleHash31(
           Bridge.expression(toks), shingleK)).as("hs"))
-    val sigs = Bridge.column(graft.functions.MinhashSigs(
-      Bridge.expression(col("hs")),
-      MinhashCoeffs.map(_._1), MinhashCoeffs.map(_._2), MinhashPrime))
     // the short-doc filter tests the CHEAP precursor (token count), never
     // size(hs): a size(hs) > 0 filter gets predicate-pushed below any
     // downstream exchange with the whole md5-shingle transform INLINED into
     // the filter condition — one full extra hashing pass per row per plan
     // branch (the sf0.1 plan audit showed exactly that)
-    hashed.select(col("id"), sigs.as("mhs"))
+    hashed.select(col("id"), minhashSigs(col("hs")).as("mhs"))
   }
 
-  /** LSH candidate pairs: band signatures of `rowsPerBand` minhashes; two
-    * docs are candidates iff at least one band signature matches. Returns
-    * distinct (a, b) with a < b.
+  /** LSH candidate pairs over the MAP-ONLY array signatures
+    * ([[minhashSignatureArrays]]): band signatures of `rowsPerBand`
+    * minhashes; two docs are candidates iff at least one band signature
+    * matches. Returns distinct (a, b) with a < b. Banding, the band
+    * digests, and the full-signature collapse key are all per-row
+    * projections, so the signature table itself never shuffles. The wide
+    * stages are the band self-join and, with collapse on, the rep window,
+    * each keyed on an 8-byte xxhash64 digest.
     *
     * Duplicate-cluster collapse (the web-scale guard): documents whose FULL
     * signature vectors are identical — exact duplicates and
@@ -264,26 +223,6 @@ object Dedup {
     * last-decimal recall matters more than the g² dup-cluster guard).
     * [[simhashPairs]] has no such caveat: its verification metric (Hamming
     * distance on the simhash) is fully determined by its collapse key.
-    */
-  def minhashLshCandidates(signatures: DataFrame, rowsPerBand: Int,
-                           collapse: Boolean = true): DataFrame = {
-    // legacy exploded shape: reassemble the per-doc array (one k-rows-per-doc
-    // groupBy — dense contract: exactly one row per (id, i), i = 0..k-1,
-    // which both [[minhashSignatures]] and the composed twin emit), then
-    // run the array path. Callers on the hot path should produce
-    // [[minhashSignatureArrays]] directly and skip this shuffle.
-    val arrays = signatures.groupBy("id")
-      .agg(sort_array(collect_list(struct(col("i"), col("mh")))).as("__sa"))
-      .select(col("id"), transform(col("__sa"), s => s.getField("mh")).as("mhs"))
-    minhashLshCandidatesArrays(arrays, rowsPerBand, collapse)
-  }
-
-  /** LSH candidates over the MAP-ONLY array signatures
-    * ([[minhashSignatureArrays]]): banding, the band digests, and the
-    * full-signature collapse key are all per-row projections, so the
-    * signature table itself never shuffles. The wide stages are the band
-    * self-join and, with collapse on, the rep window, each keyed on an
-    * 8-byte xxhash64 digest.
     *
     * One branch, one signature pass: exchange reuse only merges identical
     * subtrees, so branches that read the signature projection with
@@ -385,7 +324,7 @@ object Dedup {
     // costs g²/2 pairs on one key. Collapse to the min-id representative,
     // band representatives only, re-expand as (rep, member, hamming=0) star
     // rows. Subset-with-equal-closure semantics as in
-    // [[minhashLshCandidates]]: hamming(a, b) = hamming(rep_a, rep_b) when
+    // [[minhashLshCandidatesArrays]]: hamming(a, b) = hamming(rep_a, rep_b) when
     // signatures are equal, so every dropped pair is bridged through stars.
     val sh = if (collapse) sh0.groupBy("simhash").agg(min("id").as("id"))
       .select(col("id"), col("simhash")) else sh0
@@ -423,22 +362,15 @@ object Dedup {
     * separates inside an oversized block (documented recall trade; blocks
     * of size <= maxBlock keep their plain key, so their pairs are exact).
     * The size test is a PER-ROW conditional inside the plan (block-sizes
-    * aggregation joined back), so plan construction runs no Spark job;
-    * `auditBlocks = true` adds the eager block-census log (one extra job —
-    * diagnostics only). `maxBlock <= 0` keeps the exact all-pairs behavior.
+    * aggregation joined back), so plan construction runs no Spark job.
+    * `maxBlock <= 0` keeps the exact all-pairs behavior.
     */
   def embeddingCosinePairs(embs: DataFrame, idCol: String, vecCol: String,
                            blockCol: String, minCos: Double,
-                           maxBlock: Long = 0L, subBlockPlanes: Int = 4,
-                           auditBlocks: Boolean = false): DataFrame = {
+                           maxBlock: Long = 0L, subBlockPlanes: Int = 4): DataFrame = {
     val e0 = embs.select(col(idCol).as("id"), col(blockCol).as("blk"),
       Similarity.toDoubleVec(col(vecCol)).as("v"))
     val blockSizes = e0.groupBy("blk").agg(count(lit(1)).as("bsz"))
-    if (auditBlocks) {
-      val top = blockSizes.agg(max("bsz"), count(lit(1))).head()
-      log.info(s"embeddingCosinePairs: ${top.getLong(1)} blocks, max block size " +
-        s"${top.getLong(0)}" + (if (maxBlock > 0) s" (maxBlock=$maxBlock)" else ""))
-    }
     val e =
       if (maxBlock > 0) {
         val buckets = Similarity.lshBucket(

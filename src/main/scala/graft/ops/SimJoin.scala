@@ -185,45 +185,20 @@ object SimJoin {
     * FULL posting lists — still anti-hot because prefixes are
     * df-ascending: a frequent token enters a prefix only for a document
     * made of almost nothing else, and rare tokens have short postings.
+    *
+    * Ids: rows sharing an id are one document, whose token set is the
+    * union of theirs ([[tokenRows]]).
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        minC: Double): DataFrame = {
     require(minC > 0.0 && minC <= 1.0, "minC must be in (0, 1]")
-    val tok = docs.select(col(idCol).as("id"),
-        explode(split(col(textCol), " +")).as("token"))
-      .where(length(col("token")) > 0)
-      .distinct() // not pinned: one action reads it (see graft.Pin)
-    val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
-
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy("id").orderBy(col("df"), col("token"))
-    val wAll = Window.partitionBy("id")
-    val eps = 1e-9
-    val prefix = tok.join(dfreq, "token")
-      .withColumn("sz", count(lit(1)).over(wAll))
-      .withColumn("rn", row_number().over(wOrd))
-      .where(col("rn") <= col("sz") - ceil(lit(minC) * col("sz") - eps) + 1)
-      .select(col("id"), col("token"), col("sz"))
-
-    val cands = prefix.as("x").join(tok.as("y"),
+    val tok = tokenRows(docs, idCol, textCol)
+    val cands = prefixFilter(tok, minC).as("x").join(tok.as("y"),
         col("x.token") === col("y.token") && col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"), col("x.sz").as("sa"))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()
-
-    // exact verification by PER-PAIR array intersection (see
-    // prefixJaccardPairs — same shuffle-volume + determinism argument;
-    // prefix-token sharing guarantees inter >= 1, kept as an explicit
-    // filter for exact double-join equivalence)
-    val arr = docs.select(col(idCol).as("id"),
-      array_remove(array_distinct(split(col(textCol), " +")), "").as("toks"))
-    cands
-      .join(arr.select(col("id").as("a"), col("toks").as("__ta")), "a")
-      .join(arr.select(col("id").as("b"), col("toks").as("__tb")), "b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))))
-      .where(col("inter") >= 1)
-      .withColumn("containment", col("inter").cast("double") / col("sa"))
-      .where(col("containment") >= minC)
-      .select(col("a"), col("b"), col("containment"))
+    verifyOverlap(cands, setTable(tok, "token"), "containment", minC)(
+      (inter, na, _) => inter.cast("double") / na)
   }
 
   /** All (a, b, jaccard) id pairs with token-set Jaccard >= minJ, a < b.
@@ -235,7 +210,7 @@ object SimJoin {
     * >= ceil(t*|y|), so skipping a prefix entirely would leave too few
     * tokens to reach the required overlap — no true pair is pruned. The
     * size filter t*max(|x|,|y|) <= min(|x|,|y|) prunes further (J >= t
-    * forces it). Survivors get the exact intersection via equi-join.
+    * forces it). Survivors get the exact intersection ([[verifyOverlap]]).
     *
     * Scale shape: prefixes are the globally RAREST tokens of each doc, so
     * the candidate join key is anti-hot by construction — the frequent
@@ -244,62 +219,97 @@ object SimJoin {
     * token-keyed df aggregation, one doc-keyed window (high-cardinality
     * partition key — no skew), one prefix-token equi-join, one
     * intersection count: all equi-shuffles with map-side combine.
+    *
+    * Ids: rows sharing an id are one document, whose token set is the
+    * union of theirs ([[tokenRows]]).
     */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                          minJ: Double): DataFrame = {
     require(minJ > 0.0 && minJ <= 1.0, "minJ must be in (0, 1]")
-    val tok = docs.select(col(idCol).as("id"),
-        explode(split(col(textCol), " +")).as("token"))
-      .where(length(col("token")) > 0)
-      .distinct() // not pinned: one action reads it (see graft.Pin)
-    // set size and prefix rank ride ONE id-keyed exchange (two window
-    // functions over the same partition key), and sz is carried through
-    // the candidate pairs so no separate size table ever joins again; the
-    // df join stays a plain equi-join — AQE broadcasts the vocabulary
-    // when it is small, shuffles it when a web-scale corpus makes it big
-    val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
-
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy("id").orderBy(col("df"), col("token"))
-    val wAll = Window.partitionBy("id")
-    // the pre-filters are relaxed by an ulp-swallowing epsilon so a
-    // non-dyadic threshold (0.7*20 = 14.000000000000002 in IEEE) can
-    // never over-prune a pair sitting exactly ON the boundary; the exact
-    // verify below is the only place the threshold binds
-    val eps = 1e-9
-    val prefix = tok.join(dfreq, "token")
-      .withColumn("sz", count(lit(1)).over(wAll))
-      .withColumn("rn", row_number().over(wOrd))
-      .where(col("rn") <= col("sz") - ceil(lit(minJ) * col("sz") - eps) + 1)
-      .select(col("id"), col("token"), col("sz"))
-
+    val tok = tokenRows(docs, idCol, textCol)
+    val prefix = prefixFilter(tok, minJ)
     val cands = prefix.as("x").join(prefix.as("y"),
         col("x.token") === col("y.token") && col("x.id") < col("y.id") &&
-          lit(minJ) * greatest(col("x.sz"), col("y.sz")) - eps <=
+          lit(minJ) * greatest(col("x.sz"), col("y.sz")) - Eps <=
             least(col("x.sz"), col("y.sz")))
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        col("x.sz").as("sa"), col("y.sz").as("sb"))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+      .distinct()
+    verifyOverlap(cands, setTable(tok, "token"), "jaccard", minJ)(jaccard)
+  }
+
+  /** Ulp-swallowing slack of the prefix and size pre-filters: a non-dyadic
+    * threshold (0.7*20 = 14.000000000000002 in IEEE) must never over-prune
+    * a pair sitting exactly ON the boundary; the exact verify is the only
+    * place the threshold binds.
+    */
+  private val Eps = 1e-9
+
+  /** The distinct (id, token) rows of the space-split `textCol`, empty
+    * tokens dropped. Input rows that share an id merge into one token set:
+    * the unique-id contract of the prefix joins. Not pinned: one action
+    * reads it (see graft.Pin).
+    */
+  private def tokenRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), explode(split(col(textCol), " +")).as("token"))
+      .where(length(col("token")) > 0)
       .distinct()
 
-    // exact verification by PER-PAIR array intersection: each candidate
-    // ships the two token-set arrays instead of Σ|A∩B| exploded rows
-    // through a double join + count (guide §2.3 — shuffle fewer bytes).
-    // The array table is a DETERMINISTIC map-only projection straight off
-    // the input (array_distinct of the split, "" dropped like the
-    // length>0 filter) — no explode/regroup shuffle, plan construction
-    // stays lazy, and the a/b join sides canonicalize for exchange reuse.
-    // `inter >= 1` reproduces the inner double-join exactly;
-    // prefix-sharing candidates always intersect, so no pair is lost.
-    val arr = docs.select(col(idCol).as("id"),
-      array_remove(array_distinct(split(col(textCol), " +")), "").as("toks"))
+  /** The frequency-ordered prefix of every set in `tok` (id, token) at
+    * threshold `t`: its |x| - ceil(t*|x|) + 1 tokens of lowest global df
+    * (ties by token), with the set size `sz`. Size and rank are two window
+    * functions over ONE id-keyed exchange; the df join stays a plain
+    * equi-join — AQE broadcasts the vocabulary when it is small, shuffles
+    * it when a web-scale corpus makes it big.
+    */
+  private def prefixFilter(tok: DataFrame, t: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
+    val byId = Window.partitionBy("id")
+    tok.join(dfreq, "token")
+      .withColumn("sz", count(lit(1)).over(byId))
+      .withColumn("rn", row_number().over(byId.orderBy(col("df"), col("token"))))
+      .where(col("rn") <= col("sz") - ceil(lit(t) * col("sz") - Eps) + 1)
+      .select(col("id"), col("token"), col("sz"))
+  }
+
+  /** The (id, set) table of a distinct (id, element) table: one array per
+    * id, the union of every row that carried it.
+    */
+  private[graft] def setTable(rows: DataFrame, element: String): DataFrame =
+    rows.groupBy("id").agg(collect_list(col(element)).as("set"))
+
+  /** Jaccard |A ∩ B| / |A ∪ B| from the overlap and the two set sizes. */
+  private[graft] val jaccard: (Column, Column, Column) => Column =
+    (inter, na, nb) => inter.cast("double") / (na + nb - inter)
+
+  /** The one candidate-verify step of the set-similarity joins: each
+    * candidate (a, b) ships its two sets of `sets` (id, set), joined on a
+    * then on b, and keeps the pair when they overlap and
+    * `score(|A ∩ B|, |A|, |B|) >= minScore`. Returns (a, b, `name`).
+    *
+    * Per-PAIR array intersection instead of the exploded (id, element)
+    * double join + count + two size joins: a candidate ships 2 arrays,
+    * not Σ|A ∩ B| rows (guide §2.3 — shuffle fewer bytes), and set sizes
+    * fall out of the arrays. Keeping only overlapping pairs reproduces
+    * the inner double join exactly: a pair with an empty intersection
+    * produced no row there.
+    *
+    * Contract: `sets` holds one row per id. The set-join callers build it
+    * with [[setTable]], which merges repeated ids. The canonicalizer's ids
+    * are distinct by construction, so it adds no merge: `canonicalize`
+    * reads a pinned `distinct` of the surfaces, and
+    * `incrementalCanonicalize` a pinned `distinct` new batch anti-joined
+    * against the prior dictionary's keys.
+    */
+  private[graft] def verifyOverlap(cands: DataFrame, sets: DataFrame, name: String,
+                                   minScore: Double)(
+                                   score: (Column, Column, Column) => Column): DataFrame = {
+    val s = score(col("__inter"), size(col("__ha")), size(col("__hb")))
     cands
-      .join(arr.select(col("id").as("a"), col("toks").as("__ta")), "a")
-      .join(arr.select(col("id").as("b"), col("toks").as("__tb")), "b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))))
-      .where(col("inter") >= 1)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
-      .where(col("jaccard") >= minJ)
-      .select(col("a"), col("b"), col("jaccard"))
+      .join(sets.select(col("id").as("a"), col("set").as("__ha")), "a")
+      .join(sets.select(col("id").as("b"), col("set").as("__hb")), "b")
+      .withColumn("__inter", size(array_intersect(col("__ha"), col("__hb"))))
+      .where(col("__inter") >= 1 && s >= minScore)
+      .select(col("a"), col("b"), s.as(name))
   }
 }

@@ -59,8 +59,8 @@ object TextOps {
   /** Per-document SimHash over the token multiset: bit j is set iff the sum
     * over tokens of (2*bit_j(hash(token)) - 1) is > 0.
     *
-    * `bits` defaults to 60 — the full width of [[portableHash64]]. The
-    * original 16-bit variant ([[simhash16]]) has only 65,536 distinct values,
+    * `bits` defaults to 60 — the full width of [[portableHash64]]. A
+    * 16-bit SimHash has only 65,536 distinct values,
     * so at web scale every banded bucket holds millions of documents and the
     * candidate join explodes; 60 bits keeps band keys selective (2^15 values
     * per 15-bit band) and the false-candidate rate negligible.
@@ -77,12 +77,6 @@ object TextOps {
       Bridge.column(graft.functions.PortableSimHash(
         Bridge.expression(tokens(col(textCol))), bits)).as("simhash"))
   }
-
-  /** Legacy 16-bit SimHash (kept for API compatibility; prefer [[simhash]]
-    * — 16 bits is a scale anti-pattern, see the simhash scaladoc).
-    */
-  def simhash16(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhash(docs, idCol, textCol, bits = 16)
 
   /** Winnowing-style fingerprints: k-shingle hashes, min over a window of
     * `w` consecutive shingles, distinct mins per document.

@@ -390,7 +390,8 @@ object DocQueries {
   /** Shared CTE chain: doc shingles -> portable minhash signatures ->
     * 2-row bands -> identical-fullsig collapse -> banded rep self-join +
     * star re-expansion -> `cands(a, b)`. Exact twin of
-    * `Dedup.minhashSignatures` + `Dedup.minhashLshCandidates` (collapse on).
+    * `Dedup.minhashSignatureArrays` + `Dedup.minhashLshCandidatesArrays`
+    * (collapse on).
     * The Spark side keys its shuffles on xxhash64 digests of the signature
     * structs while this twin uses the literal signature strings — the
     * resulting PAIR SETS are identical absent a 64-bit digest collision

@@ -77,9 +77,10 @@ object ScaleProbe {
     def edges(path: String) = spark.read.parquet(path)
     def docs(path: String) = spark.read.parquet(path)
 
+    // the doc_dedup_clusters chain: array signatures -> collapsed LSH -> CC
     def dedupClusters(d: DataFrame): Long = {
-      val sigs = graft.ops.Dedup.minhashSignatures(d, "doc_id", "text", 3)
-      val cands = graft.ops.Dedup.minhashLshCandidates(sigs, rowsPerBand = 2)
+      val sigs = graft.ops.Dedup.minhashSignatureArrays(d, "doc_id", "text", shingleK = 3)
+      val cands = graft.ops.Dedup.minhashLshCandidatesArrays(sigs, rowsPerBand = 2)
       graft.algo.ConnectedComponents.run(
         cands.select(col("a").as("src"), col("b").as("dst"))).count()
     }

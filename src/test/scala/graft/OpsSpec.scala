@@ -170,7 +170,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("map-only minhash signatures == composed distinct/crossJoin/groupBy twin") {
-    val native = Dedup.minhashSignatures(docs, "doc_id", "text", 3)
+    val native = Dedup.minhashSignatureArrays(docs, "doc_id", "text", 3)
+      .select(col("id"), posexplode(col("mhs")).as(Seq("i", "mh")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val composed = Twins.minhashSignaturesComposed(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -179,35 +180,15 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash LSH candidates include exact dup, exclude unrelated") {
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 3)
-    val cands = Dedup.minhashLshCandidates(sigs, 2)
+    val sigs = Dedup.minhashSignatureArrays(docs, "doc_id", "text", 3)
+    val cands = Dedup.minhashLshCandidatesArrays(sigs, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands.contains((1L, 4L)))
     assert(!cands.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("array-signature LSH path == exploded-signature path (both collapse modes)") {
-    // the hot path feeds map-only array signatures straight into the LSH;
-    // the legacy exploded shape reassembles them with a groupBy — the
-    // candidate sets must be identical
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 3)
-    val arrs = Dedup.minhashSignatureArrays(docs, "doc_id", "text", 3)
-    // posexplode round-trip: arrays carry the same (i -> mh) map
-    val reExploded = arrs.select(col("id"), posexplode(col("mhs")).as(Seq("i", "mh")))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(reExploded == sigs.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
-    for (collapse <- Seq(true, false)) {
-      val a = Dedup.minhashLshCandidatesArrays(arrs, 2, collapse)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val b = Dedup.minhashLshCandidates(sigs, 2, collapse)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(a == b, s"collapse=$collapse")
-    }
-  }
-
   test("simhash: identical docs identical hash; near-dups close") {
-    val sh = TextOps.simhash16(docs, "doc_id", "text").collect()
+    val sh = TextOps.simhash(docs, "doc_id", "text", bits = 16).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sh(1L) == sh(4L))
     assert(java.lang.Long.bitCount(sh(1L) ^ sh(2L)) <= 6)
@@ -232,9 +213,10 @@ class OpsSpec extends AnyFunSuite {
     // jaccard EXACT over full shingle sets: docs have 3 shingles each,
     // share 1 ("rare marker phrase") -> 1/5
     assert(math.abs(pairs.head.getDouble(2) - 0.2) < 1e-12)
-    // maxDf <= 0 disables the cap: the hot key explodes candidates again
+    // a cap at the largest df of the data (20: the stop shingle) blocks
+    // nothing: the hot key explodes candidates again
     val uncapped = Dedup.ngramJaccardPairs(
-      corpus.where($"doc_id" < 20), "doc_id", "text", 3, 0.0, maxDf = 0)
+      corpus.where($"doc_id" < 20), "doc_id", "text", 3, 0.0, maxDf = 20)
     assert(uncapped.count() == 20L * 19 / 2)
   }
 
@@ -295,8 +277,8 @@ class OpsSpec extends AnyFunSuite {
     val corpus = spark.createDataFrame(cluster ++ extra).toDF("doc_id", "text")
       .repartition(8)
 
-    val sigs = Dedup.minhashSignatures(corpus, "doc_id", "text", 3)
-    val mh = Dedup.minhashLshCandidates(sigs, 2)
+    val sigs = Dedup.minhashSignatureArrays(corpus, "doc_id", "text", 3)
+    val mh = Dedup.minhashLshCandidatesArrays(sigs, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(mh.length == g - 1) // stars only; rep collides with nothing else
     assert(mh.forall(_._1 == 0L)) // hub = min id
@@ -664,7 +646,8 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // N=3; df(apple)=df(banana)=2, idf=ln(1.5); d1=(2,1)*idf, d2=(1,1)*idf
     // cos(d1,d2) = 3/sqrt(10); d3 shares no term with d1/d2 -> no pair
-    val got = Dedup.tfidfCosinePairs(d, "doc_id", "text", minCos = 0.0, maxDf = 0)
+    // maxDf = 3, the document count: no term is blocked
+    val got = Dedup.tfidfCosinePairs(d, "doc_id", "text", minCos = 0.0, maxDf = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.keySet == Set((1L, 2L)))
     assert(math.abs(got((1L, 2L)) - 3.0 / math.sqrt(10)) < 1e-12)

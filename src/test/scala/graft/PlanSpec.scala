@@ -180,8 +180,8 @@ class PlanSpec extends AnyFunSuite {
       graft.ops.Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.1, maxDf = 5)
       graft.ops.Dedup.embeddingCosinePairs(embs, "vec_id", "embedding", "label", 0.5,
         maxBlock = 10, subBlockPlanes = 3)
-      graft.ops.Dedup.minhashLshCandidates(
-        graft.ops.Dedup.minhashSignatures(docs, "doc_id", "text", 3), 2)
+      graft.ops.Dedup.minhashLshCandidatesArrays(
+        graft.ops.Dedup.minhashSignatureArrays(docs, "doc_id", "text", 3), 2)
       graft.ops.Dedup.simhashPairs(docs, "doc_id", "text", 3)
       // drain the async listener bus deterministically (ADVICE r3: a fixed
       // sleep could miss late-posted events under load)

@@ -147,11 +147,11 @@ class PropertySpec extends AnyFunSuite {
     forAllSeeded(corpusGen, n = 6) { ds =>
       val docs = ds.toDF("doc_id", "text").cache()
 
-      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 3)
+      val sigs = Dedup.minhashSignatureArrays(docs, "doc_id", "text", 3)
       def pairsOf(df: org.apache.spark.sql.DataFrame) =
         df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val mhC = pairsOf(Dedup.minhashLshCandidates(sigs, 2))
-      val mhU = pairsOf(Dedup.minhashLshCandidates(sigs, 2, collapse = false))
+      val mhC = pairsOf(Dedup.minhashLshCandidatesArrays(sigs, 2))
+      val mhU = pairsOf(Dedup.minhashLshCandidatesArrays(sigs, 2, collapse = false))
       assert(mhC.subsetOf(mhU))
       assert(closure(mhC) == closure(mhU))
 

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.SimJoin
+import graft.ops.{Dedup, SimJoin}
 
 /** Exactness of the similarity self-joins: both ops claim COMPLETE
   * candidate generation, so each is held to multiset equality with the
@@ -212,5 +213,51 @@ class SimJoinSpec extends AnyFunSuite {
     val strict = SimJoin.prefixJaccardPairs(df, "id", "text", 0.75)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(strict.isEmpty) // 0.6 < 0.75; (1,3) killed by the size filter
+  }
+
+  test("repeated ids are one document: one row per pair, scored on the union set") {
+    // id 1 carries two rows; its set is the union of both rows' sets
+    val rows = Seq((1L, "a b c d"), (1L, "a b c e"), (2L, "a b c d"))
+    val df = rows.toDF("id", "text")
+    def sets(k: Int): Map[Long, Set[String]] = rows.groupBy(_._1).map { case (id, rs) =>
+      id -> rs.flatMap(_._2.split(" ").toSeq.sliding(k).map(_.mkString(" "))).toSet
+    }
+    def jac(a: Set[String], b: Set[String]) = (a & b).size.toDouble / (a | b).size
+    def pairs(out: DataFrame): Seq[((Long, Long), Double)] =
+      out.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+
+    val sh = sets(2)
+    val ngram = pairs(Dedup.ngramJaccardPairs(df, "id", "text", k = 2, minJ = 0.0, maxDf = 2))
+    assert(ngram == Seq((1L, 2L) -> jac(sh(1L), sh(2L)))) // 3/4
+
+    val tok = sets(1)
+    val prefix = pairs(SimJoin.prefixJaccardPairs(df, "id", "text", 0.5))
+    assert(prefix == Seq((1L, 2L) -> jac(tok(1L), tok(2L)))) // 4/5
+
+    val cont = pairs(SimJoin.containmentPairs(df, "id", "text", 0.5))
+    assert(cont.size == 2 && cont.toMap == Map(
+      (1L, 2L) -> (tok(1L) & tok(2L)).size.toDouble / tok(1L).size, // 4/5
+      (2L, 1L) -> (tok(1L) & tok(2L)).size.toDouble / tok(2L).size)) // 1
+  }
+
+  test("src/main holds one overlap verify, one MinHash signature column, no exploded MinHash fork") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8")).toMap
+    assert(files.contains("graft/ops/SimJoin.scala"), root.toAbsolutePath)
+    def count(re: String): Map[String, Int] = files.map { case (f, src) =>
+      f -> re.r.findAllIn(src).size
+    }.filter(_._2 > 0)
+
+    // the verify helper and EntityLinker's context scoring
+    assert(count("""array_intersect""") ==
+      Map("graft/ops/SimJoin.scala" -> 1, "graft/extract/EntityLinker.scala" -> 1))
+    // one construction of the signature kernel (its definition aside)
+    assert(count("""(?<!case class )MinhashSigs\(""") == Map("graft/ops/Dedup.scala" -> 1))
+    for (gone <- Seq("""minhashSignatures\(""", """minhashLshCandidates\(""",
+        "auditDrops", "auditBlocks", "simhash16"))
+      assert(count(gone).isEmpty, s"$gone in ${count(gone).keys.mkString(", ")}")
   }
 }

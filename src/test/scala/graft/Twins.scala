@@ -87,7 +87,8 @@ object Twins {
       .groupBy(idCol).agg(sum("bit").as("simhash"))
   }
 
-  /** Shingle-crossJoin-groupBy twin of [[Dedup.minhashSignatures]]. */
+  /** Shingle-crossJoin-groupBy twin of [[Dedup.minhashSignatureArrays]],
+    * in the exploded (id, i, mh) shape. */
   def minhashSignaturesComposed(docs: DataFrame, idCol: String, textCol: String,
                                 shingleK: Int): DataFrame = {
     val spark = docs.sparkSession
