@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators for training-data pipelines: PII detection +
@@ -351,6 +350,11 @@ object Curation {
         col("end_token"), col("first_chunk"), col("last_chunk"), col("spans_boundary"))
   }
 
+  /** The samplers' md5 draw in [0, 10^6): portableHash31(salt:stratum:id) mod 10^6. */
+  private def draw(salt: String, strataCol: String, idCol: String): Column =
+    TextOps.portableHash31(
+      concat(lit(salt), lit(":"), col(strataCol), lit(":"), col(idCol).cast("string"))) % 1000000L
+
   /** Deterministic per-stratum sampling (domain mixing): keep a row iff
     * portableHash31(salt:stratum:id) mod 10^6 < rate(stratum) * 10^6, with
     * `rates` overriding `defaultRate` per stratum value. Map-only — the
@@ -368,9 +372,7 @@ object Curation {
     val rate: Column =
       if (rates.isEmpty) lit(defaultRate)
       else coalesce(try_element_at(typedlit(rates), col(strataCol)), lit(defaultRate))
-    val draw = TextOps.portableHash31(
-      concat(lit(salt), lit(":"), col(strataCol), lit(":"), col(idCol).cast("string"))) % 1000000L
-    docs.where(draw < (rate * 1000000L).cast("long"))
+    docs.where(draw(salt, strataCol, idCol) < (rate * 1000000L).cast("long"))
   }
 
   /** Deterministic weighted sampling WITHOUT replacement (the
@@ -381,32 +383,22 @@ object Curation {
     * runs, engines, and cluster sizes. Requires strictly positive
     * weights. Appends `samp_key`.
     *
-    * Top-k per stratum runs as the salted two-phase rank (same shape as
-    * [[TextOps.topNgrams]]): per-(stratum, hash-bucket) row_number keeps
-    * every possible winner, the final per-stratum window ranks only
-    * <= k * buckets survivors — a hot stratum never funnels all its rows
-    * through one window task.
+    * Top-k per stratum is [[Skew.saltedTopK]] over `saltBuckets` id-hash
+    * buckets, so a hot stratum never funnels all its rows through one
+    * window task.
     */
   def weightedSample(docs: DataFrame, idCol: String, strataCol: String,
                      weightCol: String, k: Int, saltBuckets: Int = 64,
                      salt: String = "wsamp"): DataFrame = {
     require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
-    val u = (TextOps.portableHash31(
-      concat(lit(salt), lit(":"), col(strataCol), lit(":"), col(idCol).cast("string")))
-      % 1000000L + lit(0.5)) / 1000000.0
+    val u = (draw(salt, strataCol, idCol) + lit(0.5)) / 1000000.0
     val keyed = docs
       .where(col(weightCol) > 0)
       .withColumn("samp_key", org.apache.spark.sql.functions.log(u) / col(weightCol))
     val bucket = pmod(TextOps.portableHash31(col(idCol).cast("string")), lit(saltBuckets))
-    val perBucket = Window.partitionBy(col(strataCol), bucket)
-      .orderBy(col("samp_key").desc, col(idCol).asc)
-    val survivors = keyed
-      .withColumn("__r", row_number().over(perBucket)).where(col("__r") <= k)
-    val finalW = Window.partitionBy(col(strataCol))
-      .orderBy(col("samp_key").desc, col(idCol).asc)
-    survivors
-      .withColumn("__rank", row_number().over(finalW)).where(col("__rank") <= k)
-      .drop("__r", "__rank")
+    Skew.saltedTopK(keyed, Seq(col(strataCol)), bucket,
+        Seq(col("samp_key").desc, col(idCol).asc), k)
+      .drop("__rank")
   }
 
   /** Temperature-scaled source mixing (the multilingual/source-balancing
@@ -441,29 +433,10 @@ object Curation {
         least(lit(1.0),
           lit(targetCount.toDouble) * weight(col("n_s")) / col("z") / col("n_s"))
           .as("keep_rate"))
-    val draw = TextOps.portableHash31(
-      concat(lit(salt), lit(":"), col(strataCol), lit(":"), col(idCol).cast("string"))) % 1000000L
     docs.join(broadcast(rates), strataCol)
-      .where(draw < floor(col("keep_rate") * 1000000L).cast("long"))
+      .where(draw(salt, strataCol, idCol) < floor(col("keep_rate") * 1000000L).cast("long"))
   }
 
-  /** C4/RefinedWeb-style boilerplate line removal: a line that occurs in at
-    * least `minDocs` distinct documents (nav bars, cookie banners,
-    * subscribe/footer text) is dropped from EVERY document; survivors are
-    * reassembled in original line order. Returns one row per input document:
-    * (idCol, n_lines_kept, n_lines_removed, text_clean).
-    *
-    * Scale shape: the document-frequency aggregation shuffles 8-byte line
-    * hashes (never line text), with map-side partial aggregation; the
-    * boilerplate set — high-DF lines, small by definition — joins back as a
-    * BROADCAST flag, so classification is map-side; the reassembly groupBy
-    * is keyed on the document id (bounded lines per doc, no hot keys).
-    * Hash collision class: portable 60-bit line digest, same acceptance as
-    * the md5-keyed dedup family.
-    *
-    * `lineSep` is a regex (Spark split semantics); reassembly joins with
-    * `joinSep`.
-    */
   /** CCNet/Dolma-style PARAGRAPH-level dedup: across the whole corpus,
     * each distinct non-empty paragraph is kept only at its FIRST occurrence
     * (global order = (doc id, position)); later occurrences are dropped
@@ -508,6 +481,23 @@ object Curation {
         joinSep).as("text_clean"))
   }
 
+  /** C4/RefinedWeb-style boilerplate line removal: a line that occurs in at
+    * least `minDocs` distinct documents (nav bars, cookie banners,
+    * subscribe/footer text) is dropped from EVERY document; survivors are
+    * reassembled in original line order. Returns one row per input document:
+    * (idCol, n_lines_kept, n_lines_removed, text_clean).
+    *
+    * Scale shape: the document-frequency aggregation shuffles 8-byte line
+    * hashes (never line text), with map-side partial aggregation; the
+    * boilerplate set — high-DF lines, small by definition — joins back as a
+    * BROADCAST flag, so classification is map-side; the reassembly groupBy
+    * is keyed on the document id (bounded lines per doc, no hot keys).
+    * Hash collision class: portable 60-bit line digest, same acceptance as
+    * the md5-keyed dedup family.
+    *
+    * `lineSep` is a regex (Spark split semantics); reassembly joins with
+    * `joinSep`.
+    */
   def removeBoilerplate(docs: DataFrame, idCol: String, textCol: String,
                         minDocs: Long, lineSep: String = "\n",
                         joinSep: String = "\n"): DataFrame = {

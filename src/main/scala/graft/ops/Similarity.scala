@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (Array[Float]).
@@ -41,22 +40,63 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = try_divide(dot(a, b), l2(a) * l2(b))
 
+  /** The corpus side of every search: (id, v) with v as doubles. */
+  private def corpusVecs(embs: DataFrame, idCol: String, vecCol: String): DataFrame =
+    embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
+
+  /** The query side of every search: (query_id, qv) for the rows of `queryPred`. */
+  private def queryVecs(embs: DataFrame, idCol: String, vecCol: String,
+                        queryPred: Column): DataFrame =
+    embs.where(queryPred)
+      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
+
+  /** The cosine tail of the ANN paths: scores candidate (query_id, qv, id, v)
+    * rows, keeps each query's top `k` by (rounded cosine desc, id asc) —
+    * rounding first keeps the order engine-portable at equal similarities —
+    * and returns (query_id, rank, neighbor_id, sim).
+    */
+  private def cosineTopK(candidates: DataFrame, k: Int): DataFrame =
+    Skew.topK(candidates.withColumn("sim", round(cosine(col("qv"), col("v")), 6)),
+      Seq(col("query_id")), Seq(col("sim").desc, col("id").asc), k)
+      .select(col("query_id"), col("__rank").as("rank"), col("id").as("neighbor_id"), col("sim"))
+
+  /** The seeded quantizer's centroids: the vectors of the `k` smallest ids
+    * as one `cents` row, an array of (cid, cv) sorted by cid.
+    */
+  private def seedCentroids(e: DataFrame, k: Int): DataFrame =
+    e.orderBy("id").limit(k)
+      .agg(array_sort(collect_list(struct(col("id").as("cid"), col("v").as("cv"))))
+        .as("cents"))
+
+  /** (round(d², 6), cid) of `vc` to every centroid of the `cents` column;
+    * v·v is hoisted to a per-row column (`vvCol`) so the k-way centroid
+    * loop does one dot product per centroid, not three — float-identical
+    * to the inline form, and the SQL twin's list_dot_product(v, v)
+    * produces the same value either way.
+    */
+  private def centDist(vc: Column, vvCol: Column): Column = transform(col("cents"), c =>
+    struct(
+      round(vvCol - lit(2.0) * dot(vc, c.getField("cv"))
+        + dot(c.getField("cv"), c.getField("cv")), 6).as("d2"),
+      c.getField("cid").as("cid")))
+
+  /** Assigns every (id, v) row to its nearest centroid of the one-row
+    * `cents` table under (round(d², 6), cid): (id, v, cluster, d2).
+    * Map-only against a broadcast.
+    */
+  private def assign(e: DataFrame, cents: DataFrame): DataFrame =
+    e.withColumn("vv", dot(col("v"), col("v")))
+      .crossJoin(broadcast(cents))
+      .withColumn("best", array_min(centDist(col("v"), col("vv"))))
+      .select(col("id"), col("v"), col("best.cid").as("cluster"), col("best.d2").as("d2"))
+
   /** Brute-force top-k cosine neighbors for a query subset.
-    * Rank by (rounded cosine desc, neighbor id asc) — rounding first keeps
-    * the ordering engine-portable at equal similarities.
+    * Rank by (rounded cosine desc, neighbor id asc).
     */
   def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String,
-                     queryPred: Column, k: Int): DataFrame = {
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    val q = embs.where(queryPred)
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-    val scored = broadcast(q).join(e, col("query_id") =!= col("id"))
-      .withColumn("sim", round(cosine(col("qv"), col("v")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
-  }
+                     queryPred: Column, k: Int): DataFrame =
+    cosineTopK(broadcast(queryVecs(embs, idCol, vecCol, queryPred))
+      .join(corpusVecs(embs, idCol, vecCol), col("query_id") =!= col("id")), k)
 
   /** Sign-LSH bucket id (0..2^planes-1) per vector. Map-only: the native
     * codegen'd [[graft.functions.SignLshBucket]] expression computes every
@@ -93,10 +133,8 @@ object Similarity {
                         probeHamming: Int = 1): DataFrame = {
     require(probeHamming <= 1, "probeHamming > 1 multiplies candidates combinatorially")
     val buckets = lshBucket(embs, idCol, vecCol, planes)
-    val corpus = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-      .join(buckets, "id")
-    val qs0 = embs.where(queryPred)
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
+    val corpus = corpusVecs(embs, idCol, vecCol).join(buckets, "id")
+    val qs0 = queryVecs(embs, idCol, vecCol, queryPred)
       .join(buckets.select(col("id").as("query_id"), col("bucket").as("qbucket")), "query_id")
     // probe set: own bucket (+ each single-bit flip when probeHamming=1)
     val qs =
@@ -107,86 +145,23 @@ object Similarity {
           .as("probe"))
     // the probe values of one query are pairwise distinct buckets, so each
     // (query, candidate) pair joins through exactly one probe — no dedup
-    val scored = qs.join(corpus,
-      col("probe") === col("bucket") && col("query_id") =!= col("id"))
-      .withColumn("sim", round(cosine(col("qv"), col("v")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
+    cosineTopK(qs.join(corpus,
+      col("probe") === col("bucket") && col("query_id") =!= col("id")), k)
   }
 
-  /** IVF (inverted-file) ANN: a KMeans coarse quantizer (MLlib, fixed seed)
-    * assigns every corpus vector to one of `nCentroids` inverted lists; a
-    * query probes its `nProbe` nearest centroids (euclidean, the quantizer's
-    * own metric) and scores exact cosine only within those lists. Candidate
-    * volume ~ corpus * nProbe / nCentroids, and the probe selection is a
-    * per-row sort over a broadcast centroid array — the standard
-    * recall/cost dial when the corpus outgrows sign-LSH bucket granularity.
-    * Training cost is one MLlib KMeans fit; `fitFraction < 1` fits the
-    * quantizer on a seeded sample of the corpus — the production default at
-    * web scale, where a full-corpus Lloyd pass per fit iteration is pure
-    * waste (centroid quality converges long before the sample does; every
-    * vector is still assigned to a list afterward, so only the quantizer's
-    * training set shrinks, never coverage). See [[ivfSeededTopK]] for the
-    * deterministic, oracle-replayable quantizer variant.
-    */
-  def ivfTopK(embs: DataFrame, idCol: String, vecCol: String,
-              queryPred: Column, nCentroids: Int, nProbe: Int, k: Int,
-              seed: Long = 42L, fitFraction: Double = 1.0): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    require(nProbe >= 1 && nProbe <= nCentroids)
-    require(fitFraction > 0.0 && fitFraction <= 1.0)
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-      .withColumn("fv", array_to_vector(col("v")))
-    // Bernoulli sampling has no row-count guarantee: on a small corpus the
-    // sample can hold fewer rows than nCentroids (or zero), which breaks
-    // the KMeans fit / the nProbe <= nCentroids probing contract. The fit
-    // is already an eager action, so the guard count costs one cheap job
-    // over the sample; fall back to the full corpus when undersampled.
-    val fitSet = {
-      val sampled = if (fitFraction < 1.0)
-        e.sample(withReplacement = false, fitFraction, seed) else e
-      if (fitFraction < 1.0 && sampled.limit(nCentroids).count() < nCentroids) e
-      else sampled
-    }
-    val model = new KMeans().setK(nCentroids).setSeed(seed)
-      .setFeaturesCol("fv").setPredictionCol("list_id").fit(fitSet)
-    val corpus = model.transform(e).select(col("id"), col("v"), col("list_id"))
-    // centroids are tiny (nCentroids x dim): embed them as an in-row array
-    val centArr = array(model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("cid"), typedlit(c.toArray.toSeq).as("cv"))
-    }.toIndexedSeq: _*)
-    val qs = embs.where(queryPred)
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("qv"), explode(centArr).as("cent"))
-      .withColumn("d2", aggregate(
-        zip_with(col("qv"), col("cent.cv"), (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("d2").asc, col("cent.cid").asc)
-    val probes = qs.withColumn("prank", row_number().over(wProbe))
-      .where(col("prank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cent.cid").as("list_id"))
-    val scored = probes.join(corpus,
-      Seq("list_id")).where(col("query_id") =!= col("id"))
-      .withColumn("sim", round(cosine(col("qv"), col("v")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
-  }
-
-  /** IVF with a DETERMINISTIC seeded coarse quantizer: the centroids are the
-    * vectors of the `nCentroids` smallest ids in the corpus, and every
-    * vector joins the inverted list of its nearest centroid under
-    * (round(d², 6) asc, centroid id asc) — a total order both engines
-    * reproduce bit-for-bit, so unlike the KMeans fit of [[ivfTopK]] the
-    * whole operator has an exact SQL twin (the driver's DuckDB oracle
-    * replays it row-for-row). d² is composed from three left-to-right dot
-    * products (v·v − 2·v·c + c·c) through the same codegen'd [[dot]]
-    * expression the scoring path uses, so the float arithmetic matches
-    * DuckDB's list_dot_product association exactly.
+  /** IVF (inverted-file) ANN with a DETERMINISTIC seeded coarse quantizer:
+    * the centroids are the vectors of the `nCentroids` smallest ids in the
+    * corpus, and every vector joins the inverted list of its nearest
+    * centroid under (round(d², 6) asc, centroid id asc) — a total order
+    * both engines reproduce bit-for-bit, so unlike a fitted (KMeans)
+    * quantizer the whole operator has an exact SQL twin (the driver's
+    * DuckDB oracle replays it row-for-row). A query probes its `nProbe`
+    * nearest lists and scores exact cosine only within them. d² is
+    * composed from three left-to-right dot products (v·v − 2·v·c + c·c)
+    * through the same codegen'd [[dot]] expression the scoring path uses,
+    * so the float arithmetic matches DuckDB's list_dot_product association
+    * exactly. List assignment is [[kmeansLloyd]]'s assignment against the
+    * seeds.
     *
     * Scale shape: the centroid row is a one-row broadcast, list assignment
     * is MAP-ONLY (no fit job at all), and candidates flow through a plain
@@ -197,59 +172,20 @@ object Similarity {
   def ivfSeededTopK(embs: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, nCentroids: Int, nProbe: Int, k: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCentroids)
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    val centsRow = e.orderBy("id").limit(nCentroids)
-      .agg(collect_list(struct(col("id").as("cid"), col("v").as("cv"))).as("cents"))
-    // (round(d2,6), cid) per centroid; v·v is hoisted to a per-row column
-    // (`vvCol`) so the k-way centroid loop does one dot product per
-    // centroid, not three — float-identical to the inline form, and the
-    // SQL twin's list_dot_product(v, v) produces the same value either way
-    def centDist(vc: Column, vvCol: Column): Column = transform(col("cents"), c =>
-      struct(
-        round(vvCol - lit(2.0) * dot(vc, c.getField("cv"))
-          + dot(c.getField("cv"), c.getField("cv")), 6).as("d2"),
-        c.getField("cid").as("cid")))
-    val corpus = e.withColumn("vv", dot(col("v"), col("v")))
-      .crossJoin(broadcast(centsRow))
-      .withColumn("list_id", array_min(centDist(col("v"), col("vv"))).getField("cid"))
-      .select(col("id"), col("v"), col("list_id"))
-    val probes = embs.where(queryPred)
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
+    val e = corpusVecs(embs, idCol, vecCol)
+    val cents = seedCentroids(e, nCentroids)
+    val corpus = assign(e, cents).select(col("id"), col("v"), col("cluster").as("list_id"))
+    val probes = queryVecs(embs, idCol, vecCol, queryPred)
       .withColumn("vv", dot(col("qv"), col("qv")))
-      .crossJoin(broadcast(centsRow))
+      .crossJoin(broadcast(cents))
       .withColumn("probe",
         explode(slice(array_sort(centDist(col("qv"), col("vv"))), 1, nProbe)))
       .select(col("query_id"), col("qv"), col("probe.cid").as("list_id"))
     // each corpus vector lives in exactly one list, so a (query, candidate)
     // pair joins through at most one probe — no dedup needed
-    val scored = probes.join(corpus, Seq("list_id"))
-      .where(col("query_id") =!= col("id"))
-      .withColumn("sim", round(cosine(col("qv"), col("v")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
+    cosineTopK(probes.join(corpus, Seq("list_id")).where(col("query_id") =!= col("id")), k)
   }
 
-  /** Fixed-iteration Lloyd k-means over an embedding column — the
-    * embedding-clustering primitive (corpus bucketing, IVF list fitting,
-    * topic-ish grouping) in a fully deterministic, engine-portable form:
-    * centroids seed from the `k` lowest ids (the [[ivfSeededTopK]]
-    * convention), then `iters` rounds of (assign, update). Assignment is
-    * MAP-ONLY — a k-way argmin of (round(d2, 6), cid) against a one-row
-    * broadcast centroid array, exactly the IVF list-assignment expression;
-    * the update is a posexplode partial-agg elementwise mean ROUNDED to 6
-    * decimals, so both engines feed bit-identical centroids into the next
-    * round and the integer cluster assignments can never drift on a
-    * sub-ulp difference. A cluster that captures no points drops out of
-    * the next round (standard Lloyd behavior). Returns the final
-    * (id, cluster, d2) assignment.
-    *
-    * Scale shape per round: one broadcast (k·dim doubles), one map-only
-    * pass, one (k·dim)-cell aggregate — no shuffle keyed on anything
-    * larger than (cluster, pos), no driver-side vectors, and `iters`
-    * bounds the job count.
-    */
   /** Johnson–Lindenstrauss random projection (Achlioptas, "Database-
     * friendly random projections", PODS 2001 — public: ±1 sign matrices
     * satisfy the JL lemma): maps `vecCol` to `outDim` dimensions via
@@ -308,10 +244,8 @@ object Similarity {
   def pqTopK(embs: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, m: Int, nCodes: Int, k: Int): DataFrame = {
     require(m >= 1 && nCodes >= 1 && k >= 1, "m, nCodes, k must be positive")
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    val centsRow = e.orderBy("id").limit(nCodes)
-      .agg(array_sort(collect_list(struct(col("id").as("cid"), col("v").as("cv"))))
-        .as("cents"))
+    val e = corpusVecs(embs, idCol, vecCol)
+    val cents = seedCentroids(e, nCodes)
 
     def sub(vec: Column, j: Column): Column = {
       val d = size(vec)
@@ -326,16 +260,15 @@ object Similarity {
       array_min(transform(col("cents"), (c, i) =>
         struct(d2m(sub(col("v"), j), sub(c.getField("cv"), j)).as("dm"),
           (i + 1).as("p")))).getField("p"))
-    val corpus = e.crossJoin(broadcast(centsRow))
+    val corpus = e.crossJoin(broadcast(cents))
       .select(col("id"), codesCol.as("codes"))
 
     // query ADC tables: adc[j][p] = sub-d² micros to codeword p
     val adcCol = transform(sequence(lit(0), lit(m - 1)), j =>
       transform(col("cents"), c =>
         d2m(sub(col("qv"), j), sub(c.getField("cv"), j))))
-    val queries = embs.where(queryPred)
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .crossJoin(broadcast(centsRow))
+    val queries = queryVecs(embs, idCol, vecCol, queryPred)
+      .crossJoin(broadcast(cents))
       .select(col("query_id"), adcCol.as("adc"))
 
     val scored = corpus.crossJoin(broadcast(queries))
@@ -343,29 +276,34 @@ object Similarity {
       .withColumn("adist_micros", aggregate(sequence(lit(1), lit(m)), lit(0L),
         (acc, j) => acc +
           element_at(element_at(col("adc"), j), element_at(col("codes"), j))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist_micros").asc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
+    Skew.topK(scored, Seq(col("query_id")), Seq(col("adist_micros").asc, col("id").asc), k)
+      .select(col("query_id"), col("__rank").as("rank"), col("id").as("neighbor_id"),
         col("adist_micros"))
   }
 
+  /** Fixed-iteration Lloyd k-means over an embedding column — the
+    * embedding-clustering primitive (corpus bucketing, IVF list fitting,
+    * topic-ish grouping) in a fully deterministic, engine-portable form:
+    * centroids seed from the `k` lowest ids (the [[ivfSeededTopK]]
+    * convention), then `iters` rounds of (assign, update). Assignment is
+    * MAP-ONLY — a k-way argmin of (round(d2, 6), cid) against a one-row
+    * broadcast centroid array, the same step IVF assigns its lists with;
+    * the update is a posexplode partial-agg elementwise mean ROUNDED to 6
+    * decimals, so both engines feed bit-identical centroids into the next
+    * round and the integer cluster assignments can never drift on a
+    * sub-ulp difference. A cluster that captures no points drops out of
+    * the next round (standard Lloyd behavior). Returns the final
+    * (id, cluster, d2) assignment.
+    *
+    * Scale shape per round: one broadcast (k·dim doubles), one map-only
+    * pass, one (k·dim)-cell aggregate — no shuffle keyed on anything
+    * larger than (cluster, pos), no driver-side vectors, and `iters`
+    * bounds the job count.
+    */
   def kmeansLloyd(embs: DataFrame, idCol: String, vecCol: String,
                   k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 0, "need k >= 1, iters >= 0")
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    def centDist(vc: Column, vvCol: Column): Column = transform(col("cents"), c =>
-      struct(
-        round(vvCol - lit(2.0) * dot(vc, c.getField("cv"))
-          + dot(c.getField("cv"), c.getField("cv")), 6).as("d2"),
-        c.getField("cid").as("cid")))
-    def assign(cents: DataFrame): DataFrame =
-      e.withColumn("vv", dot(col("v"), col("v")))
-        .crossJoin(broadcast(cents))
-        .withColumn("best", array_min(centDist(col("v"), col("vv"))))
-        .select(col("id"), col("v"),
-          col("best.cid").as("cluster"), col("best.d2").as("d2"))
+    val e = corpusVecs(embs, idCol, vecCol)
     def update(assigned: DataFrame): DataFrame =
       assigned
         .select(col("cluster").as("cid"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -374,10 +312,9 @@ object Similarity {
         .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("cv"))
         .agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
-    var cents = e.orderBy("id").limit(k)
-      .agg(collect_list(struct(col("id").as("cid"), col("v").as("cv"))).as("cents"))
-    for (_ <- 1 to iters) cents = update(assign(cents))
-    assign(cents).select("id", "cluster", "d2")
+    var cents = seedCentroids(e, k)
+    for (_ <- 1 to iters) cents = update(assign(e, cents))
+    assign(e, cents).select("id", "cluster", "d2")
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -403,8 +340,7 @@ object Similarity {
                k: Int, iters: Int, minCos: Double,
                maxBlock: Long = 0L): DataFrame = {
     val a = kmeansLloyd(embs, idCol, vecCol, k, iters)
-    val e = embs.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-    val pts = a.join(e, "id")
+    val pts = a.join(corpusVecs(embs, idCol, vecCol), "id")
     val pairs = graft.ops.Dedup.embeddingCosinePairs(
       pts.select(col("id"), col("cluster"), col("v")), "id", "v", "cluster",
       minCos, maxBlock)

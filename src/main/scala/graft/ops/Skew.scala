@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Explicit skew handling for hot keys (north rule: hot conv_ids at
@@ -62,4 +63,24 @@ object Skew {
       explode(sequence(lit(0L), lit(saltBuckets - 1L))))
     l.join(r, Seq(keyCol, "__salt")).drop("__salt")
   }
+
+  /** The top `k` rows of each `by` group under `order`, which must be a
+    * total order: appends their 1-based int rank as `__rank`. Spark infers
+    * a WindowGroupLimit from the rank filter, so each map partition sends
+    * at most k rows per group through the shuffle.
+    */
+  private[graft] def topK(df: DataFrame, by: Seq[Column], order: Seq[Column],
+                          k: Int): DataFrame =
+    df.withColumn("__rank", row_number().over(Window.partitionBy(by: _*).orderBy(order: _*)))
+      .where(col("__rank") <= k)
+
+  /** [[topK]] for a hot group: a top-k per (group, `salt`) first, then per
+    * group over the at most k * |salt values| survivors, so one group
+    * never funnels all its rows through one window task. Exact because
+    * the salt is a function of the row: a row in its group's top k has
+    * fewer than k rows of its own salt bucket ahead of it.
+    */
+  private[graft] def saltedTopK(df: DataFrame, by: Seq[Column], salt: Column,
+                                order: Seq[Column], k: Int): DataFrame =
+    topK(topK(df, by :+ salt, order, k), by, order, k)
 }

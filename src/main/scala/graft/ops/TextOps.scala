@@ -169,13 +169,10 @@ object TextOps {
     * naive finish — `row_number() over (partition by group)` — funnels
     * EVERY distinct gram of a group through one task, a single-partition
     * sort when group cardinality is low (a handful of languages over a
-    * web corpus). Instead the top-k is taken in two exact stages: each
-    * gram is salted into one of `saltBuckets` sub-partitions by gram hash
-    * (a gram's counts are already fully aggregated, so it lands WHOLLY in
-    * one bucket), per-(group, bucket) top-k keeps every possible global
-    * winner (if a gram is in the group's true top-k, fewer than k grams in
-    * its own bucket beat it), and the final window ranks only the
-    * <= k * saltBuckets survivors per group.
+    * web corpus). Instead the top-k is [[Skew.saltedTopK]] over
+    * `saltBuckets` gram-hash buckets (a gram's counts are already fully
+    * aggregated, so it lands WHOLLY in one bucket): the final window ranks
+    * only the <= k * saltBuckets survivors per group.
     */
   def topNgrams(docs: DataFrame, textCol: String, byCol: String,
                 n: Int, k: Int, saltBuckets: Int = 64): DataFrame = {
@@ -186,16 +183,10 @@ object TextOps {
     val grams = t.select(col("grp"), explode(
       transform(idx, i => array_join(slice(col("toks"), i + 1, lit(n)), " "))).as("gram"))
     val counts = grams.groupBy("grp", "gram").agg(count(lit(1)).as("cnt"))
-    val salted = counts.withColumn("__salt", pmod(hash(col("gram")), lit(saltBuckets)))
-    val perBucket = Window.partitionBy("grp", "__salt")
-      .orderBy(col("cnt").desc, col("gram").asc)
-    val survivors = salted
-      .withColumn("__r", row_number().over(perBucket)).where(col("__r") <= k)
-    val finalW = Window.partitionBy("grp").orderBy(col("cnt").desc, col("gram").asc)
-    survivors
-      .withColumn("rank", row_number().over(finalW).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("grp").as(byCol), col("gram"), col("cnt"), col("rank"))
+    Skew.saltedTopK(counts, Seq(col("grp")), pmod(hash(col("gram")), lit(saltBuckets)),
+        Seq(col("cnt").desc, col("gram").asc), k)
+      .select(col("grp").as(byCol), col("gram"), col("cnt"),
+        col("__rank").cast("long").as("rank"))
   }
 
   /** Sparse TF-IDF weights: (id, term, df, w) with tf = raw count,
@@ -228,11 +219,9 @@ object TextOps {
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
                     k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val w = tfidfWeights(docs, idCol, textCol)
-    val win = Window.partitionBy("id").orderBy(col("w").desc, col("term").asc)
-    w.withColumn("rank", row_number().over(win).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("id"), col("rank"), col("term"), col("w"))
+    Skew.topK(tfidfWeights(docs, idCol, textCol), Seq(col("id")),
+        Seq(col("w").desc, col("term").asc), k)
+      .select(col("id"), col("__rank").cast("long").as("rank"), col("term"), col("w"))
   }
 
   /** Token-window chunking (long-document splitting for pretraining/RAG):
@@ -283,38 +272,23 @@ object TextOps {
     * ordering is what makes index construction survive a web corpus; a
     * production variant additionally shards the survivors' postings by
     * (term, doc_bucket), which composes with this plan unchanged.
-    * `maxDf <= 0` disables the guard (test scale only).
+    * The cap is required (`maxDf >= 1`).
     */
   def invertedIndex(docs: DataFrame, idCol: String, textCol: String,
                     maxDf: Int = 10000): DataFrame = {
+    require(maxDf >= 1, "maxDf must be >= 1")
     val tf = docs
       .select(col(idCol).as("doc"), explode(tokens(col(textCol))).as("term"))
       .where(col("term") =!= "")
       .groupBy("term", "doc").agg(count(lit(1)).as("tf"))
     val stats = tf.groupBy("term")
       .agg(count(lit(1)).cast("bigint").as("df"), sum("tf").cast("bigint").as("ttf"))
-    val kept = if (maxDf > 0) stats.where(col("df") <= maxDf) else stats
-    tf.join(kept, "term")
+    tf.join(stats.where(col("df") <= maxDf), "term")
       .groupBy("term", "df", "ttf")
       .agg(sort_array(collect_list(struct(col("doc"), col("tf")))).as("postings"))
       .select("term", "df", "ttf", "postings")
   }
 
-  /** Corpus-trained unigram language-model scoring — the proxy-perplexity
-    * quality signal of pretraining pipelines (CCNet/Gopher-style LM
-    * filtering, self-trained here so no external model is needed): per
-    * document, the mean natural-log probability of its tokens under the
-    * corpus's own unigram distribution p(t) = count(t) / total_tokens.
-    * Returns (id, n_tokens, mean_logprob); rare-token-heavy (low-quality
-    * or off-domain) documents score low, boilerplate scores high.
-    *
-    * Scale shape: one groupBy(term) over the token stream builds the
-    * count table, one token-keyed equi-join scores it — the vocabulary is
-    * high-cardinality at corpus scale, so the count table is NOT
-    * broadcast; only the 1-row grand total rides the plan as a broadcast
-    * cross join (job-free construction). Per-doc reduction is a map-side
-    * partial aggregate on the document key.
-    */
   /** Interpolated bigram LM scoring (the CCNet/KenLM-shaped upgrade of
     * [[unigramLogProb]]): per-doc mean of
     * ln( λ·c2(w1,w2)/c1(w1) + (1−λ)·c1(w2)/T ) over consecutive token
@@ -357,6 +331,21 @@ object TextOps {
         avg("lp").as("mean_logprob"))
   }
 
+  /** Corpus-trained unigram language-model scoring — the proxy-perplexity
+    * quality signal of pretraining pipelines (CCNet/Gopher-style LM
+    * filtering, self-trained here so no external model is needed): per
+    * document, the mean natural-log probability of its tokens under the
+    * corpus's own unigram distribution p(t) = count(t) / total_tokens.
+    * Returns (id, n_tokens, mean_logprob); rare-token-heavy (low-quality
+    * or off-domain) documents score low, boilerplate scores high.
+    *
+    * Scale shape: one groupBy(term) over the token stream builds the
+    * count table, one token-keyed equi-join scores it — the vocabulary is
+    * high-cardinality at corpus scale, so the count table is NOT
+    * broadcast; only the 1-row grand total rides the plan as a broadcast
+    * cross join (job-free construction). Per-doc reduction is a map-side
+    * partial aggregate on the document key.
+    */
   def unigramLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = docs
       .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("term"))

@@ -82,10 +82,6 @@ object AlgoQueries {
        |SELECT vertex, CAST(round(rank, 6) AS DOUBLE) AS rank FROM r$iters ORDER BY vertex""".stripMargin
   }
 
-  /** Unrolled k-core peel d1/e1..dR/eR (graft.algo.KCore.kCore): each
-    * round recomputes degrees over the surviving simple undirected edge
-    * set and keeps edges whose BOTH endpoints have degree >= k.
-    */
   /** k-truss unrolled `rounds` support-peel rounds (>= the fixpoint on
     * both fixtures; extra rounds are no-ops on both engines). Triangle
     * enumeration is the id-ordered a<b<c 3-way join — per-edge SUPPORT is
@@ -128,6 +124,10 @@ object AlgoQueries {
        |FROM e$rounds""".stripMargin
   }
 
+  /** Unrolled k-core peel d1/e1..dR/eR (graft.algo.KCore.kCore): each
+    * round recomputes degrees over the surviving simple undirected edge
+    * set and keeps edges whose BOTH endpoints have degree >= k.
+    */
   private def kcoreSql(k: Int, rounds: Int): String = {
     val steps = (1 to rounds).map { i =>
       s"""d$i AS MATERIALIZED (

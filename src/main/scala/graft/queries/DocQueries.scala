@@ -308,13 +308,10 @@ object DocQueries {
         sum(col("c") * col("c")).as("sum_bucket_sq"))
     }),
 
-    // IVF ANN (KMeans coarse quantizer): not SQL-expressible, so no oracle
-    // — the driver records the weaker rows-only check; IvfSpec-style
-    // recall/equivalence assertions live in OpsSpec
+    // IVF ANN over the deterministic seeded quantizer (the 8 smallest-id
+    // vectors are the centroids): it has an exact DuckDB twin, so the
+    // oracle replays it row for row
     "emb_ivf" -> ((s, dir) =>
-      // deterministic seeded quantizer: unlike the KMeans fit (ivfTopK,
-      // covered by OpsSpec equivalence + recall tests), this variant has an
-      // exact DuckDB twin, closing the r2 no_oracle gap
       Similarity.ivfSeededTopK(embs(s, dir), "vec_id", "embedding",
         col("vec_id") < 10, nCentroids = 8, nProbe = 3, k = 3)
         .orderBy("query_id", "rank")),

@@ -498,46 +498,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("ivf ann: probing all lists == brute force; exact dup found at nProbe 1") {
-    val embs = (0 until 60).map { i =>
-      val c = i % 3 // 3 well-separated clusters
-      (i.toLong, Array.tabulate(8)(d => (c * 10).toFloat + 0.1f * ((i + d) % 5)))
-    }.toDF("vec_id", "embedding")
-    val brute = Similarity.bruteForceTopK(embs, "vec_id", "embedding", $"vec_id" < 4, 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val full = Similarity.ivfTopK(embs, "vec_id", "embedding", $"vec_id" < 4,
-      nCentroids = 4, nProbe = 4, k = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(full == brute) // probing every list degrades to exact search
-    val dup = Seq((0L, Array.fill(8)(1.0f)), (1L, Array.fill(8)(1.0f)),
-      (2L, Array.fill(8)(-5.0f)), (3L, Array.fill(8)(-5.1f)))
-      .toDF("vec_id", "embedding")
-    val r = Similarity.ivfTopK(dup, "vec_id", "embedding", $"vec_id" === 0,
-      nCentroids = 2, nProbe = 1, k = 1).head()
-    assert(r.getLong(2) == 1L && r.getDouble(3) == 1.0) // same vector, same list
-  }
-
-  test("ivf sampled fit: full-probe == brute force, recall at nProbe 2 >= 0.6") {
-    val embs = (0 until 80).map { i =>
-      val c = i % 4
-      (i.toLong, Array.tabulate(8)(d => (c * 10).toFloat + 0.1f * ((i + d) % 5)))
-    }.toDF("vec_id", "embedding")
-    val brute = Similarity.bruteForceTopK(embs, "vec_id", "embedding", $"vec_id" < 8, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    // probing every list is exact regardless of quantizer quality — holds
-    // for the sampled fit too
-    val full = Similarity.ivfTopK(embs, "vec_id", "embedding", $"vec_id" < 8,
-      nCentroids = 4, nProbe = 4, k = 3, fitFraction = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(full == brute)
-    // sampled-fit recall vs brute force at nProbe 2 of 4
-    val approx = Similarity.ivfTopK(embs, "vec_id", "embedding", $"vec_id" < 8,
-      nCentroids = 4, nProbe = 2, k = 3, fitFraction = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = (approx & brute).size.toDouble / brute.size
-    assert(recall >= 0.6, s"recall=$recall")
-  }
-
   test("ivf seeded quantizer: full-probe == brute force; map-only assignment finds dup") {
     val embs = (0 until 60).map { i =>
       val c = i % 3
@@ -708,7 +668,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("inverted index: postings sorted by doc, stop-term guard binds pre-collect") {
     val d = Seq((1L, "a b a"), (2L, "b c"), (3L, "a")).toDF("doc_id", "text")
-    val idx = TextOps.invertedIndex(d, "doc_id", "text", maxDf = 0).collect()
+    val idx = TextOps.invertedIndex(d, "doc_id", "text", maxDf = 2).collect()
       .map { r =>
         val posts = r.getSeq[org.apache.spark.sql.Row](3)
           .map(p => (p.getLong(0), p.getLong(1)))
@@ -794,5 +754,31 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(got(2L)._2 - (lp04 + lp02) / 2.0) < 1e-12)
     // rare-token documents score strictly lower than boilerplate
     assert(got(2L)._2 < got(1L)._2)
+  }
+
+  test("ops/ holds one per-group top-k, one seeded quantizer, one sampler draw, no MLlib IVF") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/ops")
+    val files = Files.list(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8")).toMap
+    assert(files.contains("Skew.scala"), root.toAbsolutePath)
+    val code = files.map { case (f, src) =>
+      f -> src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    }
+    def count(in: Map[String, String], re: String): Map[String, Int] = in.map { case (f, src) =>
+      f -> re.r.findAllIn(src).size
+    }.filter(_._2 > 0)
+
+    // the top-k helper, and the rank-as-position uses of BPE training and
+    // the prefix filter
+    assert(count(code, """row_number\(\)""") ==
+      Map("Skew.scala" -> 1, "BpeTrain.scala" -> 2, "SimJoin.scala" -> 1))
+    for (gone <- Seq("ivfTopK", """org\.apache\.spark\.ml\.clustering"""))
+      assert(count(files, gone).isEmpty, s"$gone in ${count(files, gone).keys.mkString(", ")}")
+    assert(count(code, """def centDist""") == Map("Similarity.scala" -> 1))
+    assert(count(code, """orderBy\("id"\)\.limit\(""") == Map("Similarity.scala" -> 1))
+    assert(count(code, """portableHash31\(\s*concat\(lit\(salt\)""") ==
+      Map("Curation.scala" -> 1))
   }
 }
